@@ -1,22 +1,32 @@
 package graft.gold
 
-import org.apache.spark.sql.DataFrame
+import java.sql.Date
+
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-/** Full gold-layer rebuild — the engine's answer to the reference's
+/** Gold-layer refresh — the engine's answer to the reference's
   * `POST /api/internal/refresh_aggregates` (`dashboard_app/app.py:5849-5896`),
   * which refreshes six materialized views synchronously inside one advisory-
-  * lock section (negative_summary_mv refreshes on the ingest path). Spark
-  * needs no lock: each gold table is rebuilt as a DataFrame and written with
-  * dynamic partition overwrite, so readers keep a consistent snapshot and
-  * only affected date partitions are replaced.
+  * lock section (negative_summary_mv refreshes on the ingest path). Each gold
+  * table is rebuilt as a DataFrame and written `partitionBy("date")` with
+  * dynamic partition overwrite, so only the date partitions present in the
+  * rebuilt frame are replaced. The override refresh ([[OverrideRefresh]]) is
+  * this same refresh over fewer tables and date-restricted inputs.
+  *
+  * Concurrent writers of distinct date partitions are safe: the overwrite
+  * mode is a per-write option, not session state. Concurrent READERS are
+  * not: the overwrite deletes a partition's files before moving the new ones
+  * in, so a read that listed the old files fails with
+  * `FAILED_READ_FILE.FILE_NOT_EXIST`. Readers get no snapshot yet.
   *
   * Rebuild order follows the reference's refresh sequence. The four
   * serp-feature MVs all derive from the same effective-items projection
-  * (override coalesce chains applied at item grain); it is computed ONCE and
-  * persisted for the batch — Spark shares no subplans across builders, and
-  * at 100 TB recomputing the override-join four times is the difference
-  * between one shuffle and four.
+  * (override coalesce chains applied at item grain); a refresh computes it
+  * ONCE and persists it for the batch — Spark shares no subplans across
+  * builders, and at 100 TB recomputing the override-join four times is the
+  * difference between one shuffle and four.
   */
 object GoldRefresh {
 
@@ -36,62 +46,75 @@ object GoldRefresh {
       serpResultOverrides: DataFrame,
       serpFeatureItems: DataFrame,
       serpFeatureItemOverrides: DataFrame,
-      serpFeatureUrlOverrides: DataFrame)
+      serpFeatureUrlOverrides: DataFrame) {
 
-  /** All 7 gold tables in the reference's refresh order. The returned pairs
-    * are (table name, DataFrame); callers write them with
-    * `partitionBy("date")` + dynamic partition overwrite. */
-  def rebuildAll(in: BronzeInputs): Seq[(String, DataFrame)] =
-    rebuildAllWithHandle(in)._1
-
-  /** rebuildAll plus the persisted shared intermediate, so callers that
-    * materialize everything (refreshToParquet) can unpersist it after. */
-  def rebuildAllWithHandle(in: BronzeInputs): (Seq[(String, DataFrame)], DataFrame) = {
-    val eff = GoldTables.featureItemsEffective(
-      in.serpFeatureItems, in.serpFeatureItemOverrides, in.serpFeatureUrlOverrides)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val tables = Seq(
-      "serp_feature_daily" ->
-        GoldTables.serpFeatureDailyFromEffective(eff),
-      "serp_feature_control_daily" ->
-        GoldTables.serpFeatureControlDailyFromEffective(eff),
-      "serp_feature_daily_index" ->
-        GoldTables.serpFeatureDailyIndexFromEffective(eff),
-      "serp_feature_control_daily_index" ->
-        GoldTables.serpFeatureControlDailyIndexFromEffective(eff),
-      "article_daily_counts" ->
-        GoldTables.articleDailyCounts(in.companyMentionsDaily, in.ceoMentionsDaily,
-          in.companies, in.ceos, in.companyArticleOverrides, in.ceoArticleOverrides),
-      "serp_daily_counts" ->
-        GoldTables.serpDailyCounts(in.serpRuns, in.serpResults,
-          in.serpResultOverrides, in.companies, in.ceos),
-      "negative_summary" ->
-        GoldTables.negativeSummary(in.companyMentionsDaily, in.ceoMentionsDaily,
-          in.companyMentions, in.ceoMentions, in.companies, in.ceos, in.articles,
-          in.companyArticleOverrides, in.ceoArticleOverrides))
-    (tables, eff)
+    /** These inputs with the date-grained tables restricted to `dates`, so
+      * every builder emits exactly those date partitions. Dimensions,
+      * overrides and mention-grain tables stay whole: the builders join them
+      * to the restricted facts. */
+    def on(dates: Seq[Date]): BronzeInputs = {
+      def touched(c: Column) = c.isin(dates.map(lit): _*)
+      copy(
+        companyMentionsDaily = companyMentionsDaily.filter(touched(col("date"))),
+        ceoMentionsDaily = ceoMentionsDaily.filter(touched(col("date"))),
+        serpRuns = serpRuns.filter(touched(to_date(col("run_at")))),
+        serpFeatureItems = serpFeatureItems.filter(touched(col("date"))))
+    }
   }
 
-  /** Rebuild and write every gold table under `base/<name>` partitioned by
-    * date with dynamic partition overwrite (the incremental analogue of the
-    * reference's whole-MV refresh). Returns per-table wall times. */
-  def refreshToParquet(in: BronzeInputs, base: String): Seq[(String, Double)] = {
-    val (tables, eff) = rebuildAllWithHandle(in)
-    val spark = tables.head._2.sparkSession
-    val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try
-      tables.map { case (name, df) =>
+  /** The 7 gold tables in the reference's refresh order, each built from the
+    * inputs and the effective-items projection. */
+  private val Tables: Seq[(String, (BronzeInputs, DataFrame) => DataFrame)] = Seq(
+    "serp_feature_daily" ->
+      ((_, eff) => GoldTables.serpFeatureSentiment(eff, GoldTables.EntityGrain)),
+    "serp_feature_control_daily" ->
+      ((_, eff) => GoldTables.serpFeatureControl(eff, GoldTables.EntityGrain)),
+    "serp_feature_daily_index" ->
+      ((_, eff) => GoldTables.serpFeatureSentiment(eff, GoldTables.IndexGrain)),
+    "serp_feature_control_daily_index" ->
+      ((_, eff) => GoldTables.serpFeatureControl(eff, GoldTables.IndexGrain)),
+    "article_daily_counts" ->
+      ((in, _) => GoldTables.articleDailyCounts(in.companyMentionsDaily, in.ceoMentionsDaily,
+        in.companies, in.ceos, in.companyArticleOverrides, in.ceoArticleOverrides)),
+    "serp_daily_counts" ->
+      ((in, _) => GoldTables.serpDailyCounts(in.serpRuns, in.serpResults,
+        in.serpResultOverrides, in.companies, in.ceos)),
+    "negative_summary" ->
+      ((in, _) => GoldTables.negativeSummary(in.companyMentionsDaily, in.ceoMentionsDaily,
+        in.companyMentions, in.ceoMentions, in.companies, in.ceos, in.articles,
+        in.companyArticleOverrides, in.ceoArticleOverrides)))
+
+  private def effective(in: BronzeInputs): DataFrame = GoldTables.featureItemsEffective(
+    in.serpFeatureItems, in.serpFeatureItemOverrides, in.serpFeatureUrlOverrides)
+
+  /** All 7 gold tables in the reference's refresh order as (table name,
+    * DataFrame), with nothing persisted. */
+  def rebuildAll(in: BronzeInputs): Seq[(String, DataFrame)] = {
+    val eff = effective(in)
+    Tables.map { case (name, build) => name -> build(in, eff) }
+  }
+
+  /** Rebuild and write every gold table under `base/<name>`. Returns
+    * per-table wall times in refresh order. */
+  def refreshToParquet(in: BronzeInputs, base: String): Seq[(String, Double)] =
+    refresh(in, base, Tables.map(_._1))
+
+  /** Rebuild the tables `names` from `in` and write each under `base/<name>`
+    * partitioned by date with dynamic partition overwrite. Returns per-table
+    * wall times in the order of `names`. */
+  private[gold] def refresh(
+      in: BronzeInputs, base: String, names: Seq[String]): Seq[(String, Double)] = {
+    val eff = effective(in).persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val builders = Tables.toMap
+      names.map { name =>
+        val df = builders(name)(in, eff)
         val t0 = System.nanoTime()
-        df.write.mode("overwrite").partitionBy("date").parquet(s"$base/$name")
+        df.write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("date").parquet(s"$base/$name")
         name -> (System.nanoTime() - t0) / 1e9
       }
-    finally {
-      eff.unpersist() // the shared intermediate must not outlive the refresh
-      prevMode match {
-        case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+    } finally eff.unpersist() // the shared intermediate must not outlive the refresh
   }
 }

@@ -169,64 +169,32 @@ object GoldTables {
         coalesce(col("ov_ctl"), col("uov_ctl"), col("llm_control_class"),
           col("control_class")))
 
-  /** `serp_feature_daily_mv` (`sql/serp_feature_daily_mv.sql:1-14`). */
-  def serpFeatureDaily(items: DataFrame, itemOverrides: DataFrame,
-      urlOverrides: DataFrame): DataFrame =
-    serpFeatureDailyFromEffective(featureItemsEffective(items, itemOverrides, urlOverrides))
+  /** Group keys of the serp-feature MVs: the entity grain of
+    * `serp_feature_daily_mv` / `serp_feature_control_daily_mv`, and the
+    * "Index" grain of the `_index` twins, which drops the entity dimension
+    * (`sql/serp_feature_daily_index_mv.sql:1-12`). */
+  val EntityGrain: Seq[String] =
+    Seq("date", "entity_type", "entity_id", "entity_name", "feature_type")
+  val IndexGrain: Seq[String] = Seq("date", "entity_type", "feature_type")
 
-  /** Aggregate stage over an already-computed effective-items DF — the
-    * batch-rebuild path ([[GoldRefresh]]) computes featureItemsEffective
-    * ONCE, persists it, and derives all four serp-feature MVs from it
-    * (Spark shares no subplans across separate builders). */
-  def serpFeatureDailyFromEffective(eff: DataFrame): DataFrame =
+  /** Sentiment histogram of `serp_feature_daily_mv`
+    * (`sql/serp_feature_daily_mv.sql:1-14`) at `grain`, over the
+    * [[featureItemsEffective]] projection. */
+  def serpFeatureSentiment(eff: DataFrame, grain: Seq[String]): DataFrame =
     eff
-      .groupBy(col("date"), col("entity_type"), col("entity_id"), col("entity_name"),
-        col("feature_type"))
+      .groupBy(grain.map(col): _*)
       .agg(
         count(lit(1)).as("total_count"),
         countIf(col("eff_sentiment") === "positive").as("positive_count"),
         countIf(col("eff_sentiment") === "neutral").as("neutral_count"),
         countIf(col("eff_sentiment") === "negative").as("negative_count"))
 
-  /** `serp_feature_control_daily_mv` (`sql/serp_feature_control_daily_mv.sql:1-18`). */
-  def serpFeatureControlDaily(items: DataFrame, itemOverrides: DataFrame,
-      urlOverrides: DataFrame): DataFrame =
-    serpFeatureControlDailyFromEffective(
-      featureItemsEffective(items, itemOverrides, urlOverrides))
-
-  def serpFeatureControlDailyFromEffective(eff: DataFrame): DataFrame =
+  /** Control count of `serp_feature_control_daily_mv`
+    * (`sql/serp_feature_control_daily_mv.sql:1-18`) at `grain`, over the
+    * [[featureItemsEffective]] projection. */
+  def serpFeatureControl(eff: DataFrame, grain: Seq[String]): DataFrame =
     eff
-      .groupBy(col("date"), col("entity_type"), col("entity_id"), col("entity_name"),
-        col("feature_type"))
-      .agg(
-        countIf(col("eff_control").isNotNull).as("total_count"),
-        countIf(col("eff_control") === "controlled").as("controlled_count"))
-
-  /** `serp_feature_daily_index_mv` (`sql/serp_feature_daily_index_mv.sql:1-12`):
-    * the entity dimension dropped — the "Index" grain. */
-  def serpFeatureDailyIndex(items: DataFrame, itemOverrides: DataFrame,
-      urlOverrides: DataFrame): DataFrame =
-    serpFeatureDailyIndexFromEffective(
-      featureItemsEffective(items, itemOverrides, urlOverrides))
-
-  def serpFeatureDailyIndexFromEffective(eff: DataFrame): DataFrame =
-    eff
-      .groupBy(col("date"), col("entity_type"), col("feature_type"))
-      .agg(
-        count(lit(1)).as("total_count"),
-        countIf(col("eff_sentiment") === "positive").as("positive_count"),
-        countIf(col("eff_sentiment") === "neutral").as("neutral_count"),
-        countIf(col("eff_sentiment") === "negative").as("negative_count"))
-
-  /** `serp_feature_control_daily_index_mv`. */
-  def serpFeatureControlDailyIndex(items: DataFrame, itemOverrides: DataFrame,
-      urlOverrides: DataFrame): DataFrame =
-    serpFeatureControlDailyIndexFromEffective(
-      featureItemsEffective(items, itemOverrides, urlOverrides))
-
-  def serpFeatureControlDailyIndexFromEffective(eff: DataFrame): DataFrame =
-    eff
-      .groupBy(col("date"), col("entity_type"), col("feature_type"))
+      .groupBy(grain.map(col): _*)
       .agg(
         countIf(col("eff_control").isNotNull).as("total_count"),
         countIf(col("eff_control") === "controlled").as("controlled_count"))

@@ -2,10 +2,6 @@ package graft.gold
 
 import java.sql.Date
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
-
 /** Incremental override-refresh orchestration — the engine's answer to the
   * reference's `_refresh_after_override` (`dashboard_app/app.py:6106-6213`):
   * after an override write, only the gold tables DOWNSTREAM of the touched
@@ -13,11 +9,13 @@ import org.apache.spark.storage.StorageLevel
   *
   * The reference re-runs each affected materialized view in full under an
   * advisory lock (Postgres REFRESH has no partition grain) and queues a
-  * follow-up full refresh when the lock is busy. Spark's dynamic partition
-  * overwrite gives the stronger primitive: rebuild the affected tables from
-  * bronze FILTERED to the touched dates and write `partitionBy(date)` in
-  * dynamic mode — untouched date partitions' files are never rewritten, no
-  * lock needed (writers replace partitions atomically per table).
+  * follow-up full refresh when the lock is busy. Here the override refresh
+  * is the full refresh ([[GoldRefresh]]) over the affected tables and over
+  * bronze restricted to the touched dates: its dynamic partition overwrite
+  * replaces exactly those date partitions and never rewrites the others'
+  * files. Writers need no lock, but readers are not isolated: a read that
+  * lists a partition while it is being replaced can fail with
+  * `FAILED_READ_FILE.FILE_NOT_EXIST` (see [[GoldRefresh]]).
   *
   * Faithfulness note: for article overrides the reference refreshes only
   * `article_daily_counts_mv` and clears the negative-summary CACHE — the
@@ -35,76 +33,20 @@ object OverrideRefresh {
       "serp_feature_daily_index", "serp_feature_control_daily_index"),
     "serp_result" -> Seq("serp_daily_counts"))
 
-  /** Rebuild ONLY the tables downstream of `mentionType`, over bronze
-    * filtered to `dates` — the (entity x date-range) contract resolved to
-    * Spark's natural partition grain (a date partition holds every entity,
-    * so the overridden entity's peers in that partition are recomputed too,
-    * which is free: the aggregation input is the same filtered scan).
-    * Returns (table name, DataFrame at touched-date grain). */
-  def incrementalTables(
-      in: GoldRefresh.BronzeInputs,
-      mentionType: String,
-      dates: Seq[Date]): Seq[(String, DataFrame)] = {
-    val affected = Dependencies.getOrElse(mentionType,
-      throw new IllegalArgumentException(s"unknown mention_type: $mentionType"))
-    val dateLits = dates.map(d => lit(d))
-    def touched(c: org.apache.spark.sql.Column) = c.isin(dateLits: _*)
-
-    affected.map {
-      case n @ ("serp_feature_daily" | "serp_feature_control_daily" |
-                "serp_feature_daily_index" | "serp_feature_control_daily_index") =>
-        // one shared effective-items projection per call set would need a
-        // persist; at incremental grain (a handful of dates) the scan is
-        // pruned to the touched partitions, so per-table recompute is cheap
-        val items = in.serpFeatureItems.filter(touched(col("date")))
-        val eff = GoldTables.featureItemsEffective(
-          items, in.serpFeatureItemOverrides, in.serpFeatureUrlOverrides)
-        n -> (n match {
-          case "serp_feature_daily" => GoldTables.serpFeatureDailyFromEffective(eff)
-          case "serp_feature_control_daily" =>
-            GoldTables.serpFeatureControlDailyFromEffective(eff)
-          case "serp_feature_daily_index" =>
-            GoldTables.serpFeatureDailyIndexFromEffective(eff)
-          case _ => GoldTables.serpFeatureControlDailyIndexFromEffective(eff)
-        })
-      case "article_daily_counts" =>
-        "article_daily_counts" -> GoldTables.articleDailyCounts(
-          in.companyMentionsDaily.filter(touched(col("date"))),
-          in.ceoMentionsDaily.filter(touched(col("date"))),
-          in.companies, in.ceos,
-          in.companyArticleOverrides, in.ceoArticleOverrides)
-      case "serp_daily_counts" =>
-        "serp_daily_counts" -> GoldTables.serpDailyCounts(
-          in.serpRuns.filter(touched(to_date(col("run_at")))),
-          in.serpResults, in.serpResultOverrides, in.companies, in.ceos)
-      case other =>
-        throw new IllegalStateException(s"no incremental builder for $other")
-    }
-  }
-
-  /** Recompute the affected tables' touched date partitions in place under
-    * `base/<name>` (same layout as [[GoldRefresh.refreshToParquet]]).
-    * Dynamic partition overwrite replaces exactly the partitions present in
-    * the written frames; every other partition's files are left untouched.
-    * Returns per-table wall times. */
+  /** Recompute the tables downstream of `mentionType` for the touched
+    * `dates` in place under `base/<name>` (same layout as
+    * [[GoldRefresh.refreshToParquet]]) — the (entity x date-range) contract
+    * resolved to Spark's natural partition grain: a date partition holds
+    * every entity, so the overridden entity's peers in that partition are
+    * recomputed too, from the same pruned scan. Returns per-table wall times
+    * in [[Dependencies]] order. */
   def refreshAfterOverride(
       in: GoldRefresh.BronzeInputs,
       base: String,
       mentionType: String,
       dates: Seq[Date]): Seq[(String, Double)] = {
-    val tables = incrementalTables(in, mentionType, dates)
-    val spark = tables.head._2.sparkSession
-    val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try
-      tables.map { case (name, df) =>
-        val t0 = System.nanoTime()
-        df.write.mode("overwrite").partitionBy("date").parquet(s"$base/$name")
-        name -> (System.nanoTime() - t0) / 1e9
-      }
-    finally prevMode match {
-      case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    val affected = Dependencies.getOrElse(mentionType,
+      throw new IllegalArgumentException(s"unknown mention_type: $mentionType"))
+    GoldRefresh.refresh(in.on(dates), base, affected)
   }
 }

@@ -118,7 +118,6 @@ object Scd2 {
       tsCol: String,
       stateCols: Seq[String],
       nBuckets: Int = 64): Unit = {
-    val spark = changeLog.sparkSession
     val b = bucketOf(keys, nBuckets)
     val touchedB = newChanges.select(b.as("__bucket")).distinct()
     val prunedLog = changeLog.withColumn("__bucket", b)
@@ -126,12 +125,7 @@ object Scd2 {
       .drop("__bucket")
     val rebuilt = buildIntervals(prunedLog, keys, tsCol, stateCols)
       .withColumn("__bucket", b)
-    val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try rebuilt.write.mode("overwrite").partitionBy("__bucket").parquet(path)
-    finally prevMode match {
-      case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    rebuilt.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("__bucket").parquet(path)
   }
 }

@@ -72,9 +72,7 @@ object DailyIngestStream {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        batch.write.mode("overwrite")
+        batch.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
           .partitionBy("date")
           .parquet(goldPath)
       }

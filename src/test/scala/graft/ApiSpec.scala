@@ -30,13 +30,15 @@ class ApiSpec extends SparkSpec {
   private lazy val sfuo = fixture("serp_feature_url_overrides", Schemas.serpFeatureUrlOverrides)
 
   private lazy val articleMv = GoldTables.articleDailyCounts(camd, ceamd, companies, ceos, cao, ceao)
-  private lazy val featureMv = GoldTables.serpFeatureDaily(sfi, sfio, sfuo)
+  private lazy val eff = GoldTables.featureItemsEffective(sfi, sfio, sfuo)
+  private lazy val featureMv = GoldTables.serpFeatureSentiment(eff, GoldTables.EntityGrain)
   private lazy val edm = EntityDailyMetrics.build(
     articleMv,
     GoldTables.serpDailyCounts(serpRuns, serpResults, sro, companies, ceos),
     EntityDailyMetrics.articleCrisis(camd, ceamd, cam, ceam, ceos),
     EntityDailyMetrics.topStoriesSentiment(featureMv, companies, ceos),
-    EntityDailyMetrics.topStoriesControl(GoldTables.serpFeatureControlDaily(sfi, sfio, sfuo)))
+    EntityDailyMetrics.topStoriesControl(
+      GoldTables.serpFeatureControl(eff, GoldTables.EntityGrain)))
 
   test("dailyCounts: brand aliasing, scope filter, (date, company) order") {
     // days clamps to SeriesMaxDays (365) per the reference guardrail, so

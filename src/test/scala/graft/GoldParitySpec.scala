@@ -88,8 +88,9 @@ class GoldParitySpec extends SparkSpec {
 
   private lazy val articleMv = GoldTables.articleDailyCounts(camd, ceamd, companies, ceos, cao, ceao)
   private lazy val serpMv = GoldTables.serpDailyCounts(serpRuns, serpResults, sro, companies, ceos)
-  private lazy val featureMv = GoldTables.serpFeatureDaily(sfi, sfio, sfuo)
-  private lazy val featureControlMv = GoldTables.serpFeatureControlDaily(sfi, sfio, sfuo)
+  private lazy val eff = GoldTables.featureItemsEffective(sfi, sfio, sfuo)
+  private lazy val featureMv = GoldTables.serpFeatureSentiment(eff, GoldTables.EntityGrain)
+  private lazy val featureControlMv = GoldTables.serpFeatureControl(eff, GoldTables.EntityGrain)
 
   test("article_daily_counts_mv parity") { assertParity("article_daily_counts_mv", articleMv) }
   test("serp_daily_counts_mv parity") { assertParity("serp_daily_counts_mv", serpMv) }
@@ -98,11 +99,12 @@ class GoldParitySpec extends SparkSpec {
     assertParity("serp_feature_control_daily_mv", featureControlMv)
   }
   test("serp_feature_daily_index_mv parity") {
-    assertParity("serp_feature_daily_index_mv", GoldTables.serpFeatureDailyIndex(sfi, sfio, sfuo))
+    assertParity("serp_feature_daily_index_mv",
+      GoldTables.serpFeatureSentiment(eff, GoldTables.IndexGrain))
   }
   test("serp_feature_control_daily_index_mv parity") {
     assertParity("serp_feature_control_daily_index_mv",
-      GoldTables.serpFeatureControlDailyIndex(sfi, sfio, sfuo))
+      GoldTables.serpFeatureControl(eff, GoldTables.IndexGrain))
   }
   test("negative_articles_summary_mv parity") {
     assertParity("negative_articles_summary_mv",

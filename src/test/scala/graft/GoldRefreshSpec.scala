@@ -1,14 +1,22 @@
 package graft
 
 import java.nio.file.Files
+import java.sql.Date
+import java.util.concurrent.{Callable, Executors}
 
-import graft.gold.{GoldRefresh, GoldTables, Schemas}
-import org.apache.spark.sql.DataFrame
+import graft.gold.{GoldRefresh, GoldTables, OverrideRefresh, Schemas}
+import graft.gold.GoldRefresh.BronzeInputs
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
-/** Full gold-layer rebuild: all 7 MVs from one orchestrated pass (shared
-  * persisted effective-items intermediate), written with dynamic partition
-  * overwrite, equal to the individually-built (parity-proven) tables. */
+/** The gold refresh path: all 7 MVs written with dynamic partition
+  * overwrite, and the override refresh as the same path over the affected
+  * tables and the touched dates. Parity of each builder with the reference
+  * SQL is GoldParitySpec's job; here the written tables must equal a full
+  * rebuild, touch only what they should, and leave the session's cache as
+  * they found it. */
 class GoldRefreshSpec extends SparkSpec {
 
   private def fixture(name: String, schema: StructType): DataFrame =
@@ -16,7 +24,7 @@ class GoldRefreshSpec extends SparkSpec {
       .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
       .json(getClass.getResource(s"/fixtures/$name.jsonl").getPath)
 
-  private lazy val in = GoldRefresh.BronzeInputs(
+  private lazy val in = BronzeInputs(
     companies = fixture("companies", Schemas.companies),
     ceos = fixture("ceos", Schemas.ceos),
     articles = fixture("articles", Schemas.articles),
@@ -37,94 +45,175 @@ class GoldRefreshSpec extends SparkSpec {
     serpFeatureUrlOverrides =
       fixture("serp_feature_url_overrides", Schemas.serpFeatureUrlOverrides))
 
+  private val allTables = Seq(
+    "serp_feature_daily", "serp_feature_control_daily", "serp_feature_daily_index",
+    "serp_feature_control_daily_index", "article_daily_counts", "serp_daily_counts",
+    "negative_summary")
+
   private def canon(df: DataFrame): Seq[String] = {
     val cols = df.columns.sorted.toSeq
     df.selectExpr(cols: _*).collect().map(_.toString).sorted.toSeq
   }
 
-  test("rebuildAll emits all 7 gold tables, equal to the direct builders") {
-    val rebuilt = GoldRefresh.rebuildAll(in).toMap
-    assert(rebuilt.keySet == Set(
-      "serp_feature_daily", "serp_feature_control_daily", "serp_feature_daily_index",
-      "serp_feature_control_daily_index", "article_daily_counts", "serp_daily_counts",
-      "negative_summary"))
-    rebuilt.values.foreach(df => assert(df.count() > 0))
-    // the shared-intermediate path must equal the standalone builders
-    assert(canon(rebuilt("serp_feature_daily")) == canon(GoldTables.serpFeatureDaily(
-      in.serpFeatureItems, in.serpFeatureItemOverrides, in.serpFeatureUrlOverrides)))
-    assert(canon(rebuilt("serp_feature_control_daily_index")) ==
-      canon(GoldTables.serpFeatureControlDailyIndex(
-        in.serpFeatureItems, in.serpFeatureItemOverrides, in.serpFeatureUrlOverrides)))
+  private def read(base: String, table: String): Seq[String] =
+    canon(spark.read.parquet(s"$base/$table"))
+
+  /** parquet file path -> mtime under `base/<table>` */
+  private def fileStates(base: String, table: String): Map[String, Long] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    walk(new java.io.File(s"$base/$table")).filter(_.getName.endsWith(".parquet"))
+      .map(f => f.getPath -> f.lastModified()).toMap
+  }
+
+  private def datePartitions(base: String, table: String): Set[String] =
+    new java.io.File(s"$base/$table").list().filter(_.startsWith("date=")).toSet
+
+  /** Runs `body` and asserts that it left the session's cache as it found
+    * it: no materialized cache added or dropped, and no cached plan left
+    * behind for the effective-items projection of any of `seen`. */
+  private def cacheUnchanged[T](seen: BronzeInputs*)(body: => T): T = {
+    def eff(i: BronzeInputs) = GoldTables.featureItemsEffective(
+      i.serpFeatureItems, i.serpFeatureItemOverrides, i.serpFeatureUrlOverrides)
+    def state = (spark.sparkContext.getPersistentRDDs.keySet,
+      seen.map(i => eff(i).storageLevel != StorageLevel.NONE))
+    val before = state
+    val out = body
+    assert(state == before, "the refresh changed the session's cache")
+    out
+  }
+
+  /** `from` plus a "negative" sentiment override of the first fact row of
+    * `mentionType` that is labelled positive (LLM label first), has no
+    * override yet and lies on a date outside `taken`; returns the edited
+    * inputs and that date. */
+  private def edit(from: BronzeInputs, mentionType: String, taken: Set[Date])
+      : (BronzeInputs, Date) = {
+    val runDates = from.serpRuns.select(col("id").as("serp_run_id"),
+      to_date(col("run_at")).as("date"))
+    val (facts, overrides, set) = mentionType match {
+      case "company_article" => (
+        from.companyMentionsDaily.select(col("date"), col("company_id"), col("article_id"),
+          col("sentiment_label").as("label")),
+        from.companyArticleOverrides,
+        (i: BronzeInputs, o: DataFrame) => i.copy(companyArticleOverrides = o))
+      case "ceo_article" => (
+        from.ceoMentionsDaily.select(col("date"), col("ceo_id"), col("article_id"),
+          col("sentiment_label").as("label")),
+        from.ceoArticleOverrides,
+        (i: BronzeInputs, o: DataFrame) => i.copy(ceoArticleOverrides = o))
+      case "serp_feature_item" => (
+        from.serpFeatureItems.select(col("date"), col("id").as("serp_feature_item_id"),
+          coalesce(col("llm_sentiment_label"), col("sentiment_label")).as("label")),
+        from.serpFeatureItemOverrides,
+        (i: BronzeInputs, o: DataFrame) => i.copy(serpFeatureItemOverrides = o))
+      case "serp_result" => (
+        from.serpResults.join(runDates, "serp_run_id").select(col("date"),
+          col("id").as("serp_result_id"),
+          coalesce(col("llm_sentiment_label"), col("sentiment_label")).as("label")),
+        from.serpResultOverrides,
+        (i: BronzeInputs, o: DataFrame) => i.copy(serpResultOverrides = o))
+    }
+    val keys = facts.columns.filterNot(Set("date", "label")).toSeq
+    val row = facts.filter(col("label") === "positive")
+      .filter(!col("date").isin(taken.toSeq.map(lit): _*))
+      .join(overrides.select(keys.map(col): _*), keys, "left_anti")
+      .orderBy(("date" +: keys).map(col): _*).first()
+    val key = keys.map(k => k -> row.getAs[String](k)).toMap
+    val ov = spark.createDataFrame(java.util.List.of(Row.fromSeq(
+      overrides.schema.fieldNames.toSeq.map(n =>
+        key.getOrElse(n, if (n == "override_sentiment_label") "negative" else null)))),
+      overrides.schema)
+    (set(from, overrides.unionByName(ov)), row.getAs[Date]("date"))
+  }
+
+  test("rebuildAll emits all 7 gold tables, caching nothing") {
+    val rebuilt = cacheUnchanged(in) {
+      val r = GoldRefresh.rebuildAll(in)
+      r.foreach { case (_, df) => assert(df.count() > 0) }
+      r
+    }
+    assert(rebuilt.map(_._1) == allTables)
   }
 
   test("refreshToParquet writes date-partitioned tables readable back intact") {
     val base = Files.createTempDirectory("graft-gold").toString
-    val times = GoldRefresh.refreshToParquet(in, base)
-    assert(times.map(_._1).toSet.size == 7)
+    val times = cacheUnchanged(in)(GoldRefresh.refreshToParquet(in, base))
+    assert(times.map(_._1) == allTables)
     val back = spark.read.parquet(s"$base/article_daily_counts")
     assert(back.columns.contains("date")) // partition column restored
     assert(canon(back) == canon(GoldRefresh.rebuildAll(in).toMap.apply("article_daily_counts")))
   }
 
   test("override refresh: incremental == full rebuild, untouched partitions' files unmodified") {
-    import org.apache.spark.sql.functions._
-    import graft.gold.OverrideRefresh
-
     val base = Files.createTempDirectory("graft-ovr").toString
     GoldRefresh.refreshToParquet(in, base)
 
-    // pick a real item to override: flip its sentiment on its date
-    val item = in.serpFeatureItems
-      .select(col("id"), col("date")).orderBy("id").limit(1).collect()(0)
-    val itemId = item.getString(0)
-    val touchedDate = item.getDate(1)
-    val newOverride = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row.fromSeq(
-        Schemas.serpFeatureItemOverrides.fields.map(_.name).map {
-          case "serp_feature_item_id" => itemId
-          case "override_sentiment_label" => "negative"
-          case _ => null
-        }.toSeq))),
-      Schemas.serpFeatureItemOverrides)
-    val withOverride = in.copy(serpFeatureItemOverrides =
-      in.serpFeatureItemOverrides
-        .filter(col("serp_feature_item_id") =!= itemId)
-        .unionByName(newOverride))
+    // one analyst edit per mention type, each on its own date, applied in
+    // turn to the same gold directory
+    var edited = in
+    var taken = Set.empty[Date]
+    for (m <- OverrideRefresh.Dependencies.keys.toSeq.sorted) {
+      val (next, date) = edit(edited, m, taken)
+      edited = next
+      taken += date
+      val affected = OverrideRefresh.Dependencies(m)
+      val files = allTables.map(t => t -> fileStates(base, t)).toMap
+      val rows = affected.map(t => t -> read(base, t)).toMap
 
-    // snapshot file states of an affected table before the incremental pass
-    def fileStates(table: String): Map[String, Long] = {
-      val dir = new java.io.File(s"$base/$table")
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(dir).filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getPath -> f.lastModified()).toMap
+      val times = cacheUnchanged(edited, edited.on(Seq(date)))(
+        OverrideRefresh.refreshAfterOverride(edited, base, m, Seq(date)))
+      assert(times.map(_._1) == affected)
+
+      val full = GoldRefresh.rebuildAll(edited).toMap
+      val touched = s"date=$date"
+      for (t <- affected) {
+        assert(read(base, t) == canon(full(t)), s"$m: $t diverged from a full rebuild")
+        // untouched DATE partitions: files unmodified; the touched one rewritten
+        val after = fileStates(base, t)
+        files(t).filterNot(_._1.contains(touched)).foreach { case (path, mtime) =>
+          assert(after.get(path).contains(mtime), s"$m: untouched partition file rewritten: $path")
+        }
+        assert(after.keySet.filter(_.contains(touched)) !=
+          files(t).keySet.filter(_.contains(touched)), s"$m: $t/$touched must be rewritten")
+      }
+      assert(affected.exists(t => read(base, t) != rows(t)), s"$m: the edit changed nothing")
+      for (t <- allTables.diff(affected))
+        assert(fileStates(base, t) == files(t), s"$t is not downstream of $m but was rewritten")
     }
-    val before = fileStates("serp_feature_daily")
-    val beforeArticle = fileStates("article_daily_counts")
+  }
 
-    val times = OverrideRefresh.refreshAfterOverride(
-      withOverride, base, "serp_feature_item", Seq(touchedDate))
-    assert(times.map(_._1) == OverrideRefresh.Dependencies("serp_feature_item"))
+  test("concurrent override refreshes on distinct dates keep every partition") {
+    val base = Files.createTempDirectory("graft-ovr-par").toString
+    GoldRefresh.refreshToParquet(in, base)
+    val partitions = allTables.map(t => t -> datePartitions(base, t)).toMap
 
-    // every affected table equals a FULL rebuild with the new override
-    val full = GoldRefresh.rebuildAll(withOverride).toMap
-    for (t <- OverrideRefresh.Dependencies("serp_feature_item"))
-      assert(canon(spark.read.parquet(s"$base/$t")) == canon(full(t)), s"table $t diverged")
-
-    // untouched DATE partitions of the affected table: files unmodified
-    val after = fileStates("serp_feature_daily")
-    val touchedPrefix = s"date=$touchedDate"
-    val untouchedBefore = before.filterNot(_._1.contains(touchedPrefix))
-    untouchedBefore.foreach { case (path, mtime) =>
-      assert(after.get(path).contains(mtime), s"untouched partition file rewritten: $path")
+    // four edits per mention type, all on distinct dates
+    val types = OverrideRefresh.Dependencies.keys.toSeq.sorted
+    val (edited, edits) = Seq.fill(4)(types).flatten.foldLeft((in, Seq.empty[(String, Date)])) {
+      case ((i, done), m) =>
+        val (next, date) = edit(i, m, done.map(_._2).toSet)
+        (next, done :+ (m -> date))
     }
-    // and the touched partition WAS rewritten (new part-file names)
-    assert(after.keySet.filter(_.contains(touchedPrefix)) !=
-      before.keySet.filter(_.contains(touchedPrefix)),
-      "touched partition must be rewritten")
+    // the session default: every refresh must overwrite dynamically anyway,
+    // and leave the session's setting as it found it
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(modeKey, "static")
+    val pool = Executors.newFixedThreadPool(4)
+    try {
+      val calls = edits.map { case (m, date) =>
+        pool.submit(new Callable[Seq[(String, Double)]] {
+          def call() = OverrideRefresh.refreshAfterOverride(edited, base, m, Seq(date))
+        })
+      }
+      calls.foreach(_.get())
+    } finally pool.shutdown()
 
-    // unaffected tables: no file touched at all
-    assert(fileStates("article_daily_counts") == beforeArticle,
-      "article_daily_counts is not downstream of serp_feature_item")
+    val full = GoldRefresh.rebuildAll(edited).toMap
+    for (t <- allTables)
+      assert(datePartitions(base, t) == partitions(t), s"$t lost date partitions")
+    for (t <- types.flatMap(OverrideRefresh.Dependencies).distinct)
+      assert(read(base, t) == canon(full(t)), s"$t diverged from a full rebuild")
+    assert(spark.conf.get(modeKey) == "static")
   }
 }
