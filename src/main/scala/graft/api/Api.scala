@@ -8,10 +8,35 @@ import org.apache.spark.sql.functions._
 /** Endpoint-equivalent query functions (reference step 7): each function is
   * the DataFrame form of one Flask route's SQL + post-processing, reading
   * the gold/view tables built by graft.gold / graft.views. All are thin —
-  * the heavy lifting happened at gold-build time — and every filter is a
-  * plain pushdown-able predicate over date-partitioned tables.
+  * the heavy lifting happened at gold-build time. Date filters prune the
+  * date partitions and plain column predicates (entity kind, scope ids,
+  * feature types) push down into the parquet scan; `serpFeatureSeries`'s
+  * case-insensitive name match (`lower(entity_name)`) cannot be pushed, so
+  * it filters the rows of the pruned partitions after the scan.
+  *
+  * Answer ordering: a point endpoint (`dailyCounts`, `serpFeatureSeries`,
+  * `negativeSummary`, and the [[SerpFeatures]] series) returns its answer
+  * as ONE sorted partition ([[answer]]): the ordering adds no job and no
+  * shuffle, so the three filter-only point reads over gold each run as a
+  * single Spark job with no Exchange. The answer's size is bounded by the
+  * [[ApiLimits]] lookback caps times the entity scope. Endpoints that end
+  * in a capped top-k (`orderBy(...).limit(...)`) already plan a
+  * single-stage `TakeOrderedAndProject` and keep it.
   */
 object Api {
+
+  /** The terminal ordering of a point endpoint's answer: every row in one
+    * partition, sorted there. This replaces a global `orderBy`, whose range
+    * partitioning costs a sampling job and a shuffle before the sort, and it
+    * is right at any table size because:
+    *  - the answer is collected whole by one client, so all of it ends up
+    *    in one process anyway;
+    *  - it is bounded by the [[ApiLimits]] lookback caps (at most 365 days)
+    *    times the entity scope, never by the table;
+    *  - one sorted partition is exactly what `collect()` returns, in order.
+    */
+  private[api] def answer(df: DataFrame, order: Column*): DataFrame =
+    df.coalesce(1).sortWithinPartitions(order: _*)
 
   /** P2: 'brand' is compatible with {'brand','company'}
     * (`dashboard_app/app.py:187-198`). */
@@ -32,10 +57,10 @@ object Api {
       case Some(ids) => articleDailyCounts.filter(col("company_id").isin(ids: _*))
       case None => articleDailyCounts
     }
-    scoped
+    answer(scoped
       .filter(entityTypeFilter(col("entity_type"), entityType))
-      .filter(col("date") >= date_sub(asOf, ApiLimits.clampDays(days, ApiLimits.SeriesMaxDays)))
-      .orderBy(col("date"), col("company"))
+      .filter(col("date") >= date_sub(asOf, ApiLimits.clampDays(days, ApiLimits.SeriesMaxDays))),
+      col("date"), col("company"))
   }
 
   /** `GET /api/v1/insights/screen` (`app.py:4400-4426`, A6): rank entities
@@ -150,13 +175,13 @@ object Api {
   def serpFeatureSeries(serpFeatureDaily: DataFrame, entityType: String,
       entityName: String, featureTypes: Seq[String], days: Int,
       asOf: Column = current_date()): DataFrame =
-    serpFeatureDaily
+    answer(serpFeatureDaily
       .filter(entityTypeFilter(col("entity_type"), entityType))
       .filter(lower(col("entity_name")) === entityName.toLowerCase(java.util.Locale.ROOT)) // P8
       .filter(if (featureTypes.isEmpty) lit(true)
         else col("feature_type").isin(featureTypes: _*))
-      .filter(col("date") >= date_sub(asOf, ApiLimits.clampDays(days, ApiLimits.SeriesMaxDays)))
-      .orderBy(col("date"), col("feature_type"))
+      .filter(col("date") >= date_sub(asOf, ApiLimits.clampDays(days, ApiLimits.SeriesMaxDays))),
+      col("date"), col("feature_type"))
 
   /** `GET /api/v1/negative_summary` (`app.py:7011-7041`): one day's negative
     * article summary, scope-filtered. */
@@ -166,9 +191,9 @@ object Api {
       case Some(ids) => negativeSummaryMv.filter(col("company_id").isin(ids: _*))
       case None => negativeSummaryMv
     }
-    scoped.filter(col("date") === onDate)
-      .filter(col("negative_count") > 0 || col("crisis_risk_count") > 0)
-      .orderBy(col("negative_count").desc, col("company"))
+    answer(scoped.filter(col("date") === onDate)
+      .filter(col("negative_count") > 0 || col("crisis_risk_count") > 0),
+      col("negative_count").desc, col("company"))
   }
 
   /** `GET /api/v1/insights/evidence` (A10, `app.py:5346-5530`): evidence

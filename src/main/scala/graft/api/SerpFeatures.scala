@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * mode (re-aggregated across entities from the index MV). All filters are
   * pushdown-able predicates over the date-partitioned gold tables; the only
   * join is the broadcast ceo→company hop when a company scope must gate ceo
-  * rows.
+  * rows. Both modes return their answer as one sorted partition
+  * ([[Api.answer]]).
   */
 object SerpFeatures {
 
@@ -56,11 +57,11 @@ object SerpFeatures {
     val base = dateWindow(
       dailyMv.filter(Api.entityTypeFilter(col("entity_type"), entityType)),
       onDate, days, asOf)
-    scoped(base, entityType, scopeCompanyIds, ceos)
+    val rows = scoped(base, entityType, scopeCompanyIds, ceos)
       .filter(entityName.map(col("entity_name") === _).getOrElse(lit(true)))
       .filter(featureType.map(col("feature_type") === _).getOrElse(lit(true)))
       .select((Seq("date", "entity_name", "feature_type") ++ countCols).map(col): _*)
-      .orderBy(col("date"), col("feature_type"))
+    Api.answer(rows, col("date"), col("feature_type"))
   }
 
   private def indexRead(
@@ -70,14 +71,14 @@ object SerpFeatures {
       days: Int,
       onDate: Option[String],
       asOf: Column): DataFrame =
-    dateWindow(indexMv.filter(Api.entityTypeFilter(col("entity_type"), entityType)),
+    Api.answer(dateWindow(indexMv.filter(Api.entityTypeFilter(col("entity_type"), entityType)),
       onDate, days, asOf)
       .groupBy(col("date"), col("feature_type"))
       .agg(sum(col(countCols.head)).as(countCols.head),
         countCols.tail.map(c => sum(col(c)).as(c)): _*)
       .select((Seq(col("date"), lit("Index").as("entity_name"), col("feature_type")) ++
-        countCols.map(col)): _*)
-      .orderBy(col("date"), col("feature_type"))
+        countCols.map(col)): _*),
+      col("date"), col("feature_type"))
 
   private val featureCounts =
     Seq("total_count", "positive_count", "neutral_count", "negative_count")

@@ -12,12 +12,24 @@ import org.apache.spark.sql.functions._
   * lock, `dashboard_app/app.py:7059-7182` — partition overwrite replaces
   * that wholesale).
   *
-  * Scale notes: every builder is scan -> broadcast-join dims/overrides ->
-  * single hash aggregate; the fact table shuffles exactly once, on the
-  * output group key. Override tables are human-entered (tiny) -> broadcast.
-  * neg_pct keeps the reference's asymmetric rounding (brand 6dp / ceo 1dp,
-  * `sql/article_daily_counts_mv.sql:16,37`) through decimal division —
-  * double division would drift at the 6th decimal under reordering.
+  * Scale notes: dims, article titles and override tables (human-entered,
+  * tiny) are broadcast. Each builder then runs ONE hash aggregate, so its
+  * fact rows shuffle once, on the output group key:
+  *  - `articleDailyCounts` and `serpDailyCounts` project the brand and CEO
+  *    branches onto the output key columns, union the rows and aggregate
+  *    once: one exchange per table, not one per branch;
+  *  - `negativeSummary` unions the two branches at mention grain and
+  *    aggregates once;
+  *  - the four serp-feature builders each aggregate the shared
+  *    [[featureItemsEffective]] projection at their grain.
+  * The fact-to-fact joins (runs × results in `serpDailyCounts`, daily
+  * mentions × mentions in `negativeSummary`) are left to the planner: a
+  * broadcast when one side is small, else a shuffle join before the
+  * aggregate.
+  * neg_pct keeps the reference's asymmetric rounding per row (brand 6dp /
+  * ceo 1dp, `sql/article_daily_counts_mv.sql:16,37`) through decimal
+  * division — double division would drift at the 6th decimal under
+  * reordering.
   */
 object GoldTables {
 
@@ -28,10 +40,16 @@ object GoldTables {
     countIf(eff === "negative").as("negative"),
     count(lit(1)).as("total"))
 
+  /** Output key of the two brand + ceo tables (`articleDailyCounts` adds
+    * `alias`): both branches are projected onto it before the one
+    * aggregate. */
+  private val EntityDayKey: Seq[String] = Seq("date", "entity_type", "entity_id",
+    "company_id", "ceo_id", "entity_name", "company", "ceo")
+
   private def negPct(scale: Int): Column =
     when(col("total") > 0,
       round(col("negative").cast("decimal(28,12)") / col("total"), scale))
-      .otherwise(lit(0)).cast("decimal(38,6)").as("neg_pct")
+      .otherwise(lit(0)).cast("decimal(38,6)")
 
   /** `article_daily_counts_mv` (`sql/article_daily_counts_mv.sql:1-46`):
     * brand + ceo union of daily sentiment histograms with override coalesce
@@ -43,7 +61,7 @@ object GoldTables {
       ceos: DataFrame,
       companyOverrides: DataFrame,
       ceoOverrides: DataFrame): DataFrame = {
-    val effB = coalesce(col("override_sentiment_label"), col("sentiment_label"))
+    val eff = coalesce(col("override_sentiment_label"), col("sentiment_label")).as("eff")
     val brand = companyMentionsDaily
       .join(broadcast(companies.select(col("id"), col("name"))),
         col("company_id") === col("id"))
@@ -52,15 +70,11 @@ object GoldTables {
           col("override_sentiment_label"))),
         col("company_id") === col("ov_company_id") &&
           col("article_id") === col("ov_article_id"), "left")
-      .groupBy(col("date"), col("id"), col("name"))
-      .agg(sentimentPivot(effB).head, sentimentPivot(effB).tail: _*)
       .select(col("date"), lit("brand").as("entity_type"), col("id").as("entity_id"),
         col("id").as("company_id"), lit(null: String).as("ceo_id"),
         col("name").as("entity_name"), col("name").as("company"),
-        lit("").as("ceo"), lit("").as("alias"),
-        col("positive"), col("neutral"), col("negative"), col("total"), negPct(6))
+        lit("").as("ceo"), lit("").as("alias"), eff)
 
-    val effC = coalesce(col("override_sentiment_label"), col("sentiment_label"))
     val ceo = ceoMentionsDaily
       .join(broadcast(ceos.select(col("id"), col("name").as("ceo_name"),
         col("company_id").as("ceo_company_id"), col("alias"))),
@@ -72,16 +86,17 @@ object GoldTables {
           col("override_sentiment_label"))),
         col("ceo_id") === col("ov_ceo_id") &&
           col("article_id") === col("ov_article_id"), "left")
-      .groupBy(col("date"), col("id"), col("ceo_name"), col("alias"), col("cid"),
-        col("company_name"))
-      .agg(sentimentPivot(effC).head, sentimentPivot(effC).tail: _*)
       .select(col("date"), lit("ceo").as("entity_type"), col("id").as("entity_id"),
         col("cid").as("company_id"), col("id").as("ceo_id"),
         col("ceo_name").as("entity_name"), col("company_name").as("company"),
-        col("ceo_name").as("ceo"), coalesce(col("alias"), lit("")).as("alias"),
-        col("positive"), col("neutral"), col("negative"), col("total"), negPct(1))
+        col("ceo_name").as("ceo"), coalesce(col("alias"), lit("")).as("alias"), eff)
 
+    val pivots = sentimentPivot(col("eff"))
     brand.unionByName(ceo)
+      .groupBy((EntityDayKey :+ "alias").map(col): _*)
+      .agg(pivots.head, pivots.tail: _*)
+      .withColumn("neg_pct",
+        when(col("entity_type") === "brand", negPct(6)).otherwise(negPct(1)))
   }
 
   /** `serp_daily_counts_mv` (`sql/serp_daily_counts_mv.sql:1-46`): runs ×
@@ -94,15 +109,9 @@ object GoldTables {
       companies: DataFrame,
       ceos: DataFrame): DataFrame = {
     val effControl = coalesce(col("override_control_class"), col("llm_control_class"),
-      col("control_class"))
+      col("control_class")).as("eff_control")
     val effSent = coalesce(col("override_sentiment_label"), col("llm_sentiment_label"),
-      col("sentiment_label"))
-    def pivots = Seq(
-      count(lit(1)).as("total"),
-      countIf(effControl === "controlled").as("controlled"),
-      countIf(effSent === "negative").as("negative_serp"),
-      countIf(effSent === "neutral").as("neutral_serp"),
-      countIf(effSent === "positive").as("positive_serp"))
+      col("sentiment_label")).as("eff_sentiment")
 
     val joined = serpRuns
       .join(serpResults.withColumnRenamed("id", "result_id"),
@@ -115,13 +124,10 @@ object GoldTables {
     val brand = joined.filter(col("entity_type") === "company")
       .join(broadcast(companies.select(col("id").as("cid"), col("name"))),
         col("company_id") === col("cid"))
-      .groupBy(to_date(col("run_at")).as("date"), col("cid"), col("name"))
-      .agg(pivots.head, pivots.tail: _*)
-      .select(col("date"), lit("brand").as("entity_type"), col("cid").as("entity_id"),
-        col("cid").as("company_id"), lit(null: String).as("ceo_id"),
+      .select(to_date(col("run_at")).as("date"), lit("brand").as("entity_type"),
+        col("cid").as("entity_id"), col("cid").as("company_id"), lit(null: String).as("ceo_id"),
         col("name").as("entity_name"), col("name").as("company"), lit("").as("ceo"),
-        col("total"), col("controlled"), col("negative_serp"), col("neutral_serp"),
-        col("positive_serp"))
+        effControl, effSent)
 
     val ceo = joined.filter(col("entity_type") === "ceo")
       .join(broadcast(ceos.select(col("id").as("ceoid"), col("name").as("ceo_name"),
@@ -129,17 +135,19 @@ object GoldTables {
         col("ceo_id") === col("ceoid"))
       .join(broadcast(companies.select(col("id").as("cid"), col("name").as("company_name"))),
         col("ceo_company_id") === col("cid"))
-      .groupBy(to_date(col("run_at")).as("date"), col("ceoid"), col("ceo_name"),
-        col("cid"), col("company_name"))
-      .agg(pivots.head, pivots.tail: _*)
-      .select(col("date"), lit("ceo").as("entity_type"), col("ceoid").as("entity_id"),
-        col("cid").as("company_id"), col("ceoid").as("ceo_id"),
+      .select(to_date(col("run_at")).as("date"), lit("ceo").as("entity_type"),
+        col("ceoid").as("entity_id"), col("cid").as("company_id"), col("ceoid").as("ceo_id"),
         col("ceo_name").as("entity_name"), col("company_name").as("company"),
-        col("ceo_name").as("ceo"),
-        col("total"), col("controlled"), col("negative_serp"), col("neutral_serp"),
-        col("positive_serp"))
+        col("ceo_name").as("ceo"), effControl, effSent)
 
     brand.unionByName(ceo)
+      .groupBy(EntityDayKey.map(col): _*)
+      .agg(
+        count(lit(1)).as("total"),
+        countIf(col("eff_control") === "controlled").as("controlled"),
+        countIf(col("eff_sentiment") === "negative").as("negative_serp"),
+        countIf(col("eff_sentiment") === "neutral").as("neutral_serp"),
+        countIf(col("eff_sentiment") === "positive").as("positive_serp"))
   }
 
   /** Shared item-grain effective labels for the four serp-feature MVs:

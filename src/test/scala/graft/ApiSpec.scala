@@ -1,10 +1,14 @@
 package graft
 
+import java.nio.file.Files
+
 import graft.api.Api
-import graft.gold.{GoldTables, Schemas}
+import graft.gold.{GoldRefresh, GoldTables, Schemas}
 import graft.views.{EntityAnomalies, EntityDailyMetrics}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 
 /** API layer over the same reference-schema fixtures used by GoldParitySpec. */
 class ApiSpec extends SparkSpec {
@@ -15,6 +19,7 @@ class ApiSpec extends SparkSpec {
       .json(getClass.getResource(s"/fixtures/$name.jsonl").getPath)
 
   private lazy val companies = fixture("companies", Schemas.companies)
+  private lazy val articles = fixture("articles", Schemas.articles)
   private lazy val ceos = fixture("ceos", Schemas.ceos)
   private lazy val camd = fixture("company_article_mentions_daily", Schemas.companyArticleMentionsDaily)
   private lazy val ceamd = fixture("ceo_article_mentions_daily", Schemas.ceoArticleMentionsDaily)
@@ -40,6 +45,36 @@ class ApiSpec extends SparkSpec {
     EntityDailyMetrics.topStoriesControl(
       GoldTables.serpFeatureControl(eff, GoldTables.EntityGrain)))
 
+  /** The fixture gold: all 7 tables written by the gold refresh and read
+    * back from parquet, as the endpoints read them in service. */
+  private lazy val goldDir = {
+    val dir = Files.createTempDirectory("graft-api-gold").toString
+    GoldRefresh.refreshToParquet(GoldRefresh.BronzeInputs(companies, ceos, articles, cam, ceam,
+      camd, ceamd, cao, ceao, serpRuns, serpResults, sro, sfi, sfio, sfuo), dir)
+    dir
+  }
+  private def gold(table: String): DataFrame = spark.read.parquet(s"$goldDir/$table")
+
+  /** `body`'s result and the number of Spark jobs it fired, counted through
+    * a job group in the status tracker. The tracker fills asynchronously but
+    * in event order, so once a marker job run afterwards is visible, so are
+    * all of `body`'s jobs. */
+  private def withJobCount[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"api-spec-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, "measured")
+    val out = try body finally sc.clearJobGroup()
+    sc.setJobGroup(s"$group-marker", "marker")
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    eventually(timeout(Span(30, Seconds))) {
+      assert(sc.statusTracker.getJobIdsForGroup(s"$group-marker").nonEmpty)
+    }
+    (out, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
+
+  private def assertSorted[K: Ordering](keys: Seq[K]): Unit =
+    assert(keys == keys.sorted, s"answer not in key order: $keys")
+
   test("dailyCounts: brand aliasing, scope filter, (date, company) order") {
     // days clamps to SeriesMaxDays (365) per the reference guardrail, so
     // anchor asOf inside the fixture window
@@ -48,8 +83,49 @@ class ApiSpec extends SparkSpec {
     assert(all.select("entity_type").distinct().as[String].collect().toSet == Set("brand"))
     val scoped = Api.dailyCounts(articleMv, "brand", 100000, Some(Seq("c1")), asOf = asOf)
     assert(scoped.select("company_id").distinct().as[String].collect().toSeq == Seq("c1"))
-    val dates = all.select(col("date").cast("string")).as[String].collect()
-    assert(dates.sameElements(dates.sorted))
+    val keys = all.select(col("date").cast("string"), col("company")).as[(String, String)]
+      .collect().toSeq
+    assert(keys.map(_._2).distinct.size > 1)
+    assertSorted(keys)
+  }
+
+  test("point reads over gold: one Spark job, no Exchange") {
+    val asOf = lit("2025-04-15").cast("date")
+    val reads = Seq(
+      "dailyCounts" ->
+        Api.dailyCounts(gold("article_daily_counts"), "brand", 365, asOf = asOf),
+      "serpFeatureSeries" -> Api.serpFeatureSeries(gold("serp_feature_daily"), "brand",
+        "acme corporation", Nil, 365, asOf),
+      "negativeSummary" ->
+        Api.negativeSummary(gold("negative_summary"), lit("2025-04-10").cast("date")))
+    for ((name, df) <- reads) {
+      val p = df.queryExecution.executedPlan.toString
+      assert(!p.contains("Exchange"), s"$name must not shuffle:\n" + p.take(2000))
+      val (rows, jobs) = withJobCount(df.collect())
+      assert(rows.nonEmpty, name)
+      assert(jobs == 1, s"$name collect fired $jobs jobs")
+    }
+  }
+
+  test("negativeSummary: one day, negative-or-crisis rows, scope, (negative_count desc, company)") {
+    def answer(date: String, scope: Option[Seq[String]] = None) =
+      Api.negativeSummary(gold("negative_summary"), lit(date).cast("date"), scope)
+        .select(col("date").cast("string"), col("company_id"), col("ceo"),
+          col("negative_count"), col("crisis_risk_count"))
+        .as[(String, String, String, Long, Long)].collect().toSeq
+    // 2025-04-10 also holds Jane Doe's (0 negative, 0 crisis) row, which the
+    // filter drops; a crisis-only row stays
+    assert(answer("2025-04-10") == Seq(
+      ("2025-04-10", "c1", "", 2L, 0L),
+      ("2025-04-10", "c2", "John Smith", 1L, 1L),
+      ("2025-04-10", "c2", "", 0L, 1L)))
+    assert(answer("2025-04-10", Some(Seq("c2"))) == Seq(
+      ("2025-04-10", "c2", "John Smith", 1L, 1L),
+      ("2025-04-10", "c2", "", 0L, 1L)))
+    // equal negative counts fall back to company order
+    val tied = Api.negativeSummary(gold("negative_summary"), lit("2025-04-04").cast("date"))
+      .select("negative_count", "company").as[(Long, String)].collect().toSeq
+    assert(tied == Seq((1L, "Acme Corporation"), (1L, "Globex Group"), (1L, "Globex Group")))
   }
 
   test("screen: window aggregate with having + composite order + limit") {
@@ -92,6 +168,12 @@ class ApiSpec extends SparkSpec {
     assert(series.select("feature_type").distinct().as[String].collect().toSeq ==
       Seq("top_stories_items"))
     assert(series.count() > 0)
+    val keys = Api.serpFeatureSeries(featureMv, "brand", "acme corporation", Nil,
+      days = 365, asOf = lit("2025-04-14").cast("date"))
+      .select(col("date").cast("string"), col("feature_type")).as[(String, String)]
+      .collect().toSeq
+    assert(keys.map(_._2).distinct.size > 1)
+    assertSorted(keys)
   }
 
   test("endpoint guardrails: reference clamp semantics") {

@@ -7,6 +7,7 @@ import java.util.concurrent.{Callable, Executors}
 import graft.gold.{GoldRefresh, GoldTables, OverrideRefresh, Schemas}
 import graft.gold.GoldRefresh.BronzeInputs
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Union}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
@@ -134,6 +135,16 @@ class GoldRefreshSpec extends SparkSpec {
       r
     }
     assert(rebuilt.map(_._1) == allTables)
+  }
+
+  test("brand + CEO tables run one aggregate over the union of both branches") {
+    val built = GoldRefresh.rebuildAll(in).toMap
+    for (t <- Seq("article_daily_counts", "serp_daily_counts")) {
+      val plan = built(t).queryExecution.optimizedPlan
+      val aggs = plan.collect { case a: Aggregate => a }
+      assert(aggs.size == 1, s"$t must aggregate once:\n$plan")
+      assert(aggs.head.child.exists(_.isInstanceOf[Union]), s"$t must union below its aggregate:\n$plan")
+    }
   }
 
   test("refreshToParquet writes date-partitioned tables readable back intact") {
