@@ -13,9 +13,11 @@ import java.sql.Date
   * is the full refresh ([[GoldRefresh]]) over the affected tables and over
   * bronze restricted to the touched dates: its dynamic partition overwrite
   * replaces exactly those date partitions and never rewrites the others'
-  * files. Writers need no lock, but readers are not isolated: a read that
-  * lists a partition while it is being replaced can fail with
-  * `FAILED_READ_FILE.FILE_NOT_EXIST` (see [[GoldRefresh]]).
+  * files, and the affected tables are written as concurrent Spark jobs (the
+  * four serp-feature tables of a `serp_feature_item` edit at once), failing
+  * only after every write has ended. Writers need no lock, but readers are
+  * not isolated: a read that lists a partition while it is being replaced
+  * can fail with `FAILED_READ_FILE.FILE_NOT_EXIST` (see [[GoldRefresh]]).
   *
   * Faithfulness note: for article overrides the reference refreshes only
   * `article_daily_counts_mv` and clears the negative-summary CACHE — the
@@ -39,7 +41,7 @@ object OverrideRefresh {
     * resolved to Spark's natural partition grain: a date partition holds
     * every entity, so the overridden entity's peers in that partition are
     * recomputed too, from the same pruned scan. Returns per-table wall times
-    * in [[Dependencies]] order. */
+    * in [[Dependencies]] order; they overlap. */
   def refreshAfterOverride(
       in: GoldRefresh.BronzeInputs,
       base: String,

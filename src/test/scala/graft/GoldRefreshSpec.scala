@@ -1,8 +1,10 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.sql.Date
-import java.util.concurrent.{Callable, Executors}
+import java.util.concurrent.{Callable, ConcurrentHashMap, Executors}
+
+import scala.jdk.CollectionConverters._
 
 import graft.gold.{GoldRefresh, GoldTables, OverrideRefresh, Schemas}
 import graft.gold.GoldRefresh.BronzeInputs
@@ -10,14 +12,17 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Union}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.storage.StorageLevel
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 
 /** The gold refresh path: all 7 MVs written with dynamic partition
-  * overwrite, and the override refresh as the same path over the affected
-  * tables and the touched dates. Parity of each builder with the reference
-  * SQL is GoldParitySpec's job; here the written tables must equal a full
-  * rebuild, touch only what they should, and leave the session's cache as
-  * they found it. */
+  * overwrite as concurrent per-table Spark jobs, and the override refresh
+  * as the same path over the affected tables and the touched dates. Parity
+  * of each builder with the reference SQL is GoldParitySpec's job; here the
+  * written tables must equal a full rebuild, touch only what they should,
+  * and leave the session's cache as they found it, also when a write fails. */
 class GoldRefreshSpec extends SparkSpec {
 
   private def fixture(name: String, schema: StructType): DataFrame =
@@ -154,6 +159,60 @@ class GoldRefreshSpec extends SparkSpec {
     val back = spark.read.parquet(s"$base/article_daily_counts")
     assert(back.columns.contains("date")) // partition column restored
     assert(canon(back) == canon(GoldRefresh.rebuildAll(in).toMap.apply("article_daily_counts")))
+  }
+
+  test("refreshToParquet: one table's failed write fails the refresh after the others are written") {
+    val base = Files.createTempDirectory("graft-gold-fail").toString
+    // a regular file where negative_summary's directory must go
+    Files.write(Paths.get(base, "negative_summary"), Array[Byte](0))
+    val err = cacheUnchanged(in)(intercept[Exception](GoldRefresh.refreshToParquet(in, base)))
+    assert(err.getMessage.contains("negative_summary"), s"not negative_summary's failure: $err")
+    assert(Files.isRegularFile(Paths.get(base, "negative_summary")))
+    val full = GoldRefresh.rebuildAll(in).toMap
+    for (t <- allTables.filterNot(_ == "negative_summary"))
+      assert(read(base, t) == canon(full(t)), s"$t diverged from a full rebuild")
+  }
+
+  test("refreshToParquet: every table's write is its own concurrent job in the caller's job group") {
+    val sc = spark.sparkContext
+    val group = s"gold-refresh-${java.util.UUID.randomUUID()}"
+    // job id -> (job group, description, start ms); job id -> end ms
+    val started = new ConcurrentHashMap[Int, (String, String, Long)]()
+    val ended = new ConcurrentHashMap[Int, Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.put(e.jobId,
+        (e.properties.getProperty("spark.jobGroup.id"),
+          e.properties.getProperty("spark.job.description"), e.time))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.put(e.jobId, e.time)
+    }
+    val base = Files.createTempDirectory("graft-gold-jobs").toString
+    val t0 = System.currentTimeMillis()
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "gold refresh under test")
+      try GoldRefresh.refreshToParquet(in, base) finally sc.clearJobGroup()
+      // listener events arrive in order: once a later job has ended, every
+      // event of the refresh has been seen
+      sc.setJobGroup(s"$group-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      eventually(timeout(Span(30, Seconds))) {
+        assert(started.asScala.exists { case (id, (g, _, _)) =>
+          g == s"$group-marker" && ended.containsKey(id) })
+      }
+    } finally sc.removeSparkListener(listener)
+
+    val jobs = started.asScala.toSeq.collect {
+      case (id, (g, desc, start)) if start >= t0 && g != s"$group-marker" =>
+        (g, desc, start, ended.get(id))
+    }
+    assert(jobs.forall(_._1 == group), s"jobs outside the caller's job group: $jobs")
+    assert(jobs.map(_._2).toSet == allTables.map(t => s"gold refresh: $t").toSet)
+    val overlapping = for {
+      (_, a, aStart, aEnd) <- jobs
+      (_, b, bStart, bEnd) <- jobs
+      if a != b && aStart < bEnd && bStart < aEnd
+    } yield (a, b)
+    assert(overlapping.nonEmpty, "no two tables' jobs ran at the same time")
   }
 
   test("override refresh: incremental == full rebuild, untouched partitions' files unmodified") {
