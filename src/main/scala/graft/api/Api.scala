@@ -77,7 +77,7 @@ object Api {
       limit: Int = 25): DataFrame = {
     val m = col(metric)
     val base = entityDailyMetrics
-      .filter(col("entity_type") === (if (entityType == "brand") "brand" else entityType))
+      .filter(col("entity_type") === entityType)
       .filter(col("date").between(startDate, endDate))
       .join(broadcast(companies.select(col("id").as("company_id"),
         coalesce(col("sector"), lit("")).as("sector"))), Seq("company_id"))
@@ -134,30 +134,26 @@ object Api {
     val withDeltas = trendMetrics.foldLeft(summed) { (df, m) =>
       df.withColumn(s"${m}_delta", col(s"${m}_7d") - col(s"${m}_prior_7d"))
     }
-    withDeltas.withColumn("search_impact", {
-      val news = col("article_negative_count_7d") >= 7
-      val negSearch = col("serp_negative_count_7d") >= 3 ||
-        col("top_stories_negative_count_7d") >= 4
-      val uncontrolled = col("serp_uncontrolled_count_7d") >= 5 ||
-        col("top_stories_uncontrolled_count_7d") >= 4
-      when(negSearch && news, "news_and_search_negative")
-        .when(negSearch, "search_negative")
-        .when(uncontrolled && news, "news_and_search_uncontrolled")
-        .when(uncontrolled, "search_uncontrolled")
-        .when(news, "news_only")
-        .otherwise("muted")
-    })
-      .withColumn("search_nuance", {
-        // build_search_nuance label (`app.py:1466-1490`)
-        val negSearch = col("serp_negative_count_7d") >= 3 ||
-          col("top_stories_negative_count_7d") >= 4
-        val gap = col("serp_uncontrolled_count_7d") >= 5 ||
-          col("top_stories_uncontrolled_count_7d") >= 4
-        when(negSearch && gap, "negative_visibility_and_control_gap")
+    val news = col("article_negative_count_7d") >= 7
+    val negSearch = col("serp_negative_count_7d") >= 3 ||
+      col("top_stories_negative_count_7d") >= 4
+    // `classify_search_impact`'s "uncontrolled" and `build_search_nuance`'s
+    // (`app.py:1466-1490`) "gap" are the same predicate
+    val uncontrolled = col("serp_uncontrolled_count_7d") >= 5 ||
+      col("top_stories_uncontrolled_count_7d") >= 4
+    withDeltas
+      .withColumn("search_impact",
+        when(negSearch && news, "news_and_search_negative")
+          .when(negSearch, "search_negative")
+          .when(uncontrolled && news, "news_and_search_uncontrolled")
+          .when(uncontrolled, "search_uncontrolled")
+          .when(news, "news_only")
+          .otherwise("muted"))
+      .withColumn("search_nuance",
+        when(negSearch && uncontrolled, "negative_visibility_and_control_gap")
           .when(negSearch, "negative_visibility")
-          .when(gap, "control_gap_without_negative_visibility")
-          .otherwise("low_or_controlled_search_signal")
-      })
+          .when(uncontrolled, "control_gap_without_negative_visibility")
+          .otherwise("low_or_controlled_search_signal"))
   }
 
   /** `GET /api/v1/insights/anomalies` (`app.py:5197-5216`): filter + cap. */

@@ -26,18 +26,6 @@ object NarrativeRules {
   val TagOrder: Map[String, Int] =
     (CrisisTags ++ NonCrisisTags).zipWithIndex.toMap
 
-  /** Sort key for rollup tie-breaks (`narrative_runtime.py:349-361`):
-    * (group rank crisis<non_crisis<unknown, fixed tag order, casefolded name). */
-  def tagSortKey(tag: String): (Int, Int, String) = {
-    val groupRank = TagGroups.get(Option(tag).getOrElse("")) match {
-      case Some("crisis") => 0
-      case Some("non_crisis") => 1
-      case _ => 2
-    }
-    (groupRank, TagOrder.getOrElse(Option(tag).getOrElse(""), 999),
-      Option(tag).getOrElse("").toLowerCase(java.util.Locale.ROOT))
-  }
-
   private def ci(p: String) = Pattern.compile(p, Pattern.CASE_INSENSITIVE)
 
   private val workforceTerms = Seq(

@@ -102,21 +102,6 @@ object SimilarityFunctions {
       seed => aggregate(shingles, lit(Long.MaxValue),
         (acc, s) => least(acc, xxhash64(seed, s))))
 
-  /** LSH band keys from a minhash signature: hash each band of `rowsPerBand`
-    * consecutive signature entries. Docs sharing any band key are near-dup
-    * candidates. Returns Array[Long] of length numHashes/rowsPerBand. */
-  def bandKeys(signature: Column, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), (size(signature) / lit(rowsPerBand)).cast("int") - 1),
-      b => xxhash64(b, array_join(
-        transform(slice(signature, b * rowsPerBand + 1, lit(rowsPerBand)),
-          x => x.cast("string")), ",")))
-
-  /** Estimated Jaccard from two equal-length minhash signatures:
-    * fraction of agreeing positions. */
-  def minhashJaccardEstimate(sigA: Column, sigB: Column): Column =
-    aggregate(zip_with(sigA, sigB, (x, y) => when(x === y, 1.0d).otherwise(0.0d)),
-      lit(0.0d), (acc, v) => acc + v) / size(sigA)
-
   /** Exact Jaccard similarity of two array columns (as sets). */
   def jaccard(a: Column, b: Column): Column = {
     val inter = size(array_intersect(a, b)).cast("double")

@@ -71,13 +71,10 @@ object TextFunctions {
     best.getField("l")
   }
 
-  /** Quality-score components: doc length, token count, mean token length,
-    * punctuation ratio, stopword ratio. Mirrors the shape of classic
-    * pretraining-corpus quality filters. */
+  /** Quality-score component: doc length in characters (with
+    * [[tokenCount]] and [[stopwordHits]], the shape of classic
+    * pretraining-corpus quality filters). */
   def charCount(text: Column): Column = length(text).cast("long")
-
-  def punctCount(text: Column): Column =
-    (length(text) - length(regexp_replace(text, "[\\p{Punct}]", ""))).cast("long")
 
   /** Rolling (polynomial) content hash over whitespace tokens, base/mod fixed:
     * order-sensitive document fingerprint complementing [[fingerprint]].

@@ -3,7 +3,6 @@ package graft.functions
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
 
 /** URL canonicalization — the reference's dedup key for articles and SERP
@@ -75,9 +74,4 @@ object UrlFunctions {
   val normalizeUrl = udf(normalizeUrlImpl _)
   val urlHash = udf(urlHashImpl _)
   val hostName = udf(hostnameImpl _)
-
-  /** Column helper: normalized host + sha2 without the UDF, for simple URLs
-    * (native, codegen-friendly fast path usable when inputs are known-clean). */
-  def urlHashNative(url: Column): Column =
-    org.apache.spark.sql.functions.sha2(normalizeUrl(url), 256)
 }

@@ -1,7 +1,7 @@
 package graft.views
 
 import graft.operators.Rollups.countIf
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** `entity_daily_metrics_v` (`sql/entity_daily_metrics_v.sql:1-167`) — the
@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   * five left joins back, every metric coalesced to 0.
   *
   * The inputs here are already-aggregated gold tables (one row per entity ×
-  * day), so the join legs are all keyed identically on (date, entity_type,
-  * entity_id): Spark shuffles each leg once on that key and AQE coalesces
-  * the exchanges; there is no raw-fact shuffle in this view. (The raw-fact
+  * day), so [[build]] re-expresses the key union and the joins as one
+  * aggregate over the unioned legs, keyed on (date, entity_type,
+  * entity_id): one shuffle of the legs, plus the sentiment leg's join on
+  * the same key. There is no raw-fact shuffle in this view. (The raw-fact
   * crunch happened in the Gold builders.)
   */
 object EntityDailyMetrics {
@@ -90,7 +91,19 @@ object EntityDailyMetrics {
       .groupBy(col("date"), col("norm_entity_type").as("entity_type"), col("entity_id"))
       .agg(sum(col("controlled_count")).as("top_stories_controlled_count"))
 
-  /** The full view: key union + five left joins + coalesce-to-zero. */
+  /** The full view (`entity_daily_metrics_v.sql:123-167`). The reference
+    * takes the key union of the article, serp, crisis and top-stories
+    * sentiment legs and left-joins all five legs back. Here the legs are
+    * projected onto one wide schema, tagged with their rank in the
+    * reference's `coalesce(a, s, ac, ts)` order, unioned and aggregated once
+    * per key: identity columns take the lowest-ranked leg carrying a value
+    * (`min_by`), metrics the one leg carrying them (`max`). The control leg
+    * ranks last and keeps only keys another leg brings, as a left join does.
+    *
+    * The sentiment leg contributes keys to the aggregate but its values are
+    * joined once, after it: every other leg has at most one row per key, but
+    * an entity missing from the dims whose top-stories rows carry two names
+    * has two sentiment rows for one key, and the reference keeps both. */
   def build(
       articleDailyCounts: DataFrame,
       serpDailyCounts: DataFrame,
@@ -98,83 +111,64 @@ object EntityDailyMetrics {
       topStoriesSentimentDf: DataFrame,
       topStoriesControlDf: DataFrame): DataFrame = {
     val key = Seq("date", "entity_type", "entity_id")
+    val ids = Seq("company_id", "ceo_id")
+    val names = Seq("entity_name", "company", "ceo")
+    val tsCounts = Seq("top_stories_total_count", "top_stories_positive_count",
+      "top_stories_neutral_count", "top_stories_negative_count")
+    def leg(df: DataFrame, cols: Column*): DataFrame = df.select(key.map(col) ++ cols: _*)
 
-    val a = articleDailyCounts.select(col("date"), col("entity_type"), col("entity_id"),
-      col("company_id").as("a_company_id"), col("ceo_id").as("a_ceo_id"),
-      col("entity_name").as("a_entity_name"), col("company").as("a_company"),
-      col("ceo").as("a_ceo"),
-      col("positive").as("article_positive_count"),
-      col("neutral").as("article_neutral_count"),
-      col("negative").as("article_negative_count"),
-      col("total").as("article_total_count"),
-      col("neg_pct").as("article_negative_pct"))
+    val legs = Seq(
+      leg(articleDailyCounts, (ids ++ names).map(col) ++ Seq(
+        col("positive").as("article_positive_count"),
+        col("neutral").as("article_neutral_count"),
+        col("negative").as("article_negative_count"),
+        col("total").as("article_total_count"),
+        col("neg_pct").as("article_negative_pct")): _*),
+      leg(serpDailyCounts, (ids ++ names).map(col) ++ Seq(
+        col("positive_serp").as("serp_positive_count"),
+        col("neutral_serp").as("serp_neutral_count"),
+        col("negative_serp").as("serp_negative_count"),
+        col("total").as("serp_total_count"),
+        col("controlled").as("serp_controlled_count"),
+        greatest(col("total") - col("controlled"), lit(0)).as("serp_uncontrolled_count")): _*),
+      leg(articleCrisisDf, ids.map(col) :+ col("crisis_risk_count"): _*),
+      leg(topStoriesSentimentDf),
+      leg(topStoriesControlDf, col("top_stories_controlled_count")))
+    val controlRank = legs.size - 1
+    val unioned = legs.zipWithIndex
+      .map { case (df, rank) => df.withColumn("leg_rank", lit(rank)) }
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+    val metrics = unioned.columns.toSeq.diff(key ++ ids ++ names :+ "leg_rank")
 
-    val s = serpDailyCounts.select(col("date"), col("entity_type"), col("entity_id"),
-      col("company_id").as("s_company_id"), col("ceo_id").as("s_ceo_id"),
-      col("entity_name").as("s_entity_name"), col("company").as("s_company"),
-      col("ceo").as("s_ceo"),
-      col("positive_serp").as("serp_positive_count"),
-      col("neutral_serp").as("serp_neutral_count"),
-      col("negative_serp").as("serp_negative_count"),
-      col("total").as("serp_total_count"),
-      col("controlled").as("serp_controlled_count"),
-      greatest(col("total") - col("controlled"), lit(0)).as("serp_uncontrolled_count"))
+    // a key with a null part matches no leg in the reference's joins: it
+    // keeps its row but takes none of the legs' values
+    val complete = key.map(col(_).isNotNull).reduce(_ && _)
+    def own(c: Column): Column = when(complete, c)
+    def lowestRanked(v: Column): Column = min_by(v, when(v.isNotNull, col("leg_rank")))
+    val perKey = unioned.groupBy(key.map(col): _*)
+      .agg(min(col("leg_rank")).as("first_rank"),
+        ids.map(c => lowestRanked(own(col(c))).as(c)) ++
+          names.map(c => lowestRanked(own(nullif(col(c), lit("")))).as(c)) ++
+          metrics.map(c => max(own(col(c))).as(c)): _*)
+      .filter(col("first_rank") < controlRank)
 
-    val ac = articleCrisisDf.select(col("date"), col("entity_type"), col("entity_id"),
-      col("company_id").as("ac_company_id"), col("ceo_id").as("ac_ceo_id"),
-      col("crisis_risk_count"))
-
-    val ts = topStoriesSentimentDf.select(col("date"), col("entity_type"), col("entity_id"),
-      col("company_id").as("ts_company_id"), col("ceo_id").as("ts_ceo_id"),
-      col("entity_name").as("ts_entity_name"), col("company").as("ts_company"),
-      col("ceo").as("ts_ceo"),
-      col("top_stories_total_count"), col("top_stories_positive_count"),
-      col("top_stories_neutral_count"), col("top_stories_negative_count"))
-
-    val tc = topStoriesControlDf.select(col("date"), col("entity_type"), col("entity_id"),
-      col("top_stories_controlled_count"))
-
-    val keys = a.select(key.map(col): _*)
-      .union(s.select(key.map(col): _*))
-      .union(ac.select(key.map(col): _*))
-      .union(ts.select(key.map(col): _*))
-      .distinct()
-
-    keys
-      .join(a, key, "left").join(s, key, "left").join(ac, key, "left")
-      .join(ts, key, "left").join(tc, key, "left")
-      .select(
-        col("date"), col("entity_type"), col("entity_id"),
-        coalesce(col("a_company_id"), col("s_company_id"), col("ac_company_id"),
-          col("ts_company_id")).as("company_id"),
-        coalesce(col("a_ceo_id"), col("s_ceo_id"), col("ac_ceo_id"), col("ts_ceo_id"))
-          .as("ceo_id"),
-        coalesce(nullif(col("a_entity_name"), lit("")), nullif(col("s_entity_name"), lit("")),
-          nullif(col("ts_entity_name"), lit("")), lit("")).as("entity_name"),
-        coalesce(nullif(col("a_company"), lit("")), nullif(col("s_company"), lit("")),
-          nullif(col("ts_company"), lit("")), lit("")).as("company"),
-        coalesce(nullif(col("a_ceo"), lit("")), nullif(col("s_ceo"), lit("")),
-          nullif(col("ts_ceo"), lit("")), lit("")).as("ceo"),
-        coalesce(col("article_positive_count"), lit(0L)).as("article_positive_count"),
-        coalesce(col("article_neutral_count"), lit(0L)).as("article_neutral_count"),
-        coalesce(col("article_negative_count"), lit(0L)).as("article_negative_count"),
-        coalesce(col("article_total_count"), lit(0L)).as("article_total_count"),
-        coalesce(col("article_negative_pct"), lit(0).cast("decimal(38,6)"))
-          .as("article_negative_pct"),
-        coalesce(col("serp_positive_count"), lit(0L)).as("serp_positive_count"),
-        coalesce(col("serp_neutral_count"), lit(0L)).as("serp_neutral_count"),
-        coalesce(col("serp_negative_count"), lit(0L)).as("serp_negative_count"),
-        coalesce(col("serp_total_count"), lit(0L)).as("serp_total_count"),
-        coalesce(col("serp_controlled_count"), lit(0L)).as("serp_controlled_count"),
-        coalesce(col("serp_uncontrolled_count"), lit(0L)).as("serp_uncontrolled_count"),
-        coalesce(col("top_stories_total_count"), lit(0L)).as("top_stories_total_count"),
-        coalesce(col("top_stories_positive_count"), lit(0L)).as("top_stories_positive_count"),
-        coalesce(col("top_stories_neutral_count"), lit(0L)).as("top_stories_neutral_count"),
-        coalesce(col("top_stories_negative_count"), lit(0L)).as("top_stories_negative_count"),
-        coalesce(col("top_stories_controlled_count"), lit(0L)).as("top_stories_controlled_count"),
-        greatest(coalesce(col("top_stories_total_count"), lit(0L)) -
+    val ts = topStoriesSentimentDf.select(key.map(col) ++
+      (ids ++ names).map(c => col(c).as(s"ts_$c")) ++ tsCounts.map(col): _*)
+    def zero(c: String): Column = coalesce(col(c), lit(0L)).as(c)
+    perKey.join(ts, key, "left").select(
+      key.map(col) ++
+        ids.map(c => coalesce(col(c), col(s"ts_$c")).as(c)) ++
+        names.map(c => coalesce(col(c), nullif(col(s"ts_$c"), lit("")), lit("")).as(c)) ++
+        Seq("article_positive_count", "article_neutral_count", "article_negative_count",
+          "article_total_count").map(zero) ++
+        Seq(coalesce(col("article_negative_pct"), lit(0).cast("decimal(38,6)"))
+          .as("article_negative_pct")) ++
+        Seq("serp_positive_count", "serp_neutral_count", "serp_negative_count",
+          "serp_total_count", "serp_controlled_count", "serp_uncontrolled_count").map(zero) ++
+        (tsCounts :+ "top_stories_controlled_count").map(zero) ++
+        Seq(greatest(coalesce(col("top_stories_total_count"), lit(0L)) -
           coalesce(col("top_stories_controlled_count"), lit(0L)), lit(0L))
           .as("top_stories_uncontrolled_count"),
-        coalesce(col("crisis_risk_count"), lit(0L)).as("crisis_risk_count"))
+          zero("crisis_risk_count")): _*)
   }
 }

@@ -6,6 +6,7 @@ import graft.api.Api
 import graft.gold.{GoldRefresh, GoldTables, Schemas}
 import graft.views.{EntityAnomalies, EntityDailyMetrics}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, Union, Window}
 import org.apache.spark.sql.functions._
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.{Seconds, Span}
@@ -37,13 +38,13 @@ class ApiSpec extends SparkSpec {
   private lazy val articleMv = GoldTables.articleDailyCounts(camd, ceamd, companies, ceos, cao, ceao)
   private lazy val eff = GoldTables.featureItemsEffective(sfi, sfio, sfuo)
   private lazy val featureMv = GoldTables.serpFeatureSentiment(eff, GoldTables.EntityGrain)
+  private lazy val serpMv = GoldTables.serpDailyCounts(serpRuns, serpResults, sro, companies, ceos)
+  private lazy val featureControlMv = GoldTables.serpFeatureControl(eff, GoldTables.EntityGrain)
+  private lazy val crisisLeg = EntityDailyMetrics.articleCrisis(camd, ceamd, cam, ceam, ceos)
   private lazy val edm = EntityDailyMetrics.build(
-    articleMv,
-    GoldTables.serpDailyCounts(serpRuns, serpResults, sro, companies, ceos),
-    EntityDailyMetrics.articleCrisis(camd, ceamd, cam, ceam, ceos),
+    articleMv, serpMv, crisisLeg,
     EntityDailyMetrics.topStoriesSentiment(featureMv, companies, ceos),
-    EntityDailyMetrics.topStoriesControl(
-      GoldTables.serpFeatureControl(eff, GoldTables.EntityGrain)))
+    EntityDailyMetrics.topStoriesControl(featureControlMv))
 
   /** The fixture gold: all 7 tables written by the gold refresh and read
     * back from parquet, as the endpoints read them in service. */
@@ -156,6 +157,67 @@ class ApiSpec extends SparkSpec {
     assert(Set("news_and_search_negative", "search_negative",
       "news_and_search_uncontrolled", "search_uncontrolled", "news_only", "muted")
       .contains(label))
+  }
+
+  test("entity_daily_metrics: two top-stories names keep two rows; a null-date key keeps no values") {
+    // brand g1 is in no dims table, so its sentiment leg groups by the
+    // items' own names: two rows for one (date, entity_type, entity_id) key,
+    // both kept by the reference's left joins. A serp row with a null date
+    // joins nothing there: its key stays, without the row's values.
+    def ghost(rows: Seq[(String, String, Long, Long, Long, Long)]) = rows
+      .toDF("entity_name", "feature_type", "total_count", "positive_count",
+        "neutral_count", "negative_count")
+      .select(lit("2025-03-01").cast("date").as("date"), lit("brand").as("entity_type"),
+        lit("g1").as("entity_id"), col("*"))
+    val features = featureMv.unionByName(ghost(Seq(
+      ("Ghost Co", "top_stories_items", 3L, 1L, 0L, 2L),
+      ("Ghost Company", "top_stories_items", 2L, 0L, 1L, 1L))))
+    val control = featureControlMv.unionByName(Seq(("Ghost Co", 3L, 1L))
+      .toDF("entity_name", "total_count", "controlled_count")
+      .select(lit("2025-03-01").cast("date").as("date"), lit("brand").as("entity_type"),
+        lit("g1").as("entity_id"), col("entity_name"),
+        lit("top_stories_items").as("feature_type"), col("total_count"),
+        col("controlled_count")))
+    val serp = serpMv.unionByName(serpMv.filter(col("entity_id") === "c1").limit(1)
+      .withColumn("date", lit(null).cast("date")))
+    val got = EntityDailyMetrics.build(articleMv, serp, crisisLeg,
+      EntityDailyMetrics.topStoriesSentiment(features, companies, ceos),
+      EntityDailyMetrics.topStoriesControl(control))
+      .filter(col("entity_id") === "g1" || col("date").isNull)
+      .collect().map(_.toSeq.map(v => if (v == null) "null" else v.toString).mkString("|"))
+      .sorted.toSeq
+    // rows pinned from the reference-shaped key union + five left joins
+    assert(got == Seq(
+      "2025-03-01|brand|g1|g1|null|Ghost Company|Ghost Company||0|0|0|0|0.000000|0|0|0|0|0|0|2|0|1|1|1|1|0",
+      "2025-03-01|brand|g1|g1|null|Ghost Co|Ghost Co||0|0|0|0|0.000000|0|0|0|0|0|0|3|1|0|2|1|2|0",
+      "null|brand|c1|null|null||||0|0|0|0|0.000000|0|0|0|0|0|0|0|0|0|0|0|0|0"))
+  }
+
+  test("entity_daily_metrics plan: one aggregate over the unioned legs, one join above it") {
+    val legs = Seq(articleMv, serpMv, crisisLeg,
+      EntityDailyMetrics.topStoriesSentiment(featureMv, companies, ceos),
+      EntityDailyMetrics.topStoriesControl(featureControlMv)).map(_.localCheckpoint())
+    val plan = EntityDailyMetrics.build(legs(0), legs(1), legs(2), legs(3), legs(4))
+      .queryExecution.optimizedPlan
+    val unions = plan.collect { case u: Union => u }
+    assert(unions.size == 1, s"one union of the legs:\n$plan")
+    val aggs = plan.collect { case a: Aggregate => a }
+    assert(aggs.size == 1 && aggs.head.child.exists(_ eq unions.head),
+      s"one aggregate, over the union:\n$plan")
+    val joins = plan.collect { case j: Join => j }
+    assert(joins.size == 1 && joins.head.left.exists(_ eq aggs.head),
+      s"only the sentiment leg joins, above the aggregate:\n$plan")
+  }
+
+  test("entity_anomalies plan: no union, no more windows than the baseline") {
+    val daily = edm.localCheckpoint()
+    def windows(df: DataFrame) =
+      df.queryExecution.optimizedPlan.collect { case w: Window => w }.size
+    val built = EntityAnomalies.build(daily)
+    val plan = built.queryExecution.optimizedPlan
+    assert(!plan.exists(_.isInstanceOf[Union]), s"rules must not union:\n$plan")
+    assert(windows(built) <= windows(EntityAnomalies.baseline(daily)),
+      s"the baseline must be computed once:\n$plan")
   }
 
   test("anomalies + serpFeatureSeries filters") {
