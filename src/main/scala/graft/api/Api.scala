@@ -1,6 +1,7 @@
 package graft.api
 
 import graft.operators.Rollups.countIf
+import graft.views.EntityDailyMetrics
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -116,7 +117,8 @@ object Api {
     * requested entity. */
   def trendSummary(entityDailyMetrics: DataFrame, entityType: String,
       entityId: String): DataFrame = {
-    val w = Window.partitionBy("entity_id").orderBy(col("date").desc)
+    val w = Window.partitionBy("entity_id")
+      .orderBy(col("date").desc, col(EntityDailyMetrics.dateTieBreak))
     val tagged = entityDailyMetrics
       .filter(entityTypeFilter(col("entity_type"), entityType) &&
         col("entity_id") === entityId)
@@ -400,20 +402,4 @@ object Api {
       Seq(col("feature_type"), col("position").asc_nulls_last, col("sentiment_label")),
       ApiLimits.clampOffset(offset),
       ApiLimits.clampLimit(limit, ApiLimits.FeatureItemsMaxLimit))
-
-  /** `GET /api/v1/processed_serps` (`app.py:2981-3040`): one day's SERP
-    * result rows ordered (entity name, rank), paginated with the 1000-row
-    * cap. `serpRows` carries the run-date join already applied (gold grain). */
-  def processedSerps(
-      serpRows: DataFrame,
-      onDate: Column,
-      entityType: String,
-      limit: Int = 200,
-      offset: Int = 0): DataFrame =
-    graft.operators.Windows.paginate(
-      serpRows.filter(entityTypeFilter(col("entity_type"), entityType) &&
-        col("date") === onDate),
-      Seq(col("entity_name"), col("rank")),
-      ApiLimits.clampOffset(offset),
-      ApiLimits.clampLimit(limit, ApiLimits.ArticlesMaxLimit))
 }

@@ -72,66 +72,6 @@ object Insights {
     }
   }
 
-  // -------------------------------------------------------- narrative rows
-
-  /** `fetch_negative_top_stories_narrative_rows` (`app.py:1742-1830`):
-    * tagged crisis-event days joined to the entity dims — the input grain
-    * for both aggregation endpoints. Company flavor joins companies on
-    * entity_id; ceo flavor hops ceo→company for sector/scope. */
-  def negativeNarrativeRows(
-      entityCrisisEventDaily: DataFrame,
-      companies: DataFrame,
-      ceos: DataFrame,
-      entityType: String,
-      startDate: Column,
-      endDate: Column,
-      sectorContains: Option[String] = None,
-      scopeCompanyIds: Option[Seq[String]] = None): DataFrame = {
-    val base = entityCrisisEventDaily
-      .filter(col("date").between(startDate, endDate))
-      .filter(Api.entityTypeFilter(col("entity_type"), entityType))
-      .filter(col("primary_tag").isNotNull)
-    val joined =
-      if (entityType == "ceo") {
-        base
-          .join(broadcast(ceos.select(col("id").as("__ceo_id"),
-            col("name").as("__ceo_name"), col("company_id").as("__cid"))),
-            col("entity_id") === col("__ceo_id"))
-          .join(broadcast(companies.select(col("id").as("__c_id"),
-            col("name").as("__c_name"), col("sector").as("__sector"))),
-            col("__cid") === col("__c_id"))
-          .withColumn("__entity_name", col("__ceo_name"))
-          .withColumn("__company", col("__c_name"))
-          .withColumn("__ceo", col("__ceo_name"))
-      } else {
-        base
-          .join(broadcast(companies.select(col("id").as("__c_id"),
-            col("name").as("__c_name"), col("sector").as("__sector"))),
-            col("entity_id") === col("__c_id"))
-          .withColumn("__cid", col("__c_id"))
-          .withColumn("__entity_name", col("__c_name"))
-          .withColumn("__company", col("__c_name"))
-          .withColumn("__ceo", lit(""))
-      }
-    val sectorFiltered = sectorContains match {
-      case Some(s) => joined.filter(lower(coalesce(col("__sector"), lit("")))
-        .contains(s.toLowerCase(java.util.Locale.ROOT)))
-      case None => joined
-    }
-    val scoped = scopeCompanyIds match {
-      case Some(ids) => sectorFiltered.filter(col("__cid").isin(ids: _*))
-      case None => sectorFiltered
-    }
-    scoped.select(
-      col("date"), col("__cid").as("company_id"), col("entity_id"),
-      col("__entity_name").as("entity_name"), col("__company").as("company"),
-      col("__ceo").as("ceo"), coalesce(col("__sector"), lit("")).as("sector"),
-      col("primary_tag").as("narrative_primary_tag"),
-      col("primary_group").as("narrative_primary_group"),
-      col("is_crisis").as("narrative_is_crisis"),
-      col("supporting_negative_items").as("negative_item_count"))
-  }
-
   /** `narrative_group_for_tag`'s endpoint-inline variant (`app.py:4700-4709`):
     * trust a well-formed group, else the fixed non-crisis vocabulary, else
     * the row's is_crisis flag, else whatever the row carried. */

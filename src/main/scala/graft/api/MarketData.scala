@@ -3,8 +3,8 @@ package graft.api
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Chart-feed + dim readers: `GET /api/v1/stock_data`, `/api/v1/trends_data`
-  * (`dashboard_app/app.py:6742-6920,5107-5136`), `GET /api/dates`
+/** Chart-feed + dim readers: `GET /api/v1/stock_data`
+  * (`dashboard_app/app.py:6742-6840,5107-5136`), `GET /api/dates`
   * (`app.py:2737-2752`) and `GET /api/v1/boards` (`app.py:5083-5105`).
   *
   * The reference's Python assembles per-company history arrays in a dict
@@ -80,43 +80,6 @@ object MarketData {
         col("price_history"), col("date_history"),
         coalesce(col("last_updated").cast("string"), lit("")).as("last_updated"))
       .orderBy(col("ticker"))
-  }
-
-  /** `build_trends_rows` (`app.py:6840-6920`): the trends flavor — interest
-    * snapshots + 120-day interest history. */
-  def trendsData(
-      trendsSnapshots: DataFrame,
-      trendsDaily: DataFrame,
-      companies: DataFrame,
-      target: Column,
-      scopeCompanyIds: Option[Seq[String]] = None): DataFrame = {
-    val snaps = scopeByCompany(trendsSnapshots, companies, scopeCompanyIds)
-      .withColumn("__snap_date", col("last_updated").cast("date"))
-    val hist = scopeByCompany(trendsDaily, companies, scopeCompanyIds)
-
-    val eff = snaps.filter(col("__snap_date") <= target)
-      .agg(max(col("__snap_date")).as("__eff"))
-
-    val series = hist
-      .crossJoin(broadcast(eff))
-      .filter(col("date").between(date_sub(col("__eff"), 120), col("__eff")))
-      .groupBy(col("company"))
-      .agg(array_sort(collect_list(struct(col("date"), col("interest")))).as("__s"))
-      .select(col("company"),
-        transform(col("__s"), s => s.getField("interest")).as("interest_history"),
-        transform(col("__s"), s => s.getField("date").cast("string")).as("date_history"))
-
-    snaps.crossJoin(broadcast(eff))
-      .filter(col("__snap_date") === col("__eff"))
-      .join(series, Seq("company"), "left")
-      .withColumn("interest_history",
-        coalesce(col("interest_history"), array().cast("array<int>")))
-      .withColumn("date_history",
-        coalesce(col("date_history"), array().cast("array<string>")))
-      .select(col("company"), col("avg_interest"),
-        col("interest_history"), col("date_history"),
-        coalesce(col("last_updated").cast("string"), lit("")).as("last_updated"))
-      .orderBy(col("company"))
   }
 
   /** `GET /api/dates` (`app.py:2737-2752`): distinct mention dates,

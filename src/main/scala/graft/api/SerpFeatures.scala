@@ -82,7 +82,6 @@ object SerpFeatures {
 
   private val featureCounts =
     Seq("total_count", "positive_count", "neutral_count", "negative_count")
-  private val controlCounts = Seq("total_count", "controlled_count")
 
   /** `GET /api/v1/serp_features` (`app.py:3105-3239`), entity mode: rows
     * from `serp_feature_daily_mv` at (date, entity, feature_type) grain. */
@@ -108,27 +107,4 @@ object SerpFeatures {
       onDate: Option[String] = None,
       asOf: Column = current_date()): DataFrame =
     indexRead(serpFeatureDailyIndexMv, featureCounts, entityType, days, onDate, asOf)
-
-  /** `GET /api/v1/serp_feature_controls` (`app.py:3241-3352`), entity mode:
-    * control coverage per (date, entity, feature_type). */
-  def serpFeatureControls(
-      serpFeatureControlDailyMv: DataFrame,
-      entityType: String,
-      days: Int = 90,
-      onDate: Option[String] = None,
-      entityName: Option[String] = None,
-      scopeCompanyIds: Option[Seq[String]] = None,
-      ceos: Option[DataFrame] = None,
-      asOf: Column = current_date()): DataFrame =
-    entityRead(serpFeatureControlDailyMv, controlCounts, entityType, days, onDate,
-      entityName, None, scopeCompanyIds, ceos, asOf)
-
-  /** `serp_feature_controls?mode=index` (`app.py:3257-3273`). */
-  def serpFeatureControlsIndex(
-      serpFeatureControlDailyIndexMv: DataFrame,
-      entityType: String,
-      days: Int = 90,
-      onDate: Option[String] = None,
-      asOf: Column = current_date()): DataFrame =
-    indexRead(serpFeatureControlDailyIndexMv, controlCounts, entityType, days, onDate, asOf)
 }

@@ -225,5 +225,4 @@ object TextLookup {
   }
 
   val seqRatioUdf = udf(sequenceMatcherRatio _)
-  val normalizeLookupUdf = udf((s: String) => normalizeLookupText(s))
 }

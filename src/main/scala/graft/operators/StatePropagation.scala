@@ -54,7 +54,6 @@ object StatePropagation {
     val contIdx = inSchema.fieldIndex(continueCol)
 
     val keyEnc = Encoders.STRING
-    val rowEnc = RowEncoder.encoderFor(inSchema)
     val outEnc = RowEncoder.encoderFor(outSchema)
 
     df.groupByKey(r => keyIdx.map(i => String.valueOf(r.get(i))).mkString(""))(keyEnc)

@@ -22,15 +22,22 @@ import org.apache.spark.sql.functions._
   */
 object Windows {
 
-  /** `partition by keys order by ord rows between -(n-1) and current` —
-    * trailing window of the last `n` observations including current (W1). */
-  def trailing(keys: Seq[String], ord: String, n: Int): WindowSpec =
-    Window.partitionBy(keys.map(col): _*).orderBy(col(ord)).rowsBetween(-(n - 1), 0)
+  /** `partition by keys order by ord, tieBreak… rows between -(n-1) and
+    * current` — trailing window of the last `n` observations including
+    * current (W1). A ROWS frame takes its neighbours in sort order, so
+    * `ord` plus `tieBreak` must order a partition totally: rows that tie
+    * fall into each other's frames in whatever order they arrive. */
+  def trailing(keys: Seq[String], ord: String, n: Int, tieBreak: String*): WindowSpec =
+    Window.partitionBy(keys.map(col): _*).orderBy((ord +: tieBreak).map(col): _*)
+      .rowsBetween(-(n - 1), 0)
 
   /** `rows between `lo` preceding and `hi` preceding` — strictly-prior frame
-    * for baselines (W2: lo=30 hi=1; W3 variants: 7/1 and 30/8). */
-  def priorFrame(keys: Seq[String], ord: String, lo: Int, hi: Int): WindowSpec =
-    Window.partitionBy(keys.map(col): _*).orderBy(col(ord)).rowsBetween(-lo, -hi)
+    * for baselines (W2: lo=30 hi=1; W3 variants: 7/1 and 30/8); the order
+    * must be total, as for [[trailing]]. */
+  def priorFrame(keys: Seq[String], ord: String, lo: Int, hi: Int,
+      tieBreak: String*): WindowSpec =
+    Window.partitionBy(keys.map(col): _*).orderBy((ord +: tieBreak).map(col): _*)
+      .rowsBetween(-lo, -hi)
 
   /** Gaps-and-islands over a date column (W7): assigns an `episode` id that
     * increments whenever the day-gap to the previous row (per key) exceeds 1.

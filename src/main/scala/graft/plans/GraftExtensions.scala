@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
 import org.apache.spark.sql.functions.call_function
 
 /** Session extensions for graft's native expressions.
@@ -15,74 +15,35 @@ import org.apache.spark.sql.functions.call_function
   *    vanilla session still gets the codegen'd path.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      (children: Seq[Expression]) => CosineSimilarity(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_md5h60"),
-      new ExpressionInfo(classOf[Md5Hash60].getName, "graft_md5h60"),
-      (children: Seq[Expression]) => Md5Hash60(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_nearest_centroid"),
-      new ExpressionInfo(classOf[NearestCentroid].getName, "graft_nearest_centroid"),
-      (children: Seq[Expression]) => NearestCentroid(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_sorted_intersect"),
-      new ExpressionInfo(classOf[SortedIntersectCount].getName, "graft_sorted_intersect"),
-      (children: Seq[Expression]) => SortedIntersectCount(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot_long"),
-      new ExpressionInfo(classOf[DotLong].getName, "graft_dot_long"),
-      (children: Seq[Expression]) => DotLong(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "graft_bloom_might_contain"),
-      (children: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          children(0), children(1))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { case (name, cls, make) =>
+      ext.injectFunction(
+        (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), make))
+    }
 }
 
 object GraftExtensions {
 
+  /** Every native function as `(name, expression class, constructor)`: the one
+    * table both registration paths read. */
+  private val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("graft_cosine", classOf[CosineSimilarity],
+      c => CosineSimilarity(c(0), c(1))),
+    ("graft_md5h60", classOf[Md5Hash60], c => Md5Hash60(c.head)),
+    ("graft_nearest_centroid", classOf[NearestCentroid],
+      c => NearestCentroid(c(0), c(1))),
+    ("graft_sorted_intersect", classOf[SortedIntersectCount],
+      c => SortedIntersectCount(c(0), c(1))),
+    ("graft_dot_long", classOf[DotLong], c => DotLong(c(0), c(1))),
+    ("graft_bloom_might_contain", classOf[BloomFilterMightContain],
+      c => BloomFilterMightContain(c(0), c(1))))
+
   /** Idempotently register graft functions on an existing session. */
   def ensureRegistered(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier("graft_cosine"))) {
-      registry.createOrReplaceTempFunction("graft_cosine",
-        (children: Seq[Expression]) => CosineSimilarity(children(0), children(1)),
-        "built-in")
-    }
-    if (!registry.functionExists(FunctionIdentifier("graft_md5h60"))) {
-      registry.createOrReplaceTempFunction("graft_md5h60",
-        (children: Seq[Expression]) => Md5Hash60(children.head),
-        "built-in")
-    }
-    if (!registry.functionExists(FunctionIdentifier("graft_nearest_centroid"))) {
-      registry.createOrReplaceTempFunction("graft_nearest_centroid",
-        (children: Seq[Expression]) => NearestCentroid(children(0), children(1)),
-        "built-in")
-    }
-    if (!registry.functionExists(FunctionIdentifier("graft_sorted_intersect"))) {
-      registry.createOrReplaceTempFunction("graft_sorted_intersect",
-        (children: Seq[Expression]) => SortedIntersectCount(children(0), children(1)),
-        "built-in")
-    }
-    if (!registry.functionExists(FunctionIdentifier("graft_dot_long"))) {
-      registry.createOrReplaceTempFunction("graft_dot_long",
-        (children: Seq[Expression]) => DotLong(children(0), children(1)),
-        "built-in")
-    }
-    if (!registry.functionExists(FunctionIdentifier("graft_bloom_might_contain"))) {
-      registry.createOrReplaceTempFunction("graft_bloom_might_contain",
-        (children: Seq[Expression]) =>
-          org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-            children(0), children(1)),
-        "built-in")
+    functions.foreach { case (name, _, make) =>
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, make, "built-in")
     }
   }
 

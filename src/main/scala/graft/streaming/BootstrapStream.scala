@@ -1,27 +1,23 @@
 package graft.streaming
 
 import graft.operators.Bootstrap
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** Continuous uncertainty monitoring — the streaming face of
   * [[Bootstrap.poissonReplicateMeans]]: every micro-batch folds its rows'
   * deterministic Poisson(1) replicate weights into a log-structured
-  * moment store (append-only parquet of
-  * `(group, replicate, sw, n, batch_id)` — the [[MaintenanceStream]]
-  * posture), and the replicate means/CI of the WHOLE stream so far are a
+  * moment store (parquet of `(group, replicate, sw, n)` per batch — the
+  * [[MaintenanceStream]] posture), and the replicate means/CI of the
+  * WHOLE stream so far are a
   * pure read of the store. This works because Poisson bootstrap moments
   * are MERGEABLE: each row's weight depends only on its id hash, so
   * per-batch partial sums add associatively — the one property classic
   * resampling lacks and the reason this is the streaming bootstrap.
   *
-  * foreachBatch is at-least-once, so store rows stamp batch_id and every
-  * read first collapses to one row per (group, replicate, batch_id) — a
-  * replayed append is literally the same row again (weights are
-  * deterministic), so the collapse makes the log idempotent (the
-  * MaintenanceStream replay lesson, applied at write-shape design time
-  * rather than as a retrofit).
+  * foreachBatch is at-least-once; the store is a [[BatchStore]] root, so a
+  * replayed batch overwrites its own partial sums instead of adding them
+  * twice.
   *
   * Parity contract (pinned in StreamingSpec): after all batches,
   * [[currentMeans]] equals the one-shot
@@ -39,35 +35,17 @@ object BootstrapStream {
     if (batch.isEmpty) return
     // the same hash→affine→threshold weights as the batch operator, so
     // the store's partial sums are bit-compatible with a one-shot run
-    Bootstrap.poissonReplicateSums(batch, idCol, valueCol, groupCol, b)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("append").parquet(storePath)
+    BatchStore.write(
+      Bootstrap.poissonReplicateSums(batch, idCol, valueCol, groupCol, b),
+      storePath, batchId.toString)
   }
 
-  /** Replicate means of everything ingested so far: replay-deduped
-    * (one row per (group, replicate, batch_id)), then the exact integer
-    * partial sums merge and divide once. The ONLY correct way to read
-    * the store (raw sums over-count on a crashed-then-replayed batch). */
+  /** Replicate means of everything ingested so far: the exact integer
+    * partial sums merge and divide once. */
   def currentMeans(log: DataFrame, groupCol: String): DataFrame =
     log
-      .groupBy(col(groupCol), col("replicate"), col("batch_id"))
-      .agg(first(col("sw")).as("sw"), first(col("n")).as("n"))
       .groupBy(col(groupCol), col("replicate"))
       .agg(sum(col("sw")).as("__sw"), sum(col("n")).as("__n"))
       .select(col(groupCol), col("replicate"),
         (col("__sw").cast("double") / col("__n").cast("double")).as("mean"))
-
-  def writer(
-      facts: DataFrame,
-      storePath: String,
-      checkpoint: String,
-      idCol: String,
-      valueCol: String,
-      groupCol: String,
-      b: Int,
-      trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    facts.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(processBatch(storePath, idCol, valueCol, groupCol, b) _)
 }

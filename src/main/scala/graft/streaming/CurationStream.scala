@@ -1,8 +1,7 @@
 package graft.streaming
 
 import graft.pipeline.CurationPipeline
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.DataFrame
 
 /** Continuous-ingest face of the curation pipeline: each micro-batch runs
   * the full [[graft.pipeline.CurationPipeline.runBatch]] chain (scrub →
@@ -11,7 +10,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   *
   * The pipeline's restartability contract IS the streaming exactly-once
   * story: batch ids derive from the checkpointed micro-batch id, every
-  * write lands in a batch-owned `batch=<id>/` partition, and the manifest
+  * write lands in a [[BatchStore]] batch-owned partition, and the manifest
   * commit marker makes a replayed micro-batch (failure between sink write
   * and checkpoint advance) a no-op skip instead of a duplicate append. A
   * stream and an offline job can even ALTERNATE on one base dir — state
@@ -36,18 +35,6 @@ object CurationStream {
     ()
   }
 
-  /** Streaming writer wiring [[processBatch]]. */
-  def writer(
-      docs: DataFrame,
-      cfg: CurationPipeline.Config,
-      checkpoint: String,
-      prefix: String = "s",
-      trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    docs.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(processBatch(cfg, prefix) _)
-
   /** MEDIA twin of [[processBatch]]: each micro-batch of media payloads
     * runs the full [[graft.pipeline.CurationPipeline.runMediaBatch]]
     * chain (real-codec decode → perceptual fingerprint → band-store
@@ -62,17 +49,4 @@ object CurationStream {
       batch.sparkSession, batch, batchId(prefix, id), cfg)
     ()
   }
-
-  /** Streaming writer wiring [[processMediaBatch]] — input rows carry
-    * `(media_id, payload binary)`. */
-  def mediaWriter(
-      media: DataFrame,
-      cfg: CurationPipeline.Config,
-      checkpoint: String,
-      prefix: String = "s",
-      trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    media.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(processMediaBatch(cfg, prefix) _)
 }

@@ -2,13 +2,11 @@ package graft.streaming
 
 import graft.operators.Dedup
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
-import org.apache.spark.sql.Row
 
 /** Continuous-ingest near-dup detection: each micro-batch of documents is
   * hashed once, probed against the accumulated signature store
   * ([[graft.operators.Dedup.minhashBandTable]] rows persisted as parquet),
-  * and appended to it — so every candidate pair is emitted exactly once,
+  * and added to it — so every candidate pair is emitted exactly once,
   * when its LATER document arrives, and the corpus is never re-hashed.
   *
   * This is the streaming face of `Dedup.minhashIncrementalPairs`; the
@@ -17,10 +15,10 @@ import org.apache.spark.sql.Row
   * not in Spark streaming state — restarts resume from the store, and the
   * store doubles as the batch-side signature table for offline jobs.
   *
-  * At scale the store is partitioned/bucketed by band key so the
-  * touched-bucket probe becomes partition pruning; the checkpoint dir
-  * gives exactly-once batch tracking (a replayed batch re-emits its pairs
-  * — dedupe downstream on (id_a, id_b) or write pairs to a keyed sink).
+  * Store and pairs are [[BatchStore]] roots: a replayed batch reads the
+  * store without its own partition and overwrites its own store and pairs
+  * partitions, so a replay emits no pair twice. At scale the store is
+  * bucketed by band key so the touched-bucket probe becomes pruning.
   */
 object DedupStream {
 
@@ -35,37 +33,14 @@ object DedupStream {
       maxBucket: Int = 1000,
       portable: Boolean = true)(batch: DataFrame, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    val spark = batch.sparkSession
+    val id = batchId.toString
     val newBand = Dedup.minhashBandTable(batch, idCol, textCol,
       shingleSize, numHashes, rowsPerBand, portable).persist()
     try {
-      // Hadoop FileSystem resolution (not java.io.File): on HDFS/S3 a
-      // local-file check is always false and would silently reset the
-      // store to empty every batch (the SpanScreenStream fix, same bug)
-      val storeHPath = new org.apache.hadoop.fs.Path(storePath)
-      val storeFs = storeHPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val store =
-        if (storeFs.exists(storeHPath)) spark.read.parquet(storePath)
-        else newBand.limit(0)
-      Dedup.minhashIncrementalPairs(newBand, store, numHashes, maxBucket)
-        .write.mode("append").parquet(pairsPath)
-      newBand.write.mode("append").parquet(storePath)
+      val store = BatchStore.readExcept(batch.sparkSession, storePath, id, newBand)
+      BatchStore.write(
+        Dedup.minhashIncrementalPairs(newBand, store, numHashes, maxBucket), pairsPath, id)
+      BatchStore.write(newBand, storePath, id)
     } finally newBand.unpersist(blocking = false)
   }
-
-  /** Streaming writer wiring [[processBatch]]. Available-now by default
-    * (the scheduled-drop ingest shape); pass a continuous trigger for a
-    * long-lived query. */
-  def writer(
-      docs: DataFrame,
-      storePath: String,
-      pairsPath: String,
-      checkpoint: String,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    docs.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(processBatch(storePath, pairsPath, idCol, textCol) _)
 }

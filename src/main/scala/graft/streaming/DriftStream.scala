@@ -1,14 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** Continuous distribution-drift monitoring — the streaming face of
   * [[graft.operators.Drift.ksTwoSample]]: a frozen BASELINE distribution
   * (its value-grain counts, persisted once — e.g. the distribution the
   * quality gates were tuned on) is probed by every incoming drop; each
-  * micro-batch appends one (epoch, n_batch, ks_ppm) row to the metrics
+  * micro-batch writes one (epoch, n_batch, ks_ppm) row to the metrics
   * sink the moment the drop lands. The alarm wire for "this crawl looks
   * nothing like what the pipeline was calibrated for" — BEFORE the drop
   * is mixed in.
@@ -19,8 +18,9 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   * it (unlike pooled statistics, no telescoping argument is needed).
   * State: the baseline parquet is written once if absent (from the
   * FIRST batch, the self-calibrating mode) or pre-seeded by the caller;
-  * restarts re-read it — the DedupStream posture. Multi-epoch batches
-  * emit one row per contained epoch. */
+  * restarts re-read it. The metrics sink is a [[BatchStore]] root, so a
+  * replayed batch writes its rows once. Multi-epoch batches emit one row
+  * per contained epoch. */
 object DriftStream {
 
   /** Persist `df`'s value-grain counts as a baseline (idempotent
@@ -37,35 +37,20 @@ object DriftStream {
       valCol: String)(batch: DataFrame, batchId: Long): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
-    val basePath = new org.apache.hadoop.fs.Path(baselinePath)
-    val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(basePath)) {
+    if (!BatchStore.exists(spark, baselinePath)) {
       // self-calibrating mode: the first drop ever seen IS the baseline
       DriftStream.writeBaseline(batch, valCol, baselinePath)
     }
     val baseline = spark.read.parquet(baselinePath)
     val epochs = batch.select(col(epochCol).cast("long").as("__ep"))
       .distinct().collect().map(_.getLong(0)).sorted
-    for (ep <- epochs) {
+    val rows = epochs.toSeq.map { ep =>
       val epGrain = batch.filter(col(epochCol).cast("long") === ep)
         .groupBy(col(valCol).cast("long").as("v"))
         .agg(count(lit(1)).as("c"))
       graft.operators.Drift.ksTwoSampleGrains(epGrain, baseline)
         .select(lit(ep).as("epoch"), col("n_a").as("n_batch"), col("ks_ppm"))
-        .write.mode("append").parquet(metricsPath)
     }
+    BatchStore.write(rows.reduce(_ unionByName _), metricsPath, batchId.toString)
   }
-
-  def writer(
-      rows: DataFrame,
-      baselinePath: String,
-      metricsPath: String,
-      checkpoint: String,
-      epochCol: String,
-      valCol: String,
-      trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    rows.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(processBatch(baselinePath, metricsPath, epochCol, valCol) _)
 }

@@ -1,15 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** Continuous persistent-heavy-hitter monitoring — the streaming face of
   * [[graft.operators.HeavyHitters.persistentHitters]] (q148): each
   * micro-batch (one epoch's events, or several) is reduced to its exact
   * per-epoch top-k (count desc, key asc — the batch operator's total
-  * order) and appended to a leaderboard store; the store holds ≤ k rows
+  * order) and written to a leaderboard store; the store holds ≤ k rows
   * per epoch ever seen, so the survivor rollup ("hot on ≥ m epochs —
   * salt this key permanently") is a tiny store-side aggregate available
   * the moment a drop lands, not in a nightly batch.
@@ -18,8 +17,8 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   * in any batching, any order, each epoch delivered exactly once —
   * then rolling up the store yields exactly the batch operator's rows,
   * because the per-epoch top-k depends only on that epoch's own counts.
-  * State lives in the store parquet (the DedupStream/NoveltyStream
-  * posture — restarts resume from it); the store grows by ≤ k rows per
+  * The store is a [[BatchStore]] root — restarts resume from it, and a
+  * replayed batch cannot count its epochs twice; it grows by ≤ k rows per
   * epoch, epochs-grain, never events-grain. */
 object HittersStream {
 
@@ -30,37 +29,24 @@ object HittersStream {
       k: Int)(batch: DataFrame, batchId: Long): Unit = {
     if (batch.isEmpty) return
     val w = Window.partitionBy("epoch").orderBy(col("__cnt").desc, col("key").asc)
-    batch
+    BatchStore.write(batch
       .groupBy(col(epochCol).cast("long").as("epoch"), col(keyCol).as("key"))
       .agg(count(lit(1)).as("__cnt"))
       .withColumn("__rank", row_number().over(w))
       .filter(col("__rank") <= k)
       .select(col("epoch"), col("key"),
-        col("__rank").cast("long").as("rank"), col("__cnt").as("cnt"))
-      .write.mode("append").parquet(storePath)
+        col("__rank").cast("long").as("rank"), col("__cnt").as("cnt")),
+      storePath, batchId.toString)
   }
 
   /** Survivor rollup over the leaderboard store — equals the batch
     * [[graft.operators.HeavyHitters.persistentHitters]] output once all
     * epochs are ingested. */
   def survivors(spark: SparkSession, storePath: String, minEpochs: Int): DataFrame =
-    spark.read.parquet(storePath)
+    BatchStore.read(spark, storePath)
       .groupBy(col("key"))
       .agg(count(lit(1)).as("n_epochs_top"),
         min(col("rank")).as("best_rank"),
         max(col("cnt")).as("max_cnt"))
       .filter(col("n_epochs_top") >= minEpochs)
-
-  def writer(
-      events: DataFrame,
-      storePath: String,
-      checkpoint: String,
-      epochCol: String,
-      keyCol: String,
-      k: Int,
-      trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    events.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(processBatch(storePath, epochCol, keyCol, k) _)
 }

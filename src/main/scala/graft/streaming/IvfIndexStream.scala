@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import graft.operators.Similarity
 
 /** Persisted, incrementally-appendable IVF index — the similarity-search
@@ -15,9 +14,9 @@ import graft.operators.Similarity
   *     [[buildCodebook]] time. The standard IVF contract: assignments
   *     are only comparable under one codebook, so drift is handled by
   *     an offline retrain + reindex, never by mutating a live codebook.
-  *   - `postings/batch=<id>/bucket=<b>/` — `(id, vec)` rows. Batch-owned
-  *     partitions make replays idempotent (the CurationPipeline
-  *     posture); the nested bucket partition means a probe with
+  *   - `postings/batch=<id>/bucket=<b>/` — `(id, vec)` rows. A
+  *     [[BatchStore]] root, so replays are idempotent; the nested bucket
+  *     partition means a probe with
   *     `nprobe` buckets reads exactly those directories — partition
   *     pruning IS the index at the storage layer.
   *
@@ -73,25 +72,16 @@ object IvfIndexStream {
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
       .withColumn("bucket",
         Similarity.nearestCentroid(spark, col("vec"), cents))
-    val rootPath = new org.apache.hadoop.fs.Path(postingsRoot)
-    val rootExists = rootPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration).exists(rootPath)
-    val fresh =
-      if (rootExists) {
-        val seen = spark.read.parquet(postingsRoot)
-          .filter(col("batch").cast("string") =!= batchId.toString)
-          .select("id")
-        assigned.join(seen, Seq("id"), "left_anti")
-      } else assigned
+    val id = batchId.toString
+    val seen = BatchStore.readExcept(spark, postingsRoot, id, assigned).select("id")
+    val fresh = assigned.join(seen, Seq("id"), "left_anti")
     // cluster by bucket before the partitioned write: without the shuffle
     // every scan task emits one file per bucket it touches (tasks × nlist
     // files per batch — the classic small-files write); hash-clustered,
     // each bucket lands in exactly one task → ≤ nlist files per batch,
     // and the probe's partition-pruned reads open one file per (batch,
     // bucket). Row content unchanged.
-    fresh.repartition(col("bucket")).write.mode("overwrite")
-      .partitionBy("bucket")
-      .parquet(s"$postingsRoot/batch=$batchId")
+    BatchStore.write(fresh.repartition(col("bucket")), postingsRoot, id, "bucket")
   }
 
   /** Probe the store: top-k cosine neighbors per query row over the
@@ -108,7 +98,7 @@ object IvfIndexStream {
       nprobe: Int = 4): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val cents = codebook(spark, storePath)
-    val postings = spark.read.parquet(s"$storePath/postings")
+    val postings = BatchStore.read(spark, s"$storePath/postings")
       .select(col("id").as("neighbor_id"), col("vec"),
         col("bucket").cast("int").as("bucket"))
     val probes = queries
@@ -124,16 +114,4 @@ object IvfIndexStream {
       .orderBy(col("cos").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
-
-  def writer(
-      embeddings: DataFrame,
-      storePath: String,
-      checkpoint: String,
-      idCol: String,
-      vecCol: String,
-      trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    embeddings.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(processBatch(storePath, idCol, vecCol) _)
 }

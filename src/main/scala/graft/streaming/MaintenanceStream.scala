@@ -1,25 +1,20 @@
 package graft.streaming
 
 import graft.operators.ViewMaintenance
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** Continuous materialized-view maintenance — the streaming face of
   * [[graft.operators.ViewMaintenance.countDelta]]: each micro-batch of
-  * facts emits delta rows (old_n → new_n per touched group) to a change
-  * sink the moment it lands, and appends its per-group contributions to a
-  * LOG-STRUCTURED count store (append-only parquet of
-  * (keys, add_n, batch_id) — the DedupStream store posture, so restarts
-  * resume from the store and a replayed batch re-appends
-  * idempotently-compactable rows rather than corrupting a mutable
-  * table). foreachBatch is at-least-once, so BOTH sinks stamp batch_id:
-  * a crash between the two writes and the checkpoint commit replays the
-  * batch, and every read of the log first collapses to one row per
-  * (keys, batch_id) — a replayed append is literally the same row again,
-  * so the collapse makes the log idempotent. The current view at any
-  * moment is `sum(add_n)` over the deduped log — compaction is an
-  * offline concern, exactly like an LSM level merge.
+  * facts emits delta rows (old_n → new_n per touched group, stamped with
+  * batch_id) to a change sink the moment it lands, and writes its
+  * per-group contributions to a LOG-STRUCTURED count store (parquet of
+  * (keys, add_n) per batch). Both sinks are [[BatchStore]] roots, so
+  * restarts resume from the store and a batch replayed after a crash
+  * between the two writes and the checkpoint commit overwrites its own
+  * rows instead of counting twice. The current view at any moment is
+  * `sum(add_n)` over the log — compaction is an offline concern, exactly
+  * like an LSM level merge.
   *
   * Parity contract (pinned in StreamingSpec): after all batches, the
   * store's summed counts equal the one-shot batch aggregate, and the
@@ -32,49 +27,20 @@ object MaintenanceStream {
       deltasPath: String,
       keyCols: Seq[String])(batch: DataFrame, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    val storeHPath = new org.apache.hadoop.fs.Path(storePath)
-    val storeFs = storeHPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val emptyStore = batch
-      .groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("add_n"))
-      .withColumn("batch_id", lit(batchId))
-      .limit(0)
-    val log =
-      if (storeFs.exists(storeHPath)) spark.read.parquet(storePath)
-      else emptyStore
-    // At-least-once replay guard: a batch writes exactly one store row
-    // per key, so collapsing to one row per (keys, batch_id) before the
-    // sum makes a re-appended batch a no-op (first == the only value).
+    val id = batchId.toString
+    val log = BatchStore.readExcept(batch.sparkSession, storePath, id,
+      batch.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("add_n")))
     val current = currentView(log, keyCols)
       .withColumnRenamed("n", "old_n")
     val delta = ViewMaintenance.countDelta(current, batch, keyCols)
       .withColumn("batch_id", lit(batchId))
-    delta.write.mode("append").parquet(deltasPath)
-    delta.select((keyCols.map(col) :+ col("delta_n").as("add_n")
-      :+ col("batch_id")): _*)
-      .write.mode("append").parquet(storePath)
+    BatchStore.write(delta, deltasPath, id)
+    BatchStore.write(
+      delta.select((keyCols.map(col) :+ col("delta_n").as("add_n")): _*),
+      storePath, id)
   }
 
-  /** The materialized view as of the log's tail: replay-deduped
-    * (one row per (keys, batch_id)) then summed. This is the ONLY
-    * correct way to read the store — raw `sum(add_n)` over-counts if a
-    * crashed-then-replayed micro-batch appended twice. */
+  /** The materialized view as of the log's tail: `add_n` summed per key. */
   def currentView(log: DataFrame, keyCols: Seq[String]): DataFrame =
-    log
-      .groupBy((keyCols.map(col) :+ col("batch_id")): _*)
-      .agg(first(col("add_n")).as("add_n"))
-      .groupBy(keyCols.map(col): _*)
-      .agg(sum(col("add_n")).as("n"))
-
-  def writer(
-      facts: DataFrame,
-      storePath: String,
-      deltasPath: String,
-      checkpoint: String,
-      keyCols: Seq[String],
-      trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    facts.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(processBatch(storePath, deltasPath, keyCols) _)
+    log.groupBy(keyCols.map(col): _*).agg(sum(col("add_n")).as("n"))
 }

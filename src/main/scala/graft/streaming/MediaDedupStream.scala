@@ -3,9 +3,6 @@ package graft.streaming
 import graft.multimodal.Multimodal
 import graft.operators.Dedup
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
-import org.apache.spark.sql.Row
 
 /** Continuous-ingest PERCEPTUAL media dedup — the multimodal face of
   * [[DedupStream]]: each micro-batch of media payloads is decoded ONCE
@@ -13,7 +10,7 @@ import org.apache.spark.sql.Row
   * image rows this stream fingerprints), the fingerprints probe the
   * accumulated band store, near-dup pairs (exact Hamming ≤ `maxHamming`)
   * are emitted exactly once — when the LATER asset arrives — and the new
-  * fingerprints append to the store. The corpus is never re-decoded: the
+  * fingerprints join the store. The corpus is never re-decoded: the
   * store carries fingerprints, not payloads, so a 100 TB media corpus
   * reduces to a few GB of band rows.
   *
@@ -24,49 +21,12 @@ import org.apache.spark.sql.Row
   * table. At scale, partition the store by band key so the touched-bucket
   * probe becomes partition pruning.
   *
-  * Exactly-once via batch-OWNED partitions (the CurationPipeline
-  * contract): both the store and pairs roots are written as
-  * `batch=<id>/` subdirectories a batch overwrites whole, and the store
-  * probe EXCLUDES the running batch's own partition — so a batch replayed
-  * after a crash between the two writes overwrites its own partial output
-  * instead of appending duplicate band rows (which would emit duplicate
-  * pairs in later batches and double-count toward the maxBucket flood
-  * cap) and the on-disk state after replay is byte-identical to a
-  * crash-free run. */
+  * Exactly-once via [[BatchStore]]'s batch-owned partitions: a batch
+  * replayed after a crash between the two writes overwrites its own
+  * partial output instead of adding duplicate band rows (which would emit
+  * duplicate pairs in later batches and double-count toward the maxBucket
+  * flood cap). */
 object MediaDedupStream {
-
-  /** One-time layout migration for flat (append-era) stores: move any
-    * data files sitting DIRECTLY under the store root into a
-    * `batch=legacy` partition. Reading a flat store "as-is" works for
-    * exactly one batch — that batch then writes `batch=<id>/` next to the
-    * flat files, and the NEXT batch's `spark.read.parquet(root)` dies in
-    * partition discovery ("conflicting directory structures"), crashing
-    * the stream one batch after a seemingly successful resume. A rename
-    * per file (no data copy) keeps the legacy rows probe-able forever;
-    * stray root-level commit markers (`_SUCCESS`) are dropped so only
-    * partition directories remain. Idempotent: a migrated (or new-style)
-    * store has no root-level data files and is left untouched. */
-  private def migrateFlatStore(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Unit = {
-    val entries = fs.listStatus(root)
-    val isMarker = (n: String) => n.startsWith("_") || n.startsWith(".")
-    val flat = entries.filter(e => e.isFile && !isMarker(e.getPath.getName))
-    if (flat.nonEmpty) {
-      val legacy = new org.apache.hadoop.fs.Path(root, "batch=legacy")
-      fs.mkdirs(legacy)
-      for (f <- flat) {
-        val to = new org.apache.hadoop.fs.Path(legacy, f.getPath.getName)
-        if (!fs.rename(f.getPath, to))
-          // a silent half-migration would leave the exact mixed layout
-          // this guards against — fail the batch loudly instead
-          throw new java.io.IOException(
-            s"flat-store migration: could not rename ${f.getPath} to $to")
-      }
-      entries.filter(e => e.isFile && isMarker(e.getPath.getName))
-        .foreach(e => fs.delete(e.getPath, false))
-    }
-  }
 
   def processBatch(
       storePath: String,
@@ -74,31 +34,11 @@ object MediaDedupStream {
       maxHamming: Int = 3,
       maxBucket: Int = 10000)(batch: DataFrame, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    val spark = batch.sparkSession
+    val id = batchId.toString
     val newBand = Dedup.aHashBandTable(
       Multimodal.aHashBands(batch), "media_id", "bands").persist()
     try {
-      val storeHPath = new org.apache.hadoop.fs.Path(storePath)
-      val storeFs = storeHPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val store =
-        if (!storeFs.exists(storeHPath)) newBand.limit(0)
-        else {
-          // flat append-era stores migrate into a batch=legacy partition
-          // first — mixing root-level files with batch=<id> dirs breaks
-          // the NEXT batch's partition discovery (see migrateFlatStore)
-          migrateFlatStore(storeFs, storeHPath)
-          val raw = spark.read.parquet(storePath)
-          // exclude the running batch's own (possibly partial, crashed-run)
-          // partition. STRING compare, not a long cast: with a
-          // batch=legacy partition present the partition column infers as
-          // string, and casting "legacy" to long yields null — a null
-          // comparison would silently drop every legacy row from the probe.
-          if (raw.columns.contains("batch"))
-            raw.filter(col("batch").cast("string") =!=
-              org.apache.spark.sql.functions.lit(batchId.toString))
-              .drop("batch")
-          else raw
-        }
+      val store = BatchStore.readExcept(batch.sparkSession, storePath, id, newBand)
       // an id the store already carries is a RE-DELIVERY (at-least-once
       // source), not a new asset: its pairs were emitted when it first
       // arrived, and appending its band rows again would emit duplicate
@@ -106,25 +46,9 @@ object MediaDedupStream {
       // (id, id) self-pair the probe suppresses could never catch it)
       val freshBand = newBand.join(
         store.select("id").distinct(), Seq("id"), "left_anti")
-      Dedup.aHashIncrementalPairs(freshBand, store, maxHamming, maxBucket)
-        .write.mode("overwrite").parquet(s"$pairsPath/batch=$batchId")
-      freshBand.write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
+      BatchStore.write(
+        Dedup.aHashIncrementalPairs(freshBand, store, maxHamming, maxBucket), pairsPath, id)
+      BatchStore.write(freshBand, storePath, id)
     } finally newBand.unpersist(blocking = false)
   }
-
-  /** Streaming writer wiring [[processBatch]] — input rows carry
-    * `(media_id, payload binary)`. Available-now by default (the
-    * scheduled-drop ingest shape); pass a continuous trigger for a
-    * long-lived query. */
-  def writer(
-      media: DataFrame,
-      storePath: String,
-      pairsPath: String,
-      checkpoint: String,
-      maxHamming: Int = 3,
-      trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    media.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(processBatch(storePath, pairsPath, maxHamming) _)
 }

@@ -2,24 +2,22 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
-import org.apache.spark.sql.Row
 
 /** Continuous n-gram novelty monitoring — the streaming face of
   * [[graft.operators.Drift.ngramNovelty]]: each micro-batch (one crawl
   * drop / epoch) is reduced to its DISTINCT grams, probed against the
-  * accumulated first-seen gram store, and appended to it; the batch's
+  * accumulated first-seen gram store, and added to it; the batch's
   * novelty row (distinct grams, first-ever-seen grams, floor-ppm novelty)
   * lands in a metrics sink as the drop arrives, not in a nightly batch.
   *
   * Parity contract (pinned in StreamingSpec): feeding epochs through in
   * ascending order yields exactly the batch `ngramNovelty` rows, because
   * "first corpus appearance is this epoch" ≡ "not in the store built
-  * from all earlier epochs". State lives in the store parquet (the
-  * DedupStream posture) — restarts resume from the store; at scale the
-  * store is the big side, so the probe is a left-anti join of the
-  * batch's distinct-gram table (small) against it, and the store stays
-  * append-only.
+  * from all earlier epochs". Store and metrics are [[BatchStore]] roots
+  * — restarts resume from the store, and a replayed batch writes its
+  * novelty row and fresh grams once; at scale the store is the big side,
+  * so the probe is a left-anti join of the batch's distinct-gram table
+  * (small) against it.
   */
 object NoveltyStream {
 
@@ -30,7 +28,7 @@ object NoveltyStream {
       textCol: String,
       n: Int = 3)(batch: DataFrame, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    val spark = batch.sparkSession
+    val id = batchId.toString
     val toks = split(trim(lower(col(textCol))), "\\s+")
     val grams = batch
       .select(col(epochCol).cast("long").as("epoch"), toks.as("__t"))
@@ -43,11 +41,8 @@ object NoveltyStream {
       .distinct()
       .persist()
     try {
-      val storeHPath = new org.apache.hadoop.fs.Path(storePath)
-      val storeFs = storeHPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val store =
-        if (storeFs.exists(storeHPath)) spark.read.parquet(storePath)
-        else grams.select(col("gram")).limit(0)
+      val store = BatchStore.readExcept(
+        batch.sparkSession, storePath, id, grams.select(col("gram")))
       // a store-fresh gram spanning several epochs of one batch is "new"
       // only for its EARLIEST epoch — the batch operator's min-epoch
       // attribution, so multi-epoch batches telescope identically
@@ -57,32 +52,17 @@ object NoveltyStream {
       try {
         def floorDiv(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
           ((a - pmod(a, b)) / b).cast("long")
-        grams.groupBy("epoch").agg(count(lit(1)).as("n_distinct"))
-          .join(fresh.groupBy("epoch").agg(count(lit(1)).as("__new")), Seq("epoch"), "left")
-          .select(col("epoch"),
-            col("n_distinct"),
-            coalesce(col("__new"), lit(0L)).as("n_new"))
-          .withColumn("novelty_ppm",
-            floorDiv(col("n_new") * 1000000L, col("n_distinct")))
-          .write.mode("append").parquet(metricsPath)
-        fresh.select("gram").write.mode("append").parquet(storePath)
+        BatchStore.write(
+          grams.groupBy("epoch").agg(count(lit(1)).as("n_distinct"))
+            .join(fresh.groupBy("epoch").agg(count(lit(1)).as("__new")), Seq("epoch"), "left")
+            .select(col("epoch"),
+              col("n_distinct"),
+              coalesce(col("__new"), lit(0L)).as("n_new"))
+            .withColumn("novelty_ppm",
+              floorDiv(col("n_new") * 1000000L, col("n_distinct"))),
+          metricsPath, id)
+        BatchStore.write(fresh.select("gram"), storePath, id)
       } finally fresh.unpersist(blocking = false)
     } finally grams.unpersist(blocking = false)
   }
-
-  /** Streaming writer wiring [[processBatch]] — available-now by default
-    * (the scheduled crawl-drop shape). */
-  def writer(
-      docs: DataFrame,
-      storePath: String,
-      metricsPath: String,
-      checkpoint: String,
-      epochCol: String = "epoch_src",
-      textCol: String = "text",
-      n: Int = 3,
-      trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    docs.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(processBatch(storePath, metricsPath, epochCol, textCol, n) _)
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** Continuous seasonal anomaly monitoring — the streaming face of
   * [[graft.operators.Seasonal.weeklyRobustAnomalies]]: the per-(series,
@@ -11,14 +10,14 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   * row is then scored against them the moment it lands (the ops wire for
   * "today's traffic is off even accounting for it being Saturday").
   *
-  * Parity contract (pinned in StreamingSpec): each batch's appended rows
+  * Parity contract (pinned in StreamingSpec): each batch's written rows
   * equal the batch-side broadcast-join of the same rows against the same
   * frozen baseline — per-row scoring against frozen state, so batching
   * and arrival order cannot change any flag (the DriftStream argument).
   * Rows whose (series, dow) never occurred in history carry null
   * expected/flag — surfaced, not dropped (a brand-new series IS a
-  * finding). Restarts re-read the baseline parquet — the DedupStream
-  * store posture.
+  * finding). Restarts re-read the baseline parquet; the metrics sink is a
+  * [[BatchStore]] root, so a replayed batch writes its rows once.
   */
 object SeasonalStream {
 
@@ -58,8 +57,9 @@ object SeasonalStream {
   }
 
   /** Score one micro-batch of daily rows against the frozen baseline and
-    * append `(series, day, v, expected, residual, is_anomaly)` to the
-    * metrics sink. Unknown (series, dow) rows emit null expected/flag. */
+    * write `(series, day, v, expected, residual, is_anomaly)` as the
+    * batch's metrics partition. Unknown (series, dow) rows emit null
+    * expected/flag. */
   def processBatch(
       baselinePath: String,
       metricsPath: String,
@@ -67,10 +67,9 @@ object SeasonalStream {
       dayCol: String,
       valueCol: String)(batch: DataFrame, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    val baseline = spark.read.parquet(baselinePath)
-    scoreAgainst(batch, baseline, seriesCol, dayCol, valueCol)
-      .write.mode("append").parquet(metricsPath)
+    val baseline = batch.sparkSession.read.parquet(baselinePath)
+    BatchStore.write(scoreAgainst(batch, baseline, seriesCol, dayCol, valueCol),
+      metricsPath, batchId.toString)
   }
 
   /** The per-row scoring join — shared by the stream and its batch-parity
@@ -89,19 +88,4 @@ object SeasonalStream {
         (col("v") - col("expected")).as("residual"),
         (abs(col("v") - col("expected") - col("med_resid")) >
           lit(3.0) * col("mad")).as("is_anomaly"))
-
-  def writer(
-      rows: DataFrame,
-      baselinePath: String,
-      metricsPath: String,
-      checkpoint: String,
-      seriesCol: String,
-      dayCol: String,
-      valueCol: String,
-      trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    rows.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(
-        processBatch(baselinePath, metricsPath, seriesCol, dayCol, valueCol) _)
 }

@@ -1,9 +1,8 @@
 package graft.streaming
 
 import graft.operators.Dedup
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** Continuous-ingest duplicated-span screening — the streaming face of
   * [[graft.operators.Dedup.duplicatedSpansIncremental]]: each micro-batch
@@ -13,10 +12,12 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   * never re-scanned.
   *
   * The store stays a SET across batches (new hashes are anti-joined
-  * before the append), so the probe join's multiplicity is always 0/1 —
-  * the invariant the incremental screen's left join relies on. State
-  * lives in the store parquet, not Spark streaming state: restarts resume
-  * from the store, and the same files serve offline jobs as the
+  * before the write), so the probe join's multiplicity is always 0/1 —
+  * the invariant the incremental screen's left join relies on. Store and
+  * scores are [[BatchStore]] roots, so a replayed batch neither scores
+  * twice nor adds its hashes twice. State lives in the store parquet, not
+  * Spark streaming state: restarts resume from the store, and the same
+  * files serve offline jobs as the
   * [[graft.operators.Dedup.spanWindowHashes]] side. At scale the store is
   * bucketed by `h`, making both the probe and the anti-join co-located.
   *
@@ -35,38 +36,15 @@ object SpanScreenStream {
       textCol: String,
       windowTokens: Int = 8)(batch: DataFrame, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    val spark = batch.sparkSession
+    val id = batchId.toString
     val newHashes = Dedup.spanWindowHashes(batch, idCol, textCol, windowTokens)
       .select(col("h")).distinct().persist()
     try {
-      // Resolve existence through Hadoop's FileSystem so the store is found
-      // on HDFS/S3 too, not just file:// — a java.io.File check is always
-      // false on a remote store, which would silently reset the screen to
-      // an empty store every batch.
-      val storeHPath = new org.apache.hadoop.fs.Path(storePath)
-      val storeFs = storeHPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val store =
-        if (storeFs.exists(storeHPath)) spark.read.parquet(storePath)
-        else newHashes.limit(0)
-      Dedup.duplicatedSpansIncremental(batch, store, idCol, textCol, windowTokens)
-        .write.mode("append").parquet(outPath)
-      newHashes.join(store, Seq("h"), "left_anti")
-        .write.mode("append").parquet(storePath)
+      val store = BatchStore.readExcept(batch.sparkSession, storePath, id, newHashes)
+      BatchStore.write(
+        Dedup.duplicatedSpansIncremental(batch, store, idCol, textCol, windowTokens),
+        outPath, id)
+      BatchStore.write(newHashes.join(store, Seq("h"), "left_anti"), storePath, id)
     } finally newHashes.unpersist(blocking = false)
   }
-
-  /** Streaming writer wiring [[processBatch]]. */
-  def writer(
-      docs: DataFrame,
-      storePath: String,
-      outPath: String,
-      checkpoint: String,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      windowTokens: Int = 8,
-      trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    docs.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(processBatch(storePath, outPath, idCol, textCol, windowTokens) _)
 }

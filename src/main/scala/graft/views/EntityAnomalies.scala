@@ -18,10 +18,11 @@ object EntityAnomalies {
 
   def baseline(entityDailyMetrics: DataFrame): DataFrame = {
     val keys = Seq("entity_type", "entity_id")
-    val prior30 = Windows.priorFrame(keys, "date", 30, 1)
-    val prior7 = Windows.priorFrame(keys, "date", 7, 1)
-    val prior30to8 = Windows.priorFrame(keys, "date", 30, 8)
-    val last3 = Windows.trailing(keys, "date", 3)
+    val tie = EntityDailyMetrics.dateTieBreak
+    val prior30 = Windows.priorFrame(keys, "date", 30, 1, tie)
+    val prior7 = Windows.priorFrame(keys, "date", 7, 1, tie)
+    val prior30to8 = Windows.priorFrame(keys, "date", 30, 8, tie)
+    val last3 = Windows.trailing(keys, "date", 3, tie)
     entityDailyMetrics
       .withColumn("prior_observation_days_30d", count(lit(1)).over(prior30))
       .withColumn("article_negative_baseline_30d",

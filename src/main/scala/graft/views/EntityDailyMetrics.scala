@@ -17,6 +17,13 @@ import org.apache.spark.sql.functions._
   */
 object EntityDailyMetrics {
 
+  /** What orders this view's rows within one (entity_type, entity_id, date).
+    * A dims-less entity whose top-stories rows carry two names has two rows
+    * per date, and only the name tells them apart; ordered windows over the
+    * view sort by date, then this, so their ROWS frames do not depend on
+    * the order rows arrive in. */
+  val dateTieBreak = "entity_name"
+
   /** article_crisis CTE (`entity_daily_metrics_v.sql:33-57`): crisis-risk
     * label counts from the mention grain. */
   def articleCrisis(

@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
 object EntityWeeklyRollup {
 
   def build(entityDailyMetrics: DataFrame): DataFrame = {
-    val w = Windows.trailing(Seq("entity_type", "entity_id"), "date", 7)
+    val w = Windows.trailing(Seq("entity_type", "entity_id"), "date", 7,
+      EntityDailyMetrics.dateTieBreak)
     entityDailyMetrics.select(
       min(col("date")).over(w).as("week_start"),
       col("entity_type"), col("entity_id"), col("company_id"), col("ceo_id"),

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import graft.api.Api
 import graft.gold.{GoldRefresh, GoldTables, Schemas}
-import graft.views.{EntityAnomalies, EntityDailyMetrics}
+import graft.views.{EntityAnomalies, EntityDailyMetrics, EntityWeeklyRollup}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, Union, Window}
 import org.apache.spark.sql.functions._
@@ -191,6 +191,41 @@ class ApiSpec extends SparkSpec {
       "2025-03-01|brand|g1|g1|null|Ghost Company|Ghost Company||0|0|0|0|0.000000|0|0|0|0|0|0|2|0|1|1|1|1|0",
       "2025-03-01|brand|g1|g1|null|Ghost Co|Ghost Co||0|0|0|0|0.000000|0|0|0|0|0|0|3|1|0|2|1|2|0",
       "null|brand|c1|null|null||||0|0|0|0|0.000000|0|0|0|0|0|0|0|0|0|0|0|0|0"))
+  }
+
+  test("ordered windows over a two-name entity do not depend on row order") {
+    // brand g1 is in no dims table; on 2025-03-01 its top-stories rows carry
+    // two names, so the view has two rows for that (date, entity) and six
+    // single rows after it. The weekly rollup's and the anomaly baseline's
+    // ROWS frames, and trendSummary's 7-vs-prior-7 split (the tied rows sit
+    // at positions 7 and 8), must not depend on which tied row comes first.
+    val ghost = (Seq(("2025-03-01", "Ghost Co", 2L), ("2025-03-01", "Ghost Company", 1L)) ++
+      (2 to 7).map(d => (f"2025-03-$d%02d", "Ghost Co", d.toLong)))
+      .toDF("d", "entity_name", "negative_count")
+      .select(col("d").cast("date").as("date"), lit("brand").as("entity_type"),
+        lit("g1").as("entity_id"), col("entity_name"),
+        lit("top_stories_items").as("feature_type"),
+        (col("negative_count") + 1).as("total_count"), lit(1L).as("positive_count"),
+        lit(0L).as("neutral_count"), col("negative_count"))
+    val daily = EntityDailyMetrics.build(articleMv, serpMv, crisisLeg,
+      EntityDailyMetrics.topStoriesSentiment(featureMv.unionByName(ghost), companies, ceos),
+      EntityDailyMetrics.topStoriesControl(featureControlMv))
+    assert(daily.filter(col("entity_id") === "g1").count() == 8)
+    def rows(df: DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+    def answers(nameOrder: org.apache.spark.sql.Column): Seq[Seq[String]] = {
+      // one partition, rows in the given order: the windows see the tied
+      // rows in exactly this order
+      val ordered = daily.orderBy(nameOrder).coalesce(1)
+      Seq(
+        rows(EntityWeeklyRollup.build(ordered).filter(col("entity_id") === "g1")),
+        rows(EntityAnomalies.baseline(ordered).filter(col("entity_id") === "g1")),
+        rows(Api.trendSummary(ordered, "brand", "g1")))
+    }
+    val (asc, desc) = (answers(col("entity_name").asc), answers(col("entity_name").desc))
+    val differ = Seq("weekly rollup", "anomaly baseline", "trend summary").zipWithIndex
+      .collect { case (what, i) if asc(i) != desc(i) => what }
+    assert(differ.isEmpty, s"answers depend on row order: ${differ.mkString(", ")}")
   }
 
   test("entity_daily_metrics plan: one aggregate over the unioned legs, one join above it") {

@@ -148,16 +148,16 @@ class CurationPipelineSpec extends SparkSpec {
   }
 
   test("streaming curation == offline batches on the same prefix; replay is a skip") {
-    import graft.streaming.CurationStream
+    import graft.streaming.{BatchStore, CurationStream}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.Trigger
     val base = Files.createTempDirectory("graft-pipe-stream").toString
     val offline = Files.createTempDirectory("graft-pipe-off").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String, String, String)]
-    val q = CurationStream.writer(
-      input.toDF().toDF("doc_id", "source", "lang", "text"),
-      cfg(base), s"$base/ckpt", trigger = Trigger.ProcessingTime(0)).start()
+    val q = BatchStore.stream(input.toDF().toDF("doc_id", "source", "lang", "text"),
+      s"$base/ckpt", Trigger.ProcessingTime(0))(CurationStream.processBatch(cfg(base), "s"))
+      .start()
     input.addData(batch1: _*)
     q.processAllAvailable()
     input.addData(batch2: _*)
@@ -175,7 +175,7 @@ class CurationPipelineSpec extends SparkSpec {
   }
 
   test("streaming media curation == offline media batches on the same prefix; replay is a skip") {
-    import graft.streaming.CurationStream
+    import graft.streaming.{BatchStore, CurationStream}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.Trigger
     val base = Files.createTempDirectory("graft-pipe-mstream").toString
@@ -187,9 +187,9 @@ class CurationPipelineSpec extends SparkSpec {
       .select(col("media_id"), col("payload"))
       .as[(Long, Array[Byte])].collect().toSeq
     val input = MemoryStream[(Long, Array[Byte])]
-    val q = CurationStream.mediaWriter(
-      input.toDF().toDF("media_id", "payload"),
-      cfg(base), s"$base/ckpt", trigger = Trigger.ProcessingTime(0)).start()
+    val q = BatchStore.stream(input.toDF().toDF("media_id", "payload"),
+      s"$base/ckpt", Trigger.ProcessingTime(0))(CurationStream.processMediaBatch(cfg(base), "s"))
+      .start()
     input.addData(payloads(b1): _*)
     q.processAllAvailable()
     input.addData(payloads(b2): _*)

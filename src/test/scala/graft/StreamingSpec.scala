@@ -3,9 +3,10 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import graft.streaming.{ActiveStateStream, DailyIngestStream, FlaggedDay}
+import graft.streaming.{ActiveStateStream, BatchStore, DailyIngestStream, FlaggedDay}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -143,9 +144,8 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     // default micro-batch trigger: AvailableNow would finalize before the
     // MemoryStream deliveries below
-    val q = DedupStream.writer(
-      input.toDF().toDF("doc_id", "text"), store, pairs, s"$base/ckpt",
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    val q = BatchStore.stream(input.toDF().toDF("doc_id", "text"), s"$base/ckpt",
+      Trigger.ProcessingTime(0))(DedupStream.processBatch(store, pairs, "doc_id", "text"))
       .start()
     // three deliveries carve the corpus by doc_id thirds
     val rows = docs.as[(Long, String)].collect()
@@ -155,7 +155,7 @@ class StreamingSpec extends SparkSpec {
     }
     q.stop()
 
-    val streamed = spark.read.parquet(pairs)
+    val streamed = BatchStore.read(spark, pairs)
       .as[(Long, Long, Double)].collect().toSet
     val batch = graft.operators.Dedup.minhashCandidatePairs(
       docs, "doc_id", "text",
@@ -179,9 +179,8 @@ class StreamingSpec extends SparkSpec {
 
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Array[Byte])]
-    val q = MediaDedupStream.writer(
-      input.toDF().toDF("media_id", "payload"), store, pairs, s"$base/ckpt",
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    val q = BatchStore.stream(input.toDF().toDF("media_id", "payload"), s"$base/ckpt",
+      Trigger.ProcessingTime(0))(MediaDedupStream.processBatch(store, pairs))
       .start()
     // three deliveries carve the corpus by media_id thirds — cross-batch
     // near-dups must be caught by the store probe, not the batch harvest
@@ -297,10 +296,9 @@ class StreamingSpec extends SparkSpec {
 
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String)]
-    val q = SpanScreenStream.writer(
-      input.toDF().toDF("doc_id", "text"), store, out, s"$base/ckpt",
-      windowTokens = 3,
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    val q = BatchStore.stream(input.toDF().toDF("doc_id", "text"), s"$base/ckpt",
+      Trigger.ProcessingTime(0))(
+      SpanScreenStream.processBatch(store, out, "doc_id", "text", windowTokens = 3))
       .start()
     val rows = docs.as[(Long, String)].collect()
     for (b <- 0 until 3) {
@@ -311,7 +309,7 @@ class StreamingSpec extends SparkSpec {
 
     // batch 2's streamed rows == offline incremental screen of batch 2
     // against the store of batches 0+1
-    val streamed = spark.read.parquet(out)
+    val streamed = BatchStore.read(spark, out)
       .filter(col("id") % 3 === 2)
       .as[(Long, Long, Long, Double)].collect().toSet
     val offline = graft.operators.Dedup.duplicatedSpansIncremental(
@@ -323,7 +321,7 @@ class StreamingSpec extends SparkSpec {
       .as[(Long, Long, Long, Double)].collect().toSet
     assert(streamed == offline && offline.nonEmpty)
     // the store stayed a set: one row per distinct window hash
-    val sh = spark.read.parquet(store)
+    val sh = BatchStore.read(spark, store)
     assert(sh.count() == sh.distinct().count())
     assert(sh.count() ==
       graft.operators.Dedup.spanWindowHashes(docs, "doc_id", "text", 3)
@@ -548,10 +546,9 @@ class StreamingSpec extends SparkSpec {
 
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String)]
-    val q = NoveltyStream.writer(
-      input.toDF().toDF("epoch_src", "text"),
-      s"$base/store", s"$base/metrics", s"$base/ckpt",
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    val q = BatchStore.stream(input.toDF().toDF("epoch_src", "text"), s"$base/ckpt",
+      Trigger.ProcessingTime(0))(
+      NoveltyStream.processBatch(s"$base/store", s"$base/metrics", "epoch_src", "text"))
       .start()
     val rows = docs.as[(Long, String)].collect()
     // epochs arrive in order — 0 and 1 together (multi-epoch batch
@@ -562,7 +559,7 @@ class StreamingSpec extends SparkSpec {
     }
     q.stop()
 
-    val streamed = spark.read.parquet(s"$base/metrics")
+    val streamed = BatchStore.read(spark, s"$base/metrics")
       .as[(Long, Long, Long, Long)].collect().toSet
     val batchRows = graft.operators.Drift.ngramNovelty(docs, "epoch_src", "text", n = 3)
       .as[(Long, Long, Long, Long)].collect().toSet
@@ -578,10 +575,9 @@ class StreamingSpec extends SparkSpec {
 
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Long)]
-    val q = HittersStream.writer(
-      input.toDF().toDF("epoch", "user_id"),
-      s"$base/store", s"$base/ckpt", "epoch", "user_id", k = 10,
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    val q = BatchStore.stream(input.toDF().toDF("epoch", "user_id"), s"$base/ckpt",
+      Trigger.ProcessingTime(0))(
+      HittersStream.processBatch(s"$base/store", "epoch", "user_id", k = 10))
       .start()
     val rows = ev.as[(Long, Long)].collect()
     // whole epochs, deliberately OUT of order, one multi-epoch batch —
@@ -613,10 +609,9 @@ class StreamingSpec extends SparkSpec {
 
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Long)]
-    val q = DriftStream.writer(
-      input.toDF().toDF("epoch", "n_tok"),
-      s"$base/baseline", s"$base/metrics", s"$base/ckpt", "epoch", "n_tok",
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    val q = BatchStore.stream(input.toDF().toDF("epoch", "n_tok"), s"$base/ckpt",
+      Trigger.ProcessingTime(0))(
+      DriftStream.processBatch(s"$base/baseline", s"$base/metrics", "epoch", "n_tok"))
       .start()
     val rows = docs.as[(Long, Long)].collect()
     // one multi-epoch batch then a single drop — against a FROZEN
@@ -627,7 +622,7 @@ class StreamingSpec extends SparkSpec {
     }
     q.stop()
 
-    val streamed = spark.read.parquet(s"$base/metrics")
+    val streamed = BatchStore.read(spark, s"$base/metrics")
       .as[(Long, Long, Long)].collect().toSet
     val want = (1L to 3L).map { ep =>
       val r = graft.operators.Drift.ksTwoSample(
@@ -647,11 +642,9 @@ class StreamingSpec extends SparkSpec {
 
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String, Long)]
-    val q = MaintenanceStream.writer(
-      input.toDF().toDF("day", "event_type", "event_id"),
-      s"$base/store", s"$base/deltas", s"$base/ckpt",
-      keyCols = Seq("day", "event_type"),
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    val q = BatchStore.stream(input.toDF().toDF("day", "event_type", "event_id"),
+      s"$base/ckpt", Trigger.ProcessingTime(0))(
+      MaintenanceStream.processBatch(s"$base/store", s"$base/deltas", Seq("day", "event_type")))
       .start()
     val rows = ev.as[(Long, String, Long)].collect()
     for (m <- 0L to 2L) {
@@ -660,8 +653,8 @@ class StreamingSpec extends SparkSpec {
     }
     q.stop()
 
-    // store sums == one-shot aggregate (read through the replay-deduping
-    // currentView, the documented store-read contract)
+    // store sums == one-shot aggregate (read through currentView, the
+    // documented store-read contract)
     val storeLog = spark.read.parquet(s"$base/store")
     val streamed = MaintenanceStream
       .currentView(storeLog, Seq("day", "event_type"))
@@ -670,16 +663,6 @@ class StreamingSpec extends SparkSpec {
       .agg(count(lit(1)).as("n"))
       .as[(Long, String, Long)].collect().toSet
     assert(streamed == batchAgg && batchAgg.nonEmpty)
-    // at-least-once replay idempotence: re-appending an already-applied
-    // batch's store rows verbatim must not change the read-side view
-    // (crash between store write and checkpoint commit => this exact state)
-    val replayBid = storeLog.agg(max(col("batch_id"))).as[Long].head()
-    val replayed = storeLog.unionByName(
-      storeLog.filter(col("batch_id") === replayBid))
-    val afterReplay = MaintenanceStream
-      .currentView(replayed, Seq("day", "event_type"))
-      .as[(Long, String, Long)].collect().toSet
-    assert(afterReplay == batchAgg, "replayed batch double-counted")
     // telescoping: per group, deltas ordered by batch_id chain
     // old_n(next) == new_n(prev), and the last new_n is the final count
     val deltas = spark.read.parquet(s"$base/deltas")
@@ -710,10 +693,9 @@ class StreamingSpec extends SparkSpec {
 
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, Long, Double)]
-    val q = SeasonalStream.writer(
-      input.toDF().toDF("series", "day", "v"),
-      s"$base/baseline", s"$base/metrics", s"$base/ckpt", "series", "day", "v",
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    val q = BatchStore.stream(input.toDF().toDF("series", "day", "v"), s"$base/ckpt",
+      Trigger.ProcessingTime(0))(
+      SeasonalStream.processBatch(s"$base/baseline", s"$base/metrics", "series", "day", "v"))
       .start()
     val rows = live.as[(String, Long, Double)].collect()
     // two arbitrary drops — frozen baseline, so batching cannot matter
@@ -724,7 +706,7 @@ class StreamingSpec extends SparkSpec {
     }
     q.stop()
 
-    val streamed = spark.read.parquet(s"$base/metrics")
+    val streamed = BatchStore.read(spark, s"$base/metrics")
       .as[(String, Long, Double, Option[Double], Option[Double], Option[Boolean])]
       .collect().toSet
     val want = SeasonalStream.scoreAgainst(
@@ -806,11 +788,10 @@ class StreamingSpec extends SparkSpec {
 
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, Long, Long)]
-    val q = BootstrapStream.writer(
-      input.toDF().toDF("event_type", "event_id", "cents"),
-      s"$base/store", s"$base/ckpt",
-      idCol = "event_id", valueCol = "cents", groupCol = "event_type", b = 8,
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    val q = BatchStore.stream(input.toDF().toDF("event_type", "event_id", "cents"),
+      s"$base/ckpt", Trigger.ProcessingTime(0))(
+      BootstrapStream.processBatch(s"$base/store",
+        idCol = "event_id", valueCol = "cents", groupCol = "event_type", b = 8))
       .start()
     val rows = ev.as[(String, Long, Long)].collect()
     for (m <- 0L to 2L) {
@@ -829,14 +810,6 @@ class StreamingSpec extends SparkSpec {
         ev, "event_id", "cents", "event_type", 8)
       .as[(String, Int, Double)].collect().toSet
     assert(streamed == oneShot && oneShot.nonEmpty)
-
-    // at-least-once replay idempotence: re-appending the last batch's
-    // store rows verbatim must not move any mean
-    val bid = log.agg(max(col("batch_id"))).as[Long].head()
-    val replayed = log.unionByName(log.filter(col("batch_id") === bid))
-    assert(BootstrapStream.currentMeans(replayed, "event_type")
-      .as[(String, Int, Double)].collect().toSet == oneShot,
-      "replayed batch moved the replicate means")
   }
 
   test("ivf index store: streamed ingest + probe equals the batch rebuild; re-delivery drops") {
@@ -847,10 +820,8 @@ class StreamingSpec extends SparkSpec {
 
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Seq[Float])]
-    val q = IvfIndexStream.writer(
-      input.toDF().toDF("vec_id", "embedding"),
-      base, s"$base/ckpt", "vec_id", "embedding",
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    val q = BatchStore.stream(input.toDF().toDF("vec_id", "embedding"), s"$base/ckpt",
+      Trigger.ProcessingTime(0))(IvfIndexStream.processBatch(base, "vec_id", "embedding"))
       .start()
     val rows = emb.select("vec_id", "embedding")
       .as[(Long, Seq[Float])].collect()
@@ -898,10 +869,8 @@ class StreamingSpec extends SparkSpec {
 
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Long)]
-    val q = PreferenceStream.writer(
-      input.toDF().toDF("winner", "loser"),
-      s"$base/store", s"$base/ckpt", "winner", "loser",
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    val q = BatchStore.stream(input.toDF().toDF("winner", "loser"), s"$base/ckpt",
+      Trigger.ProcessingTime(0))(PreferenceStream.processBatch(s"$base/store", "winner", "loser"))
       .start()
     // arbitrary uneven batching, shuffled order — pair counts add
     // associatively, so the fit must not care
@@ -922,5 +891,108 @@ class StreamingSpec extends SparkSpec {
     // (no stream state) reads the same answer
     assert(PreferenceStream.strengths(spark, s"$base/store")
       .as[(Long, Long, Long)].collect().toSet == batchFit)
+  }
+
+  test("replaying a batch id leaves every store-backed sink's rows unchanged") {
+    import graft.streaming._
+    import org.apache.spark.sql.{Column, DataFrame}
+    // foreachBatch is at-least-once: a crash between a sink write and the
+    // checkpoint commit re-runs the last batch under the same id. Each case
+    // runs two batches, snapshots every root it writes, re-runs the second
+    // batch, and demands the same rows (partition columns included).
+    val base = Files.createTempDirectory("graft-replay").toString
+    def at(sink: String, root: String) = s"$base/$sink/$root"
+    // seeded inputs; every odd doc is a one-token edit of the doc before
+    // it, so the dedup sinks have pairs to emit
+    val rnd = new scala.util.Random(5)
+    val texts = (0 until 150).map(_ => Seq.fill(24)(s"w${rnd.nextInt(400)}").mkString(" "))
+    val docs = (0L until 300L).map { i =>
+      val t = texts((i / 2).toInt)
+      (i, if (i % 2 == 0) t else t + " edit")
+    }.toDF("doc_id", "text")
+    val media = graft.multimodal.Multimodal.synthesizeMedia(
+        (0L until 1000L).map(i => (i, s"text for $i")).toDF("doc_id", "text"), "doc_id", "text")
+      .filter(col("media_type") === "image").select(col("media_id"), col("payload"))
+    val ev = (0L until 600L).map(i =>
+        (i, 20000L + i % 40, Seq("view", "click", "cart", "buy")(rnd.nextInt(4)),
+          i % 37, rnd.nextInt(1000).toLong))
+      .toDF("event_id", "day", "event_type", "user_id", "cents")
+    val emb = (0L until 300L).map(i => (i, Seq.fill(8)(rnd.nextFloat())))
+      .toDF("vec_id", "embedding")
+    def parts(df: DataFrame, key: Column, n: Long, residues: Long*) =
+      residues.map(r => df.filter(pmod(key, lit(n)) === r))
+    val daily = ev.groupBy(col("event_type").as("series"), col("day"))
+      .agg(count(lit(1)).cast("double").as("v"))
+    SeasonalStream.writeBaseline(daily.filter(col("day") % 28 < 21),
+      "series", "day", "v", at("seasonal", "baseline"))
+    IvfIndexStream.buildCodebook(emb, s"$base/ivf", "vec_id", "embedding", nlist = 8)
+    val judgments = (0L until 120L).map(e => (e % 8, (e * 5 + 3) % 8))
+      .filter(p => p._1 != p._2).toDF("winner", "loser")
+
+    // (sink, the roots it writes, its two batches, its processBatch)
+    val sinks: Seq[(String, Seq[String], Seq[DataFrame], (DataFrame, Long) => Unit)] = Seq(
+      ("dedup", Seq("store", "pairs"), parts(docs, col("doc_id"), 3, 0, 1),
+        DedupStream.processBatch(at("dedup", "store"), at("dedup", "pairs"), "doc_id", "text")),
+      ("media", Seq("store", "pairs"), parts(media, expr("media_id div 3"), 3, 0, 1),
+        MediaDedupStream.processBatch(at("media", "store"), at("media", "pairs"))),
+      ("span", Seq("store", "out"), parts(docs, col("doc_id"), 3, 0, 1),
+        SpanScreenStream.processBatch(at("span", "store"), at("span", "out"), "doc_id", "text",
+          windowTokens = 3)),
+      ("novelty", Seq("store", "metrics"),
+        parts(docs.select(pmod(col("doc_id"), lit(4L)).as("epoch_src"), col("text")),
+          col("epoch_src"), 4, 0, 1),
+        NoveltyStream.processBatch(at("novelty", "store"), at("novelty", "metrics"),
+          "epoch_src", "text")),
+      ("hitters", Seq("store"),
+        parts(ev.select(pmod(col("event_id"), lit(5L)).as("epoch"), col("user_id")),
+          col("epoch"), 5, 0, 1),
+        HittersStream.processBatch(at("hitters", "store"), "epoch", "user_id", k = 10)),
+      ("preference", Seq("store"), parts(judgments, col("winner"), 2, 0, 1),
+        PreferenceStream.processBatch(at("preference", "store"), "winner", "loser")),
+      ("drift", Seq("baseline", "metrics"),
+        parts(docs.select(pmod(col("doc_id"), lit(4L)).as("epoch"),
+          size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok")),
+          col("epoch"), 4, 1, 2),
+        DriftStream.processBatch(at("drift", "baseline"), at("drift", "metrics"),
+          "epoch", "n_tok")),
+      ("seasonal", Seq("metrics"), parts(daily.filter(col("day") % 28 >= 21), col("day"), 2, 0, 1),
+        SeasonalStream.processBatch(at("seasonal", "baseline"), at("seasonal", "metrics"),
+          "series", "day", "v")),
+      ("maintenance", Seq("store", "deltas"), parts(ev, col("event_id"), 3, 0, 1)
+          .map(_.select("day", "event_type", "event_id")),
+        MaintenanceStream.processBatch(at("maintenance", "store"), at("maintenance", "deltas"),
+          Seq("day", "event_type"))),
+      ("bootstrap", Seq("store"), parts(ev, col("event_id"), 3, 0, 1),
+        BootstrapStream.processBatch(at("bootstrap", "store"),
+          idCol = "event_id", valueCol = "cents", groupCol = "event_type", b = 8)),
+      ("ivf", Seq("postings"), parts(emb, col("vec_id"), 3, 0, 1),
+        IvfIndexStream.processBatch(s"$base/ivf", "vec_id", "embedding")))
+
+    def rows(root: String): Seq[String] =
+      spark.read.parquet(root).collect().map(_.toSeq.map {
+        case b: Array[Byte] => b.mkString(",")
+        case v => String.valueOf(v)
+      }.mkString("|")).sorted.toSeq
+    val changed = sinks.flatMap { case (sink, roots, batches, process) =>
+      batches.zipWithIndex.foreach { case (b, i) => process(b, i.toLong) }
+      val before = roots.map(r => rows(at(sink, r)))
+      assert(before.forall(_.nonEmpty), s"$sink: every root must hold rows")
+      process(batches.last, batches.size - 1L)
+      roots.zip(before).collect { case (r, b) if rows(at(sink, r)) != b => s"$sink/$r" }
+    }
+    assert(changed.isEmpty, s"a replayed batch changed: ${changed.mkString(", ")}")
+  }
+
+  test("one store protocol: only BatchStore appends or resolves a FileSystem") {
+    val sources = Seq("src/main/scala/graft/streaming", "src/main/scala/graft/pipeline")
+      .flatMap(d => Option(new java.io.File(d).listFiles()).toSeq.flatten)
+      .filter(f => f.getName.endsWith(".scala"))
+    assert(sources.exists(_.getName == "BatchStore.scala"), "run from the repo root")
+    val offenders = for {
+      f <- sources if f.getName != "BatchStore.scala"
+      (line, i) <- new String(Files.readAllBytes(f.toPath), "UTF-8").split("\n").toSeq.zipWithIndex
+      if line.contains("mode(\"append\")") || line.contains("getFileSystem")
+    } yield s"${f.getPath}:${i + 1}"
+    assert(offenders.isEmpty, s"store plumbing outside BatchStore: ${offenders.mkString(", ")}")
   }
 }
