@@ -884,11 +884,12 @@ object SparkEntry {
     * ImageIO into an 8×8 nearest-neighbor gray lattice, mean-threshold to
     * a 64-bit aHash carried as 4×16-bit bands
     * ([[graft.multimodal.Multimodal.aHashBands]]), then pair through the
-    * simhash banding topology — distinct-fingerprint grain, band-bucket
-    * harvest, exact bit_count(xor) Hamming verify, complete to Hamming 3
-    * by pigeonhole ([[Dedup.aHashPairs]]). The oracle replays the closed-
-    * form pixel law (PNG is lossless, so decode ≡ law) — the Spark side
-    * is the only one that touches the codec. */
+    * one fingerprint harvest every dedup family shares — distinct-
+    * fingerprint grain, band-bucket harvest, exact bit_count(xor) Hamming
+    * verify, complete to Hamming 3 by pigeonhole ([[Dedup.aHashPairs]]).
+    * The oracle replays the closed-form pixel law (PNG is lossless, so
+    * decode ≡ law) — the Spark side is the only one that touches the
+    * codec. */
   private def phashNearDupQ(s: SparkSession, dir: String): DataFrame = {
     val media = graft.multimodal.Multimodal.synthesizeMedia(
       documents(s, dir), "doc_id", "text")
@@ -2199,38 +2200,12 @@ object SparkEntry {
       .localCheckpoint(false)
     val nNodes = pairs
       .select(explode(array(col("pa"), col("pb"))).as("id")).distinct().count()
-    // ONE tagged CC for every threshold (r12): each MSF edge explodes to
-    // the thresholds it survives, node ids carry the threshold index in
-    // their low 3 bits (layers disjoint; min label within a layer decodes
-    // to the layer's min node — exactly the per-threshold CC's component),
-    // so one star-CC over ≤ |thresholds|·|MSF| edges replaces one CC RUN
-    // per threshold (4 kept-checkpoint + count + CC chains → 1 grouped
-    // count + 1 CC + 1 bounded collect). Star variant, not min-label: a
-    // forest's components are long thin paths (min-label needs
-    // O(diameter) rounds; star is O(log n) on any shape). Per-threshold
-    // results are bit-identical: layers never interact.
+    // one tagged CC for every threshold (Mst.cutCensus)
     val ms = Seq(2L, 3L, 5L, 8L)
-    val tagged = msf.select(
-      explode(filter(array(ms.zipWithIndex.map { case (m, i) =>
-        when(col("w") <= lit(-m), lit(i.toLong)).otherwise(lit(-1L))
-      }: _*), x => x =!= -1L)).as("ti"),
-      col("u"), col("v")).localCheckpoint(false)
-    val keptByTi = tagged.groupBy("ti").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // cast BEFORE the ·8: an IntegerType key column would do the shift in
-    // Int space first and throw (ANSI) past 2^28 ids
-    val sizeByTi = graft.operators.Dedup.connectedComponentsStar(
-        tagged.select((col("u").cast("long") * 8 + col("ti")).as("cu"),
-          (col("v").cast("long") * 8 + col("ti")).as("cv")), "cu", "cv")
-      .groupBy(pmod(col("id"), lit(8L)).as("ti"), col("component"))
-      .agg(count(lit(1)).as("sz"))
-      .groupBy("ti")
-      .agg(max(col("sz")).as("largest"), sum(col("sz")).as("clustered"))
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val census = graft.operators.Mst.cutCensus(msf, ms.map(m => col("w") <= lit(-m)))
     import s.implicits._
-    ms.zipWithIndex.map { case (m, i) =>
-      val (largest, clustered) = sizeByTi.getOrElse(i.toLong, (1L, 0L))
-      (m, nNodes - keptByTi.getOrElse(i.toLong, 0L), clustered, largest)
+    ms.zip(census).map { case (m, (kept, largest, clustered)) =>
+      (m, nNodes - kept, clustered, largest)
     }.toDF("min_count", "n_clusters", "clustered_nodes", "largest_cluster")
       .orderBy("min_count")
   }
@@ -2589,31 +2564,13 @@ object SparkEntry {
         weighted.withColumn("__k", lit("w")), "__k", "w", Seq(0.25, 0.5, 0.75))
       .select(col("prob"), col("value")).collect()
       .map(r => (r.getDouble(0), r.getDouble(1))).sortBy(_._1)
-    // ONE tagged CC for all three tau cuts (the q219 r12 move): edges
-    // explode to the cuts they survive, node ids carry the cut index in
-    // their low 3 bits, one star-CC replaces one CC run per tau —
-    // per-cut results bit-identical (layers never interact).
-    val tagged = msf.select(
-      explode(filter(array(taus.zipWithIndex.map { case ((_, tau), i) =>
-        when(col("w").cast("double") <= lit(tau), lit(i.toLong)).otherwise(lit(-1L))
-      }: _*), x => x =!= -1L)).as("ti"),
-      col("u"), col("v")).localCheckpoint(false)
-    val keptByTi = tagged.groupBy("ti").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // cast BEFORE the ·8 (same ANSI-overflow guard as q219)
-    val sizeByTi = graft.operators.Dedup.connectedComponentsStar(
-        tagged.select((col("u").cast("long") * 8 + col("ti")).as("cu"),
-          (col("v").cast("long") * 8 + col("ti")).as("cv")), "cu", "cv")
-      .groupBy(pmod(col("id"), lit(8L)).as("ti"), col("component"))
-      .agg(count(lit(1)).as("sz"))
-      .groupBy("ti")
-      .agg(max(col("sz")).as("largest"), sum(col("sz")).as("clustered"))
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    // one tagged CC for all three tau cuts (the q219 census)
+    val census = graft.operators.Mst.cutCensus(msf,
+      taus.toSeq.map { case (_, tau) => col("w").cast("double") <= lit(tau) })
     import s.implicits._
-    taus.zipWithIndex.map { case ((p, tau), i) =>
-      val (largest, clustered) = sizeByTi.getOrElse(i.toLong, (1L, 0L))
-      (p, tau, n - keptByTi.getOrElse(i.toLong, 0L), clustered, largest)
-    }.toSeq
+    taus.toSeq.zip(census).map { case ((p, tau), (kept, largest, clustered)) =>
+      (p, tau, n - kept, clustered, largest)
+    }
       .toDF("prob", "tau", "n_clusters", "clustered_nodes", "largest_cluster")
       .orderBy("prob")
   }

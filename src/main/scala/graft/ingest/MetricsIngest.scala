@@ -4,11 +4,12 @@ import graft.sources.PipeSeries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** S5/S6 stock + trends CSV loaders (reference `src/ingest_metrics.py:29-179`):
-  * each row carries `|`-delimited parallel value/date series; the loader
+/** S5 stock CSV loaders (reference `src/ingest_metrics.py:29-179`): each
+  * row carries `|`-delimited parallel value/date series; the loader
   * explodes them to daily rows and emits a snapshot row per entity with
   * daily/7-day change percentages, computing the changes from the series
-  * when the CSV omits them (`ingest_metrics.py:150-165`).
+  * when the CSV omits them (`ingest_metrics.py:150-165`). The S6 trends
+  * loaders were deleted with their only reader: no caller and no test.
   */
 object MetricsIngest {
 
@@ -41,22 +42,4 @@ object MetricsIngest {
         to_timestamp(col("last_updated")).as("last_updated"))
       .dropDuplicates("ticker")
   }
-
-  /** `trends_daily` rows from a trends CSV (same pipe-series shape). */
-  def trendsDaily(trends: DataFrame): DataFrame =
-    PipeSeries.explodeSeries(
-      trends.filter(col("company").isNotNull && col("trends_history").isNotNull),
-      Seq("company"), "trends_history", "date_history",
-      valueOut = "interest", dateOut = "date")
-      .select(col("company"), to_date(col("date")).as("date"),
-        col("interest").cast("int").as("interest"))
-      .filter(col("date").isNotNull && col("interest").isNotNull)
-      .dropDuplicates("company", "date")
-
-  def trendsSnapshots(trends: DataFrame): DataFrame =
-    trends.filter(col("company").isNotNull)
-      .select(col("company"),
-        col("avg_interest").cast("double").as("avg_interest"),
-        to_timestamp(col("last_updated")).as("last_updated"))
-      .dropDuplicates("company")
 }

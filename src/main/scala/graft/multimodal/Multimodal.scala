@@ -159,9 +159,7 @@ object Multimodal {
         if (payload == null || payload.isEmpty)
           Row.fromSeq(r.toSeq :+ null :+ false :+ null :+ null :+ null)
         else {
-          val img =
-            try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
-            catch { case _: java.io.IOException => null }
+          val img = decodeImage(payload)
           if (img != null) {
             val w = img.getWidth
             val h = img.getHeight
@@ -212,7 +210,6 @@ object Multimodal {
   def aHashBands(media: DataFrame, grid: Int = 8): DataFrame = {
     require(grid >= 4 && (grid * grid) % 16 == 0,
       "grid^2 must split into 16-bit bands")
-    val nBands = grid * grid / 16
     val inSchema = media.schema
     val idIdx = inSchema.fieldIndex("media_id")
     val payloadIdx = inSchema.fieldIndex("payload")
@@ -224,41 +221,47 @@ object Multimodal {
     media.mapPartitions { rows =>
       javax.imageio.ImageIO.setUseCache(false)
       rows.flatMap { r =>
-        val payload = r.getAs[Array[Byte]](payloadIdx)
-        if (payload == null || payload.isEmpty) None
-        else {
-          val img =
-            try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
-            catch { case _: java.io.IOException => null }
-          if (img == null) None
-          else {
-            val w = img.getWidth
-            val h = img.getHeight
-            val g = new Array[Int](grid * grid)
-            var sum = 0L
-            var j = 0
-            while (j < grid) {
-              var i = 0
-              while (i < grid) {
-                val px = img.getRGB((i * w) / grid, (j * h) / grid) & 0xff
-                g(j * grid + i) = px
-                sum += px
-                i += 1
-              }
-              j += 1
-            }
-            val mean = sum / (grid * grid)
-            val bands = new Array[Int](nBands)
-            var p = 0
-            while (p < grid * grid) {
-              if (g(p) >= mean) bands(p / 16) |= 1 << (p % 16)
-              p += 1
-            }
-            Some(Row(r.getLong(idIdx), bands.toSeq))
-          }
-        }
+        Option(decodeImage(r.getAs[Array[Byte]](payloadIdx)))
+          .map(img => Row(r.getLong(idIdx), aHashOf(img, grid).toSeq))
       }
     }
+  }
+
+  /** The JDK's `ImageIO` decode of an image payload; null when the payload
+    * is empty or no reader can decode it. */
+  private def decodeImage(payload: Array[Byte]): java.awt.image.BufferedImage =
+    if (payload == null || payload.isEmpty) null
+    else
+      try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
+      catch { case _: java.io.IOException => null }
+
+  /** The aHash lattice kernel: `grid`×`grid` nearest-neighbor gray samples
+    * at `((i·w) div grid, (j·h) div grid)`, bit `j·grid+i` set iff the
+    * sample is ≥ the floor mean, packed into `grid²/16` 16-bit bands. */
+  private def aHashOf(img: java.awt.image.BufferedImage, grid: Int): Array[Int] = {
+    val w = img.getWidth
+    val h = img.getHeight
+    val g = new Array[Int](grid * grid)
+    var sum = 0L
+    var j = 0
+    while (j < grid) {
+      var i = 0
+      while (i < grid) {
+        val px = img.getRGB((i * w) / grid, (j * h) / grid) & 0xff
+        g(j * grid + i) = px
+        sum += px
+        i += 1
+      }
+      j += 1
+    }
+    val mean = sum / (grid * grid)
+    val bands = new Array[Int](grid * grid / 16)
+    var p = 0
+    while (p < grid * grid) {
+      if (g(p) >= mean) bands(p / 16) |= 1 << (p % 16)
+      p += 1
+    }
+    bands
   }
 
   /** Both perceptual fingerprints of each decodable image in ONE decode
@@ -295,57 +298,28 @@ object Multimodal {
     media.mapPartitions { rows =>
       javax.imageio.ImageIO.setUseCache(false)
       rows.flatMap { r =>
-        val payload = r.getAs[Array[Byte]](payloadIdx)
-        if (payload == null || payload.isEmpty) None
-        else {
-          val img =
-            try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
-            catch { case _: java.io.IOException => null }
-          if (img == null) None
-          else {
-            val w = img.getWidth
-            val h = img.getHeight
-            // aHash lattice: grid x grid
-            val g = new Array[Int](grid * grid)
-            var sum = 0L
-            var j = 0
-            while (j < grid) {
-              var i = 0
-              while (i < grid) {
-                val px = img.getRGB((i * w) / grid, (j * h) / grid) & 0xff
-                g(j * grid + i) = px
-                sum += px
-                i += 1
+        Option(decodeImage(r.getAs[Array[Byte]](payloadIdx))).map { img =>
+          val w = img.getWidth
+          val h = img.getHeight
+          // dHash lattice: (grid+1) x grid, bit = right-neighbor gradient
+          val dbands = new Array[Int](nBands)
+          var j = 0
+          while (j < grid) {
+            val y = (j * h) / grid
+            var prev = img.getRGB(0, y) & 0xff // x index (0*w)/(grid+1) = 0
+            var i = 0
+            while (i < grid) {
+              val cur = img.getRGB(((i + 1) * w) / (grid + 1), y) & 0xff
+              if (cur > prev) {
+                val q = j * grid + i
+                dbands(q / 16) |= 1 << (q % 16)
               }
-              j += 1
+              prev = cur
+              i += 1
             }
-            val mean = sum / (grid * grid)
-            val abands = new Array[Int](nBands)
-            var p = 0
-            while (p < grid * grid) {
-              if (g(p) >= mean) abands(p / 16) |= 1 << (p % 16)
-              p += 1
-            }
-            // dHash lattice: (grid+1) x grid, bit = right-neighbor gradient
-            val dbands = new Array[Int](nBands)
-            j = 0
-            while (j < grid) {
-              val y = (j * h) / grid
-              var prev = img.getRGB(0, y) & 0xff // x index (0*w)/(grid+1) = 0
-              var i = 0
-              while (i < grid) {
-                val cur = img.getRGB(((i + 1) * w) / (grid + 1), y) & 0xff
-                if (cur > prev) {
-                  val q = j * grid + i
-                  dbands(q / 16) |= 1 << (q % 16)
-                }
-                prev = cur
-                i += 1
-              }
-              j += 1
-            }
-            Some(Row(r.getLong(idIdx), abands.toSeq, dbands.toSeq))
+            j += 1
           }
+          Row(r.getLong(idIdx), aHashOf(img, grid).toSeq, dbands.toSeq)
         }
       }
     }
@@ -384,31 +358,23 @@ object Multimodal {
     media.mapPartitions { rows =>
       javax.imageio.ImageIO.setUseCache(false)
       rows.flatMap { r =>
-        val payload = r.getAs[Array[Byte]](payloadIdx)
-        if (payload == null || payload.isEmpty) None
-        else {
-          val img =
-            try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
-            catch { case _: java.io.IOException => null }
-          if (img == null) None
-          else {
-            val w = img.getWidth
-            val h = img.getHeight
-            val out = new java.awt.image.BufferedImage(
-              outW, outH, java.awt.image.BufferedImage.TYPE_INT_RGB)
-            var y = 0
-            while (y < outH) {
-              var x = 0
-              while (x < outW) {
-                out.setRGB(x, y, img.getRGB((x * w) / outW, (y * h) / outH))
-                x += 1
-              }
-              y += 1
+        Option(decodeImage(r.getAs[Array[Byte]](payloadIdx))).map { img =>
+          val w = img.getWidth
+          val h = img.getHeight
+          val out = new java.awt.image.BufferedImage(
+            outW, outH, java.awt.image.BufferedImage.TYPE_INT_RGB)
+          var y = 0
+          while (y < outH) {
+            var x = 0
+            while (x < outW) {
+              out.setRGB(x, y, img.getRGB((x * w) / outW, (y * h) / outH))
+              x += 1
             }
-            val bos = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(out, "png", bos)
-            Some(Row(r.getLong(idIdx), bos.toByteArray, "image/png", outW, outH))
+            y += 1
           }
+          val bos = new java.io.ByteArrayOutputStream()
+          javax.imageio.ImageIO.write(out, "png", bos)
+          Row(r.getLong(idIdx), bos.toByteArray, "image/png", outW, outH)
         }
       }
     }
@@ -592,58 +558,65 @@ object Multimodal {
     implicit val enc = RowEncoder.encoderFor(outSchema)
     media.mapPartitions { rows =>
       rows.flatMap { r =>
-        val payload = r.getAs[Array[Byte]](payloadIdx)
-        if (payload == null || payload.isEmpty) Iterator.empty
-        else {
-          val in =
-            try javax.sound.sampled.AudioSystem.getAudioInputStream(
-              new java.io.ByteArrayInputStream(payload))
-            catch {
-              case _: javax.sound.sampled.UnsupportedAudioFileException => null
-              case _: java.io.IOException => null
+        frameEnergies(r.getAs[Array[Byte]](payloadIdx), Int.MaxValue).toSeq.flatMap { energy =>
+          val id = r.getLong(idIdx)
+          (0 until energy.length - window).map { p =>
+            val sig = new Array[Int](nSigBands)
+            var k = 0
+            while (k < window) {
+              if (energy(p + k + 1) > energy(p + k))
+                sig(k / 16) |= 1 << (k % 16)
+              k += 1
             }
-          if (in == null) Iterator.empty
-          else {
-            val fmt = in.getFormat
-            val bytes = in.readAllBytes()
-            in.close()
-            if (fmt.getSampleSizeInBits != 16 || fmt.getChannels != 1 ||
-              fmt.getEncoding !=
-                javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED) Iterator.empty
-            else {
-              val big = fmt.isBigEndian
-              val nSamples = bytes.length / 2
-              val nFrames = nSamples / audioFrameLen
-              val energy = new Array[Long](nFrames)
-              var f = 0
-              while (f < nFrames) {
-                var e = 0L
-                var u = 0
-                while (u < audioFrameLen) {
-                  val t = f * audioFrameLen + u
-                  val s =
-                    if (big) ((bytes(2 * t) << 8) | (bytes(2 * t + 1) & 0xff)).toShort
-                    else ((bytes(2 * t + 1) << 8) | (bytes(2 * t) & 0xff)).toShort
-                  e += math.abs(s.toLong)
-                  u += 1
-                }
-                energy(f) = e
-                f += 1
-              }
-              val id = r.getLong(idIdx)
-              (0 until nFrames - window).iterator.map { p =>
-                val sig = new Array[Int](nSigBands)
-                var k = 0
-                while (k < window) {
-                  if (energy(p + k + 1) > energy(p + k))
-                    sig(k / 16) |= 1 << (k % 16)
-                  k += 1
-                }
-                Row(id, p, sig.toSeq)
-              }.toVector.iterator
-            }
+            Row(id, p, sig.toSeq)
           }
         }
+      }
+    }
+  }
+
+  /** The WAV decoder every audio fingerprint shares: parse the payload
+    * with `AudioSystem.getAudioInputStream` (the REAL codec — RIFF parse +
+    * PCM frame extraction) and sum |sample| over each [[audioFrameLen]]-
+    * sample frame, up to `maxFrames` frames. None when the payload is
+    * empty, the sound stack cannot parse it, or it is not 16-bit mono
+    * PCM_SIGNED. */
+  private def frameEnergies(payload: Array[Byte], maxFrames: Int): Option[Array[Long]] = {
+    val in =
+      if (payload == null || payload.isEmpty) null
+      else
+        try javax.sound.sampled.AudioSystem.getAudioInputStream(
+          new java.io.ByteArrayInputStream(payload))
+        catch {
+          case _: javax.sound.sampled.UnsupportedAudioFileException => null
+          case _: java.io.IOException => null
+        }
+    Option(in).flatMap { in =>
+      val fmt = in.getFormat
+      val bytes = in.readAllBytes()
+      in.close()
+      if (fmt.getSampleSizeInBits != 16 || fmt.getChannels != 1 ||
+        fmt.getEncoding != javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED) None
+      else {
+        val big = fmt.isBigEndian
+        val nFrames = math.min(maxFrames, bytes.length / 2 / audioFrameLen)
+        val energy = new Array[Long](nFrames)
+        var f = 0
+        while (f < nFrames) {
+          var e = 0L
+          var u = 0
+          while (u < audioFrameLen) {
+            val t = f * audioFrameLen + u
+            val s =
+              if (big) ((bytes(2 * t) << 8) | (bytes(2 * t + 1) & 0xff)).toShort
+              else ((bytes(2 * t + 1) << 8) | (bytes(2 * t) & 0xff)).toShort
+            e += math.abs(s.toLong)
+            u += 1
+          }
+          energy(f) = e
+          f += 1
+        }
+        Some(energy)
       }
     }
   }
@@ -676,57 +649,16 @@ object Multimodal {
     implicit val enc = RowEncoder.encoderFor(outSchema)
     media.mapPartitions { rows =>
       rows.flatMap { r =>
-        val payload = r.getAs[Array[Byte]](payloadIdx)
-        if (payload == null || payload.isEmpty) None
-        else {
-          val in =
-            try javax.sound.sampled.AudioSystem.getAudioInputStream(
-              new java.io.ByteArrayInputStream(payload))
-            catch {
-              case _: javax.sound.sampled.UnsupportedAudioFileException => null
-              case _: java.io.IOException => null
+        frameEnergies(r.getAs[Array[Byte]](payloadIdx), audioFrames)
+          .filter(_.length == audioFrames).map { energy =>
+            val bands = new Array[Int](nBands)
+            var p = 0
+            while (p < nBits) {
+              if (energy(p + 1) > energy(p)) bands(p / 16) |= 1 << (p % 16)
+              p += 1
             }
-          if (in == null) None
-          else {
-            val fmt = in.getFormat
-            val bytes = in.readAllBytes()
-            in.close()
-            if (fmt.getSampleSizeInBits != 16 || fmt.getChannels != 1 ||
-              fmt.getEncoding !=
-                javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED) None
-            else {
-              val big = fmt.isBigEndian
-              val nSamples = bytes.length / 2
-              val nFrames = math.min(audioFrames, nSamples / audioFrameLen)
-              val energy = new Array[Long](nFrames)
-              var f = 0
-              while (f < nFrames) {
-                var e = 0L
-                var u = 0
-                while (u < audioFrameLen) {
-                  val t = f * audioFrameLen + u
-                  val s =
-                    if (big) ((bytes(2 * t) << 8) | (bytes(2 * t + 1) & 0xff)).toShort
-                    else ((bytes(2 * t + 1) << 8) | (bytes(2 * t) & 0xff)).toShort
-                  e += math.abs(s.toLong)
-                  u += 1
-                }
-                energy(f) = e
-                f += 1
-              }
-              if (nFrames < audioFrames) None
-              else {
-                val bands = new Array[Int](nBands)
-                var p = 0
-                while (p < nBits) {
-                  if (energy(p + 1) > energy(p)) bands(p / 16) |= 1 << (p % 16)
-                  p += 1
-                }
-                Some(Row(r.getLong(idIdx), bands.toSeq))
-              }
-            }
+            Row(r.getLong(idIdx), bands.toSeq)
           }
-        }
       }
     }
   }
@@ -836,7 +768,6 @@ object Multimodal {
     require(grid >= 4 && (grid * grid) % 16 == 0,
       "grid^2 must split into 16-bit bands")
     require(stride >= 1, "stride must be positive")
-    val nBands = grid * grid / 16
     val inSchema = media.schema
     val idIdx = inSchema.fieldIndex("media_id")
     val payloadIdx = inSchema.fieldIndex("payload")
@@ -862,30 +793,7 @@ object Multimodal {
               val n = reader.getNumImages(true)
               val id = r.getLong(idIdx)
               (0 until n by stride).iterator.map { f =>
-                val img = reader.read(f)
-                val w = img.getWidth
-                val h = img.getHeight
-                val g = new Array[Int](grid * grid)
-                var sum = 0L
-                var j = 0
-                while (j < grid) {
-                  var i = 0
-                  while (i < grid) {
-                    val px = img.getRGB((i * w) / grid, (j * h) / grid) & 0xff
-                    g(j * grid + i) = px
-                    sum += px
-                    i += 1
-                  }
-                  j += 1
-                }
-                val mean = sum / (grid * grid)
-                val bands = new Array[Int](nBands)
-                var p = 0
-                while (p < grid * grid) {
-                  if (g(p) >= mean) bands(p / 16) |= 1 << (p % 16)
-                  p += 1
-                }
-                Row(id, f, bands.toSeq)
+                Row(id, f, aHashOf(reader.read(f), grid).toSeq)
               }.toVector.iterator
             } catch {
               case _: java.io.IOException => Iterator.empty

@@ -20,6 +20,10 @@ import org.apache.spark.sql.functions._
   *    explode to (band, key, member), harvest each bucket with ONE
   *    aggregation, expand pairs only within buckets. Shuffle volume is
   *    O(docs x bands); pair expansion is quadratic only within `maxBucket`;
+  *  - every fingerprint family (MinHash, SimHash, aHash, aHash + dHash)
+  *    pairs through ONE harvest, [[fingerprintPairGraph]] (exact
+  *    duplicates collapse to one representative before the band harvest),
+  *    and both incremental store probes are ONE [[incrementalPairs]];
   *  - hot buckets (boilerplate floods) are dropped whole by the `maxBucket`
   *    cap — the documented recall/robustness trade of production LSH dedup —
   *    so no operator here can go quadratic on skewed data.
@@ -116,6 +120,130 @@ object Dedup {
       .select(col("p.a").as("m_a"), col("p.b").as("m_b"))
   }
 
+  /** The one near-dup harvest every fingerprint family (MinHash, SimHash,
+    * aHash, aHash + dHash) pairs through: collapse → band → verify →
+    * expand. `fp` is `(id, keyCols…)`; `bandKeys` is an array expression
+    * over the key columns whose positions are the bands; `verify` maps the
+    * two fingerprint structs (fields = `keyCols`) to named metrics, `keep`
+    * filters on them, and `exact` gives the metrics' values for two ids of
+    * one exact-duplicate group.
+    *
+    * Exact-duplicate collapse: identical fingerprints land together in
+    * every band bucket and would expand quadratically in each, so the
+    * harvest runs over one representative per distinct fingerprint (`rep`
+    * = the group's min id) and the id groups re-expand afterwards — the
+    * quadratic stage shrinks from ids² to fingerprints² per bucket.
+    * `maxBucket` caps two grains: distinct fingerprints per band bucket
+    * ([[bucketPairs]]) and ids per group (same capped collect; an over-cap
+    * duplication flood is dropped whole — its quadratic pair set belongs
+    * in a group representation, not a pair list). Rep pairs are
+    * canonicalized (`least`/`greatest`) before the band-duplicate
+    * `distinct`, so the pair set does not depend on member order.
+    *
+    * Returns `(members, repPairs, pairs)`: `members` is `(id, rep)` for
+    * every grouped id; `repPairs` is the verified cross-group pair set at
+    * the representative grain `(id_a, id_b)`; `pairs` is the expanded
+    * `(id_a, id_b, metrics…)` output, `id_a < id_b`, unique by
+    * construction (each id has one fingerprint, cross and within pairs
+    * are disjoint). Connected components need only the rep grain: rep =
+    * min member, so min-reachable-rep == min-reachable-member, and the
+    * Σ group² within-clique edges are never traversed. */
+  private def fingerprintPairGraph(
+      fp: DataFrame,
+      keyCols: Seq[String],
+      bandKeys: Column,
+      verify: (Column, Column) => Seq[(String, Column)],
+      keep: Column,
+      exact: Seq[Column],
+      maxBucket: Int): (DataFrame, DataFrame, DataFrame) = {
+    val keys = keyCols.map(col)
+    val wcap = org.apache.spark.sql.expressions.Window
+      .partitionBy(keys: _*).orderBy(monotonically_increasing_id())
+    val groups = graft.Caching.track(
+      fp.withColumn("__rn", row_number().over(wcap))
+        .filter(col("__rn") <= maxBucket + 1)
+        .groupBy(keys: _*).agg(sort_array(collect_list(col("id"))).as("ids"))
+        .filter(size(col("ids")) <= maxBucket)
+        .withColumn("rep", element_at(col("ids"), 1)))
+    val banded = groups.select(col("rep"), posexplode(bandKeys).as(Seq("bno", "bk")))
+    val repPairs = bucketPairs(banded, Seq(col("bno"), col("bk")), col("rep"), maxBucket)
+      .select(least(col("m_a"), col("m_b")).as("ra"),
+        greatest(col("m_a"), col("m_b")).as("rb"))
+      .distinct()
+    def side(s: String): DataFrame = groups.select(col("rep").as(s"r$s"),
+      col("ids").as(s"i$s"), struct(keys: _*).as(s"f$s"))
+    val metrics = verify(col("fa"), col("fb"))
+    val verified = repPairs.join(side("a"), "ra").join(side("b"), "rb")
+      .select(Seq(col("ra"), col("rb"), col("ia"), col("ib")) ++
+        metrics.map { case (n, c) => c.as(n) }: _*)
+      .filter(keep)
+    val names = metrics.map(_._1)
+    val cross = verified.select(
+      explode(flatten(transform(col("ia"), a =>
+        transform(col("ib"), b => struct(a.as("x"), b.as("y")))))).as("p") +:
+        names.map(col): _*)
+      .select(least(col("p.x"), col("p.y")).as("id_a") +:
+        greatest(col("p.x"), col("p.y")).as("id_b") +: names.map(col): _*)
+    // within-group pairs: ids are pre-sorted, so x < y
+    val within = groups.filter(size(col("ids")) >= 2)
+      .select(explode(flatten(
+        transform(col("ids"), (a, i) =>
+          transform(slice(col("ids"), i + lit(2), size(col("ids")) - i - 1),
+            b => struct(a.as("x"), b.as("y")))))).as("p"))
+      .select(col("p.x").as("id_a") +: col("p.y").as("id_b") +:
+        names.zip(exact).map { case (n, c) => c.as(n) }: _*)
+    (groups.select(explode(col("ids")).as("id"), col("rep")),
+      verified.select(col("ra").as("id_a"), col("rb").as("id_b")),
+      cross.unionByName(within))
+  }
+
+  /** The one incremental probe beside [[fingerprintPairGraph]]: a new
+    * batch's band rows `(id, fpCols…, bno, bk)` probe the accumulated band
+    * store (never recomputed) and only pairs with AT LEAST ONE new side
+    * are emitted. The batch's band keys are small, so a broadcast
+    * semi-join prunes the store scan to the touched buckets (partition
+    * pruning when the store is partitioned by band key).
+    *
+    * Bucket survival (2 ≤ members ≤ maxBucket) is evaluated over the FULL
+    * membership (store + batch) of each touched bucket, so the emitted
+    * pairs are exactly `pairs(store ∪ new) − pairs(store)` while buckets
+    * stay under the cap. A bucket pushed OVER maxBucket by the batch emits
+    * nothing now, but its old-old pairs were emitted by an earlier run and
+    * are not retracted (dedup decisions are append-only downstream). The
+    * store is id-grained, so `maxBucket` counts raw rows here where the
+    * one-shot harvest counts distinct fingerprints; near the cap on a
+    * duplicate-flooded bucket the two can drop different pairs. An id
+    * present in both the batch and the store (a replayed batch) shares
+    * every bucket with itself; the `id ≠ id` guard keeps that self-pair
+    * out. */
+  private def incrementalPairs(
+      newBand: DataFrame,
+      storeBand: DataFrame,
+      fpCols: Seq[String],
+      verify: (Column, Column) => Seq[(String, Column)],
+      keep: Column,
+      maxBucket: Int): DataFrame = {
+    val tagged = storeBand.withColumn("__new", lit(false))
+      .unionByName(newBand.withColumn("__new", lit(true)))
+    val touched = tagged.join(
+      broadcast(newBand.select("bno", "bk").distinct()), Seq("bno", "bk"), "left_semi")
+    bucketPairs(touched, Seq(col("bno"), col("bk")),
+      struct(col("id"), struct(fpCols.map(col): _*).as("fp"), col("__new")), maxBucket)
+      .filter((col("m_a.__new") || col("m_b.__new")) && col("m_a.id") =!= col("m_b.id"))
+      .select(least(col("m_a.id"), col("m_b.id")).as("id_a") +:
+        greatest(col("m_a.id"), col("m_b.id")).as("id_b") +:
+        verify(col("m_a.fp"), col("m_b.fp")).map { case (n, c) => c.as(n) }: _*)
+      .filter(keep)
+      .distinct()
+  }
+
+  /** Exact Hamming distance between two `nBands`-long arrays of 16-bit
+    * band integers. */
+  private def bandHamming(a: Column, b: Column, nBands: Int): Column =
+    (0 until nBands).map(i =>
+      bit_count(element_at(a, i + 1).bitwiseXOR(element_at(b, i + 1)))).reduce(_ + _)
+      .cast("long")
+
   /** MinHash-LSH near-duplicate candidate pairs with estimated Jaccard.
     * Returns (id_a, id_b, est_jaccard) with id_a < id_b, deduplicated across
     * bands. Only pairs sharing >=1 LSH band collide; the estimate comes from
@@ -147,46 +275,12 @@ object Dedup {
       numHashes: Int,
       rowsPerBand: Int,
       maxBucket: Int = 1000,
-      portable: Boolean = false): DataFrame = {
-    // Exact-dup collapse (same move as simhashPairs): identical documents
-    // carry identical SIGNATURES and collide in every band, expanding
-    // quadratically in each. Harvest over distinct signatures, then expand
-    // the exact-dup id groups back — within-group pairs estimate 1.0 by
-    // definition, cross pairs inherit the representative agreement.
-    // maxBucket bounds distinct signatures per bucket AND ids per group
-    // (an over-cap duplication flood is dropped whole, as before).
-    val wcap = org.apache.spark.sql.expressions.Window
-      .partitionBy("sig").orderBy(monotonically_increasing_id())
-    val groups = graft.Caching.track(
-      sigs.withColumn("__rn", row_number().over(wcap))
-        .filter(col("__rn") <= maxBucket + 1)
-        .groupBy("sig").agg(sort_array(collect_list(col("id"))).as("ids"))
-        .filter(size(col("ids")) <= maxBucket))
-    val banded = bandify(groups.select(col("sig")), numHashes, rowsPerBand, portable)
-    val repPairs = bucketPairs(banded, Seq(col("bno"), col("bk")),
-      col("sig").as("s"), maxBucket)
-      .select(col("m_a").as("sa"), col("m_b").as("sb"))
-      .distinct()
-      .withColumn("est_jaccard", sigAgreement(col("sa"), col("sb"), numHashes))
-    val cross = repPairs
-      .join(groups.select(col("sig").as("sa"), col("ids").as("ia")), "sa")
-      .join(groups.select(col("sig").as("sb"), col("ids").as("ib")), "sb")
-      .select(explode(flatten(transform(col("ia"), a =>
-        transform(col("ib"), b => struct(a.as("x"), b.as("y")))))).as("p"),
-        col("est_jaccard"))
-      .select(least(col("p.x"), col("p.y")).as("id_a"),
-        greatest(col("p.x"), col("p.y")).as("id_b"), col("est_jaccard"))
-    val within = groups.filter(size(col("ids")) >= 2)
-      .select(explode(flatten(
-        transform(col("ids"), (a, i) =>
-          transform(slice(col("ids"), i + lit(2), size(col("ids")) - i - 1),
-            b => struct(a.as("x"), b.as("y")))))).as("p"))
-      .select(col("p.x").as("id_a"), col("p.y").as("id_b"),
-        lit(1.0).as("est_jaccard"))
-    // unique by construction: sig-pairs band-deduped pre-expansion, each id
-    // has one signature, within/cross disjoint
-    cross.unionByName(within)
-  }
+      portable: Boolean = false): DataFrame =
+    // exact duplicates share a signature: within-group pairs estimate 1.0
+    fingerprintPairGraph(sigs.select(col("id"), col("sig")), Seq("sig"),
+      bandKeys(numHashes, rowsPerBand, portable),
+      (a, b) => Seq("est_jaccard" -> sigAgreement(a("sig"), b("sig"), numHashes)),
+      lit(true), Seq(lit(1.0)), maxBucket)._3
 
   /** Band-bucket occupancy probe for the minhash pair harvest — the LSH
     * twin of [[SkewJoin.joinSizeEstimate]]: the harvest's expansion work is
@@ -208,11 +302,18 @@ object Dedup {
     val distinctSigs =
       minhashSigs(docs, idCol, textCol, shingleSize, numHashes, portable)
         .select("sig").distinct()
-    val occ = bandify(distinctSigs, numHashes, rowsPerBand, portable)
-      .groupBy("bno", "bk").agg(count(lit(1)).as("occ"))
+    bucketCensus(bandify(distinctSigs, numHashes, rowsPerBand, portable), "n_sig_band_rows")
+  }
+
+  /** The one-row band-bucket census every cost probe reads: over the
+    * `(bno, bk)` occupancy of `banded`, `(n_buckets, <bandRows>, max_occ,
+    * n_multi_buckets, pair_work)` with `pair_work` = Σ occ·(occ−1)/2, the
+    * in-bucket pair expansion a harvest would pay. */
+  private def bucketCensus(banded: DataFrame, bandRows: String): DataFrame = {
+    val occ = banded.groupBy("bno", "bk").agg(count(lit(1)).as("occ"))
     occ.agg(
       count(lit(1)).as("n_buckets"),
-      sum(col("occ")).as("n_sig_band_rows"),
+      sum(col("occ")).as(bandRows),
       max(col("occ")).as("max_occ"),
       sum(when(col("occ") >= 2, lit(1L)).otherwise(lit(0L))).as("n_multi_buckets"),
       // occ*(occ-1) is even, so the halved double is integer-exact
@@ -267,24 +368,25 @@ object Dedup {
       .select(col("id"), array((0 until numHashes).map(i => col(s"m$i")): _*).as("sig"))
   }
 
-  /** Explode a signature-carrying frame into per-band rows `(…, bno, bk)`.
-    * Band keys: the portable family keeps the raw component CSV (engine
-    * replayable); the default compresses each band to one xxhash64. */
-  private def bandify(
-      withSig: DataFrame,
-      numHashes: Int,
-      rowsPerBand: Int,
-      portable: Boolean): DataFrame = {
-    val numBands = numHashes / rowsPerBand
-    def bandKey(b: Int): Column = {
+  /** The band keys of a `sig` column, one array element per band: the
+    * portable family keeps the raw component CSV (engine replayable); the
+    * default compresses each band to one xxhash64. */
+  private def bandKeys(numHashes: Int, rowsPerBand: Int, portable: Boolean): Column =
+    array((0 until numHashes / rowsPerBand).map { b =>
       val csv = array_join(
         transform(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand),
           x => x.cast("string")), ",")
       if (portable) csv else xxhash64(lit(b), csv).cast("string")
-    }
-    withSig.select(withSig.columns.map(col) :+
-      posexplode(array((0 until numBands).map(bandKey): _*)).as(Seq("bno", "bk")): _*)
-  }
+    }: _*)
+
+  /** Explode a signature-carrying frame into per-band rows `(…, bno, bk)`. */
+  private def bandify(
+      withSig: DataFrame,
+      numHashes: Int,
+      rowsPerBand: Int,
+      portable: Boolean): DataFrame =
+    withSig.select(withSig.columns.map(col) :+ posexplode(
+      bandKeys(numHashes, rowsPerBand, portable)).as(Seq("bno", "bk")): _*)
 
   /** Signature-agreement Jaccard estimate between two minhash signatures. */
   private def sigAgreement(a: Column, b: Column, numHashes: Int): Column =
@@ -292,42 +394,20 @@ object Dedup {
       when(element_at(a, i + 1) === element_at(b, i + 1), lit(1)).otherwise(lit(0)))
       .reduce(_ + _).cast("double") / numHashes.toDouble)
 
-  /** Incremental near-dup candidates: pairs with AT LEAST ONE side in the
-    * new batch, harvested from only the buckets the batch touches — the
-    * corpus's band table ([[minhashBandTable]], persisted as the signature
-    * store) is probed, never recomputed. This is how a 100 TB corpus
-    * absorbs a daily increment: hash the batch, semi-join its band keys
-    * into the store, and harvest.
-    *
-    * Bucket survival (2 <= members <= maxBucket) is evaluated over the
-    * FULL membership (store + batch) of each touched bucket, so the
-    * emitted pairs are exactly `batchPairs(store ∪ new) \ batchPairs
-    * (store)` — pinned in OperatorsSpec — with one boundary documented:
-    * a bucket pushed OVER maxBucket by the batch emits nothing now, but
-    * its old-old pairs were already emitted in a previous run and are not
-    * retracted (dedup decisions are append-only downstream).
-    */
+  /** Incremental MinHash near-dup candidates: the corpus's band table
+    * ([[minhashBandTable]], persisted as the signature store) is probed by
+    * a batch's band rows through [[incrementalPairs]], never recomputed —
+    * how a 100 TB corpus absorbs a daily increment. Emits exactly
+    * `minhashCandidatePairs(store ∪ new) − minhashCandidatePairs(store)`
+    * while buckets stay under `maxBucket` (pinned in PipelineOpsSpec). */
   def minhashIncrementalPairs(
       newBand: DataFrame,
       storeBand: DataFrame,
       numHashes: Int = 32,
-      maxBucket: Int = 1000): DataFrame = {
-    val tagged = storeBand.withColumn("__new", lit(false))
-      .unionByName(newBand.withColumn("__new", lit(true)))
-    // the batch's band keys are small: broadcast the semi-join that prunes
-    // the store scan to touched buckets (at corpus scale the store is also
-    // partitioned by band key, so this prune becomes partition pruning)
-    val touched = tagged.join(
-      broadcast(newBand.select("bno", "bk").distinct()), Seq("bno", "bk"), "left_semi")
-    bucketPairs(touched, Seq(col("bno"), col("bk")),
-      struct(col("id"), col("sig"), col("__new")), maxBucket)
-      .filter(col("m_a.__new") || col("m_b.__new"))
-      .select(
-        least(col("m_a.id"), col("m_b.id")).as("id_a"),
-        greatest(col("m_a.id"), col("m_b.id")).as("id_b"),
-        sigAgreement(col("m_a.sig"), col("m_b.sig"), numHashes).as("est_jaccard"))
-      .distinct()
-  }
+      maxBucket: Int = 1000): DataFrame =
+    incrementalPairs(newBand, storeBand, Seq("sig"),
+      (a, b) => Seq("est_jaccard" -> sigAgreement(a("sig"), b("sig"), numHashes)),
+      lit(true), maxBucket)
 
   /** Exact n-gram Jaccard for given candidate pairs (verification pass after
     * LSH): joins shingle sets back and computes true Jaccard. */
@@ -399,18 +479,10 @@ object Dedup {
     * exact `bit_count(xor)` filter keeps true ones. Complete for
     * maxHamming <= 3; higher thresholds would need more blocks.
     *
-    * Exact-duplicate collapse: identical documents have IDENTICAL
-    * fingerprints, land together in all four block buckets, and expand
-    * quadratically in each — so the harvest runs over DISTINCT fingerprints
-    * and the id groups are re-expanded afterwards (within-group pairs are
-    * Hamming 0 by definition; cross-group pairs inherit the representative
-    * distance). Output is identical; the quadratic stage shrinks from docs²
-    * to fingerprints² per bucket, which is the difference between linear
-    * and blow-up on corpora with heavy exact duplication. `maxBucket`
-    * consequently caps two grains: distinct FINGERPRINTS per block bucket,
-    * and ids per exact-dup group (an over-cap duplication flood is dropped
-    * whole, as before — its quadratic pair set belongs in the exact-dedup
-    * GROUP representation, [[fingerprintGroups]], not a pair list).
+    * The harvest is [[fingerprintPairGraph]]: exact duplicates collapse
+    * to one representative per distinct fingerprint (within-group pairs
+    * are Hamming 0), and `maxBucket` caps distinct fingerprints per block
+    * bucket and ids per exact-dup group.
     *
     * Input: output of [[simhashTable]] (id, simhash). Output:
     * (id_a, id_b, hamming), id_a < id_b, hamming <= maxHamming.
@@ -426,66 +498,23 @@ object Dedup {
     val blockKeys = array((0 until 4).map { j =>
       shiftrightunsigned(col("simhash"), blockBits * j).bitwiseAND(lit(mask))
     }: _*)
-    // one row per distinct fingerprint, carrying its exact-dup id group.
-    // maxBucket bounds the GROUP too (same capped-collect pattern as
-    // bucketPairs): a duplication flood past maxBucket is dropped whole —
-    // its pair set is quadratic in the flood size and belongs to the
-    // exact-dedup GROUP representation (fingerprintGroups), not a pair
-    // list. Tracked in the bounded cache registry (three consumers below).
-    val wcap = org.apache.spark.sql.expressions.Window
-      .partitionBy("simhash").orderBy(monotonically_increasing_id())
-    val groups = graft.Caching.track(
-      sims.withColumn("__rn", row_number().over(wcap))
-        .filter(col("__rn") <= maxBucket + 1)
-        .groupBy("simhash").agg(sort_array(collect_list(col("id"))).as("ids"))
-        .filter(size(col("ids")) <= maxBucket))
-    val banded = groups.select(col("simhash"),
-      posexplode(blockKeys).as(Seq("bno", "bk")))
-    val repPairs = bucketPairs(banded, Seq(col("bno"), col("bk")),
-      col("simhash").as("s"), maxBucket)
-      .select(col("m_a").as("sa"), col("m_b").as("sb"),
-        bit_count(col("m_a").bitwiseXOR(col("m_b"))).cast("long").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-    // cross-group expansion: every id of group a against every id of group b
-    val cross = repPairs
-      .join(groups.select(col("simhash").as("sa"), col("ids").as("ia")), "sa")
-      .join(groups.select(col("simhash").as("sb"), col("ids").as("ib")), "sb")
-      .select(explode(flatten(transform(col("ia"), a =>
-        transform(col("ib"), b => struct(a.as("x"), b.as("y")))))).as("p"),
-        col("hamming"))
-      .select(least(col("p.x"), col("p.y")).as("id_a"),
-        greatest(col("p.x"), col("p.y")).as("id_b"), col("hamming"))
-    // within-group pairs: exact duplicates, Hamming 0 (ids pre-sorted)
-    val within = groups.filter(size(col("ids")) >= 2)
-      .select(explode(flatten(
-        transform(col("ids"), (a, i) =>
-          transform(slice(col("ids"), i + lit(2), size(col("ids")) - i - 1),
-            b => struct(a.as("x"), b.as("y")))))).as("p"))
-      .select(col("p.x").as("id_a"), col("p.y").as("id_b"),
-        lit(0L).as("hamming"))
-    // no final distinct needed: band-duplicates were folded at the
-    // representative grain (repPairs.distinct, pre-expansion — far cheaper
-    // than distinct over the expanded id pairs), each id maps to exactly
-    // one fingerprint, and within/cross are disjoint by construction
-    cross.unionByName(within)
+    fingerprintPairGraph(sims.select(col("id"), col("simhash")), Seq("simhash"),
+      blockKeys,
+      (a, b) => Seq("hamming" ->
+        bit_count(a("simhash").bitwiseXOR(b("simhash"))).cast("long")),
+      col("hamming") <= maxHamming, Seq(lit(0L)), maxBucket)._3
   }
 
-  /** Perceptual-hash image near-dup pairing — [[simhashPairs]]'s topology
-    * applied to the multimodal grain: fingerprints are aHash band arrays
-    * ([[graft.multimodal.Multimodal.aHashBands]], `grid²/16` ints of 16
-    * bits each), banding IS the band split (by pigeonhole any pair within
-    * Hamming `maxHamming ≤ nBands − 1` agrees on ≥ 1 whole band, so with
-    * 4 bands the candidate harvest is COMPLETE to Hamming 3), and the
-    * verifier is exact `bit_count(xor)` per band.
-    *
-    * Same scale posture as the text family: exact-duplicate images (byte-
-    * identical fingerprints — crops/re-encodes of one asset flood real
-    * corpora) collapse to ONE representative before the quadratic bucket
-    * harvest and re-expand after, and `maxBucket` caps both the distinct-
-    * fingerprint bucket occupancy and the exact-dup group size (an
-    * over-cap flood drops whole — its quadratic pair set belongs in a
-    * group representation, not a pair list). Never an all-pairs join.
+  /** Perceptual-hash image near-dup pairing: fingerprints are aHash band
+    * arrays ([[graft.multimodal.Multimodal.aHashBands]], `grid²/16` ints
+    * of 16 bits each), banding IS the band split (by pigeonhole any pair
+    * within Hamming `maxHamming ≤ nBands − 1` agrees on ≥ 1 whole band, so
+    * with 4 bands the candidate harvest is COMPLETE to Hamming 3), and the
+    * verifier is exact `bit_count(xor)` per band. The harvest is
+    * [[fingerprintPairGraph]]: exact-duplicate images (crops/re-encodes of
+    * one asset flood real corpora) collapse to one representative, and
+    * `maxBucket` caps bucket occupancy and group size. Never an all-pairs
+    * join.
     *
     * Input: `(idCol, bandsCol array<int>)`. Output:
     * `(id_a, id_b, hamming)`, `id_a < id_b`, `hamming ≤ maxHamming`. */
@@ -498,20 +527,11 @@ object Dedup {
       nBands: Int = 4): DataFrame =
     aHashPairGraph(hashes, idCol, bandsCol, maxHamming, maxBucket, nBands)._3
 
-  /** Rep-grain decomposition of [[aHashPairs]]: `(members, repPairs,
-    * pairs)` where `members` is (id, rep) — every row's exact-fingerprint
-    * group representative — `repPairs` is the verified cross-group pair
-    * set AT THE REPRESENTATIVE GRAIN (id_a, id_b), and `pairs` is the
-    * fully expanded [[aHashPairs]] output (lazy — never executed unless
-    * consumed).
-    *
-    * Why expose the grains: connected components over the EXPANDED graph
-    * traverses Σ group² within-clique edges — quadratic in exact-copy
-    * count, the dominant mass on dup-heavy corpora — while the components
-    * themselves are determined by the rep graph alone (rep = min member
-    * id, so min-reachable-rep == min-reachable-member). Dedup GROUP
-    * consumers (the q239 manifest) run CC on `repPairs` and label members
-    * through `members`; only pair AUDITS (q240) pay for the expansion. */
+  /** Rep-grain decomposition of [[aHashPairs]]: [[fingerprintPairGraph]]'s
+    * `(members, repPairs, pairs)`. Dedup GROUP consumers (the q239
+    * manifest) run CC on `repPairs` and label members through `members`;
+    * only pair AUDITS (q240) pay for the expansion (`pairs` is lazy —
+    * never executed unless consumed). */
   def aHashPairGraph(
       hashes: DataFrame,
       idCol: String,
@@ -521,51 +541,10 @@ object Dedup {
       nBands: Int = 4): (DataFrame, DataFrame, DataFrame) = {
     require(maxHamming >= 0 && maxHamming < nBands,
       s"$nBands bands are complete only to Hamming ${nBands - 1}")
-    val hs = hashes.select(col(idCol).as("id"), col(bandsCol).as("bands"))
-    val wcap = org.apache.spark.sql.expressions.Window
-      .partitionBy("bands").orderBy(monotonically_increasing_id())
-    val groups = graft.Caching.track(
-      hs.withColumn("__rn", row_number().over(wcap))
-        .filter(col("__rn") <= maxBucket + 1)
-        .groupBy("bands").agg(sort_array(collect_list(col("id"))).as("ids"))
-        .filter(size(col("ids")) <= maxBucket)
-        .withColumn("rep", element_at(col("ids"), 1)))
-    val banded = groups.select(col("rep"),
-      posexplode(col("bands")).as(Seq("bno", "bk")))
-    val repPairs = bucketPairs(banded, Seq(col("bno"), col("bk")),
-      col("rep").as("r"), maxBucket)
-      .select(least(col("m_a"), col("m_b")).as("ra"),
-        greatest(col("m_a"), col("m_b")).as("rb"))
-      .distinct()
-    val verified = repPairs
-      .join(groups.select(col("rep").as("ra"), col("bands").as("ba"),
-        col("ids").as("ia")), "ra")
-      .join(groups.select(col("rep").as("rb"), col("bands").as("bb"),
-        col("ids").as("ib")), "rb")
-      .withColumn("hamming",
-        (0 until nBands).map(i =>
-          bit_count(element_at(col("ba"), i + 1)
-            .bitwiseXOR(element_at(col("bb"), i + 1)))).reduce(_ + _)
-          .cast("long"))
-      .filter(col("hamming") <= maxHamming)
-    val cross = verified.select(
-      explode(flatten(transform(col("ia"), a =>
-        transform(col("ib"), b => struct(a.as("x"), b.as("y")))))).as("p"),
-      col("hamming"))
-      .select(least(col("p.x"), col("p.y")).as("id_a"),
-        greatest(col("p.x"), col("p.y")).as("id_b"), col("hamming"))
-    val within = groups.filter(size(col("ids")) >= 2)
-      .select(explode(flatten(
-        transform(col("ids"), (a, i) =>
-          transform(slice(col("ids"), i + lit(2), size(col("ids")) - i - 1),
-            b => struct(a.as("x"), b.as("y")))))).as("p"))
-      .select(col("p.x").as("id_a"), col("p.y").as("id_b"),
-        lit(0L).as("hamming"))
-    val members = groups.select(col("rep"), explode(col("ids")).as("id"))
-      .select(col("id"), col("rep"))
-    (members,
-      verified.select(col("ra").as("id_a"), col("rb").as("id_b")),
-      cross.unionByName(within))
+    fingerprintPairGraph(hashes.select(col(idCol).as("id"), col(bandsCol).as("bands")),
+      Seq("bands"), col("bands"),
+      (a, b) => Seq("hamming" -> bandHamming(a("bands"), b("bands"), nBands)),
+      col("hamming") <= maxHamming, Seq(lit(0L)), maxBucket)
   }
 
   /** Banded perceptual-fingerprint band table — [[aHashPairs]]'s bucketing
@@ -580,50 +559,21 @@ object Dedup {
     hashes.select(col(idCol).as("id"), col(bandsCol).as("bands"))
       .select(col("id"), col("bands"), posexplode(col("bands")).as(Seq("bno", "bk")))
 
-  /** Incremental perceptual-hash pairing — [[minhashIncrementalPairs]]'s
-    * topology on the aHash grain: new fingerprints probe the accumulated
-    * band store (broadcast semi-join prunes the store scan to touched
-    * buckets — partition pruning when the store is partitioned by band
-    * key), pairs are verified with exact `bit_count(xor)` Hamming, and
-    * only pairs involving a NEW id are emitted — so the telescoping union
-    * of per-batch emissions equals the one-shot [[aHashPairs]] batch set
-    * (pinned in StreamingSpec).
-    *
-    * Grain caveat vs [[aHashPairs]]: this path buckets at the RAW id grain
-    * (the store is an id-keyed band table), so `maxBucket` counts raw rows
-    * where the one-shot batch path counts distinct-fingerprint
-    * representatives and group sizes — near the cap on a duplicate-flooded
-    * bucket the two can drop different pair sets, and the telescoping
-    * parity holds only while buckets stay under BOTH caps (the pinned
-    * specs and all bench scales do). The explicit `id =!= id` guard below
-    * keeps a REPLAYED batch (ids already in the store) from emitting
-    * self-pairs that exist in neither formulation. */
+  /** Incremental perceptual-hash pairing: new fingerprints probe the
+    * accumulated aHash band store ([[aHashBandTable]]) through
+    * [[incrementalPairs]], verified with exact `bit_count(xor)` Hamming —
+    * so the telescoping union of per-batch emissions equals the one-shot
+    * [[aHashPairs]] batch set while buckets stay under both caps (pinned
+    * in StreamingSpec). */
   def aHashIncrementalPairs(
       newBand: DataFrame,
       storeBand: DataFrame,
       maxHamming: Int = 3,
       maxBucket: Int = 10000,
-      nBands: Int = 4): DataFrame = {
-    val tagged = storeBand.withColumn("__new", lit(false))
-      .unionByName(newBand.withColumn("__new", lit(true)))
-    val touched = tagged.join(
-      broadcast(newBand.select("bno", "bk").distinct()), Seq("bno", "bk"), "left_semi")
-    bucketPairs(touched, Seq(col("bno"), col("bk")),
-      struct(col("id"), col("bands"), col("__new")), maxBucket)
-      .filter(col("m_a.__new") || col("m_b.__new"))
-      .filter(col("m_a.id") =!= col("m_b.id"))
-      .withColumn("hamming",
-        (0 until nBands).map(i =>
-          bit_count(element_at(col("m_a.bands"), i + 1)
-            .bitwiseXOR(element_at(col("m_b.bands"), i + 1)))).reduce(_ + _)
-          .cast("long"))
-      .filter(col("hamming") <= maxHamming)
-      .select(
-        least(col("m_a.id"), col("m_b.id")).as("id_a"),
-        greatest(col("m_a.id"), col("m_b.id")).as("id_b"),
-        col("hamming"))
-      .distinct()
-  }
+      nBands: Int = 4): DataFrame =
+    incrementalPairs(newBand, storeBand, Seq("bands"),
+      (a, b) => Seq("hamming" -> bandHamming(a("bands"), b("bands"), nBands)),
+      col("hamming") <= maxHamming, maxBucket)
 
   /** Cross-grid perceptual near-dup pairing — [[aHashPairs]] extended to
     * TWO fingerprint families per image (aHash + dHash,
@@ -640,12 +590,9 @@ object Dedup {
     * of both hashes is bucketed — so the union harvest is complete for the
     * `least(hamming_a, hamming_d) ≤ maxHamming` gate.
     *
-    * Scale posture identical to [[aHashPairs]]: exact-duplicate
-    * fingerprint pairs collapse to one representative before the
-    * quadratic bucket harvest (grain = the COMBINED (abands, dbands)
-    * fingerprint), `maxBucket` caps bucket occupancy and group size, and
-    * the band split doubles from 4 to 8 buckets per image — 2× harvest
-    * rows, never an all-pairs join.
+    * The harvest is [[fingerprintPairGraph]] at the COMBINED (abands,
+    * dbands) fingerprint grain; the band split doubles from 4 to 8
+    * buckets per image — 2× harvest rows, never an all-pairs join.
     *
     * Input: `(idCol, aCol array<int>, dCol array<int>)`. Output:
     * `(id_a, id_b, hamming_a, hamming_d)`, `id_a < id_b`,
@@ -660,9 +607,10 @@ object Dedup {
       nBands: Int = 4): DataFrame =
     dualHashPairGraph(hashes, idCol, aCol, dCol, maxHamming, maxBucket, nBands)._3
 
-  /** Rep-grain decomposition of [[dualHashPairs]] — see [[aHashPairGraph]]
-    * for the grains and why CC consumers want them: `(members, repPairs,
-    * pairs)` at the COMBINED (abands, dbands) fingerprint grain. */
+  /** Rep-grain decomposition of [[dualHashPairs]] — see
+    * [[fingerprintPairGraph]] for the grains and why CC consumers want
+    * them: `(members, repPairs, pairs)` at the COMBINED (abands, dbands)
+    * fingerprint grain. */
   def dualHashPairGraph(
       hashes: DataFrame,
       idCol: String,
@@ -673,58 +621,17 @@ object Dedup {
       nBands: Int = 4): (DataFrame, DataFrame, DataFrame) = {
     require(maxHamming >= 0 && maxHamming < nBands,
       s"$nBands bands per family are complete only to Hamming ${nBands - 1}")
-    val hs = hashes.select(col(idCol).as("id"),
-      col(aCol).as("ab"), col(dCol).as("db"))
-    val wcap = org.apache.spark.sql.expressions.Window
-      .partitionBy("ab", "db").orderBy(monotonically_increasing_id())
-    val groups = graft.Caching.track(
-      hs.withColumn("__rn", row_number().over(wcap))
-        .filter(col("__rn") <= maxBucket + 1)
-        .groupBy("ab", "db").agg(sort_array(collect_list(col("id"))).as("ids"))
-        .filter(size(col("ids")) <= maxBucket)
-        .withColumn("rep", element_at(col("ids"), 1)))
     // band families share one bucket key space: bno 0..nBands-1 = aHash
     // bands, nBands..2*nBands-1 = dHash bands — the union harvest is one
     // posexplode over the concatenated band arrays
-    val banded = groups.select(col("rep"),
-      posexplode(concat(col("ab"), col("db"))).as(Seq("bno", "bk")))
-    val repPairs = bucketPairs(banded, Seq(col("bno"), col("bk")),
-      col("rep").as("r"), maxBucket)
-      .select(least(col("m_a"), col("m_b")).as("ra"),
-        greatest(col("m_a"), col("m_b")).as("rb"))
-      .distinct()
-    def hamming(x: String, y: String): Column =
-      (0 until nBands).map(i =>
-        bit_count(element_at(col(x), i + 1)
-          .bitwiseXOR(element_at(col(y), i + 1)))).reduce(_ + _)
-        .cast("long")
-    val verified = repPairs
-      .join(groups.select(col("rep").as("ra"), col("ab").as("aa"),
-        col("db").as("da"), col("ids").as("ia")), "ra")
-      .join(groups.select(col("rep").as("rb"), col("ab").as("abb"),
-        col("db").as("dbb"), col("ids").as("ib")), "rb")
-      .withColumn("hamming_a", hamming("aa", "abb"))
-      .withColumn("hamming_d", hamming("da", "dbb"))
-      .filter(least(col("hamming_a"), col("hamming_d")) <= maxHamming)
-    val cross = verified.select(
-      explode(flatten(transform(col("ia"), a =>
-        transform(col("ib"), b => struct(a.as("x"), b.as("y")))))).as("p"),
-      col("hamming_a"), col("hamming_d"))
-      .select(least(col("p.x"), col("p.y")).as("id_a"),
-        greatest(col("p.x"), col("p.y")).as("id_b"),
-        col("hamming_a"), col("hamming_d"))
-    val within = groups.filter(size(col("ids")) >= 2)
-      .select(explode(flatten(
-        transform(col("ids"), (a, i) =>
-          transform(slice(col("ids"), i + lit(2), size(col("ids")) - i - 1),
-            b => struct(a.as("x"), b.as("y")))))).as("p"))
-      .select(col("p.x").as("id_a"), col("p.y").as("id_b"),
-        lit(0L).as("hamming_a"), lit(0L).as("hamming_d"))
-    val members = groups.select(col("rep"), explode(col("ids")).as("id"))
-      .select(col("id"), col("rep"))
-    (members,
-      verified.select(col("ra").as("id_a"), col("rb").as("id_b")),
-      cross.unionByName(within))
+    fingerprintPairGraph(
+      hashes.select(col(idCol).as("id"), col(aCol).as("ab"), col(dCol).as("db")),
+      Seq("ab", "db"), concat(col("ab"), col("db")),
+      (a, b) => Seq(
+        "hamming_a" -> bandHamming(a("ab"), b("ab"), nBands),
+        "hamming_d" -> bandHamming(a("db"), b("db"), nBands)),
+      least(col("hamming_a"), col("hamming_d")) <= maxHamming,
+      Seq(lit(0L), lit(0L)), maxBucket)
   }
 
   /** Cost probe for the dual-hash (aHash ∪ dHash) harvest — BOTH grains
@@ -749,27 +656,24 @@ object Dedup {
       hashes: DataFrame,
       idCol: String,
       aCol: String,
-      dCol: String): DataFrame = {
-    val fp = hashes.select(col(idCol).as("id"),
-      col(aCol).as("ab"), col(dCol).as("db"))
-    val groups = fp.groupBy("ab", "db").agg(count(lit(1)).as("cnt"))
+      dCol: String): DataFrame =
+    fingerprintCensus(hashes.select(col(aCol).as("ab"), col(dCol).as("db")),
+      concat(col("ab"), col("db")), "n_images", "n_fp_band_rows")
+
+  /** Both grains of a fingerprint harvest's work: `(<nRows>,
+    * n_fingerprints, exact_dup_pairs)` over the exact-fingerprint groups
+    * of `fp` (every column is the fingerprint), crossed with the
+    * [[bucketCensus]] of one `bandKeys` explode per distinct fingerprint. */
+  private def fingerprintCensus(
+      fp: DataFrame, bandKeys: Column, nRows: String, bandRows: String): DataFrame = {
+    val groups = fp.groupBy(fp.columns.map(col): _*).agg(count(lit(1)).as("cnt"))
     val grain = groups.agg(
-      sum(col("cnt")).as("n_images"),
+      sum(col("cnt")).as(nRows),
       count(lit(1)).as("n_fingerprints"),
       sum((col("cnt") * (col("cnt") - lit(1L))) / lit(2.0)).cast("long")
         .as("exact_dup_pairs"))
-    val occ = groups
-      .select(posexplode(concat(col("ab"), col("db"))).as(Seq("bno", "bk")))
-      .groupBy("bno", "bk").agg(count(lit(1)).as("occ"))
-    val buckets = occ.agg(
-      count(lit(1)).as("n_buckets"),
-      sum(col("occ")).as("n_fp_band_rows"),
-      max(col("occ")).as("max_occ"),
-      sum(when(col("occ") >= 2, lit(1L)).otherwise(lit(0L))).as("n_multi_buckets"),
-      // occ*(occ-1) is even, so the halved double is integer-exact
-      sum((col("occ") * (col("occ") - lit(1L))) / lit(2.0)).cast("long")
-        .as("pair_work"))
-    grain.crossJoin(buckets)
+    grain.crossJoin(bucketCensus(
+      groups.select(posexplode(bandKeys).as(Seq("bno", "bk"))), bandRows))
   }
 
   /** Cost probe for a single-family banded-hash harvest ([[aHashPairs]]'s
@@ -785,26 +689,9 @@ object Dedup {
   def aHashBucketStats(
       hashes: DataFrame,
       idCol: String,
-      bandsCol: String): DataFrame = {
-    val fp = hashes.select(col(idCol).as("id"), col(bandsCol).as("bands"))
-    val groups = fp.groupBy("bands").agg(count(lit(1)).as("cnt"))
-    val grain = groups.agg(
-      sum(col("cnt")).as("n_rows"),
-      count(lit(1)).as("n_fingerprints"),
-      sum((col("cnt") * (col("cnt") - lit(1L))) / lit(2.0)).cast("long")
-        .as("exact_dup_pairs"))
-    val occ = groups
-      .select(posexplode(col("bands")).as(Seq("bno", "bk")))
-      .groupBy("bno", "bk").agg(count(lit(1)).as("occ"))
-    val buckets = occ.agg(
-      count(lit(1)).as("n_buckets"),
-      sum(col("occ")).as("n_band_rows"),
-      max(col("occ")).as("max_occ"),
-      sum(when(col("occ") >= 2, lit(1L)).otherwise(lit(0L))).as("n_multi_buckets"),
-      sum((col("occ") * (col("occ") - lit(1L))) / lit(2.0)).cast("long")
-        .as("pair_work"))
-    grain.crossJoin(buckets)
-  }
+      bandsCol: String): DataFrame =
+    fingerprintCensus(hashes.select(col(bandsCol).as("bands")), col("bands"),
+      "n_rows", "n_band_rows")
 
   /** Video near-dup pairing over sampled-frame signatures — exact-match
     * containment at the (frame index, frame fingerprint) grain: two videos
@@ -938,10 +825,7 @@ object Dedup {
     val s = sigs.select(col(idCol).as("id"), col(frameCol).as("f"),
       col(bandsCol).as("bands"))
       .withColumn("__prev", lag(col("bands"), 1).over(w))
-    val ham = (0 until nBands).map(i =>
-      bit_count(element_at(col("bands"), i + 1)
-        .bitwiseXOR(element_at(col("__prev"), i + 1)))).reduce(_ + _)
-      .cast("long")
+    val ham = bandHamming(col("bands"), col("__prev"), nBands)
     val marked = s
       .withColumn("__cut",
         when(col("__prev").isNotNull && ham >= minHamming, 1L).otherwise(0L))
@@ -1250,19 +1134,9 @@ object Dedup {
       dim: Int,
       numBands: Int = 8,
       bandBits: Int = 16,
-      planeStride: Int = 0): DataFrame = {
-    val occ = hyperplaneBanded(emb, idCol, vecCol, dim, numBands, bandBits,
-      planeStride)
-      .groupBy("bno", "bk").agg(count(lit(1)).as("occ"))
-    occ.agg(
-      count(lit(1)).as("n_buckets"),
-      sum(col("occ")).as("n_vec_band_rows"),
-      max(col("occ")).as("max_occ"),
-      sum(when(col("occ") >= 2, lit(1L)).otherwise(lit(0L))).as("n_multi_buckets"),
-      // occ*(occ-1) is even, so the halved double is integer-exact
-      sum((col("occ") * (col("occ") - lit(1L))) / lit(2.0)).cast("long")
-        .as("pair_work"))
-  }
+      planeStride: Int = 0): DataFrame =
+    bucketCensus(hyperplaneBanded(emb, idCol, vecCol, dim, numBands, bandBits,
+      planeStride), "n_vec_band_rows")
 
   /** Duplicated-span detection — the exact-substring dedup signal of
     * Lee et al. 2022 ("Deduplicating Training Data Makes Language Models

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Borůvka minimum spanning forest (Borůvka 1926; the distributed MST
@@ -121,5 +121,45 @@ object Mst {
       edges.select(col(uCol).as("u"), col(vCol).as("v"),
         col(wCol).cast("long").as("w")).filter(lit(false))
     else picked.reduce(_ unionByName _).distinct()
+  }
+
+  /** Single-linkage cluster census of a forest at several cuts: for each
+    * `cuts(i)` (a predicate over the forest's `(u, v, w)` that keeps the
+    * edges surviving cut i), `(kept, largest, clustered)` — kept edges,
+    * the largest component's node count (1 when no edge survives) and the
+    * nodes in non-singleton components. A forest's cluster count at cut i
+    * is `n_nodes − kept`.
+    *
+    * ONE tagged CC for every cut: each edge explodes to the cuts it
+    * survives and node ids carry the cut index in their low 3 bits
+    * (layers disjoint; min label within a layer decodes to the layer's
+    * min node — exactly the per-cut CC's component), so one star-CC over
+    * ≤ |cuts|·|forest| edges replaces one CC run per cut; per-cut results
+    * are bit-identical because layers never interact. Star variant, not
+    * min-label: a forest's components are long thin paths (min-label
+    * needs O(diameter) rounds; star is O(log n) on any shape). */
+  def cutCensus(forest: DataFrame, cuts: Seq[Column]): Seq[(Long, Long, Long)] = {
+    require(cuts.size <= 8, "the cut index rides in 3 low id bits")
+    val tagged = forest.select(
+      explode(filter(array(cuts.zipWithIndex.map { case (keep, i) =>
+        when(keep, lit(i.toLong)).otherwise(lit(-1L))
+      }: _*), x => x =!= -1L)).as("ti"),
+      col("u"), col("v")).localCheckpoint(false)
+    val keptByTi = tagged.groupBy("ti").agg(count(lit(1)).as("n"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // cast BEFORE the ·8: an IntegerType key column would do the shift in
+    // Int space first and throw (ANSI) past 2^28 ids
+    val sizeByTi = Dedup.connectedComponentsStar(
+        tagged.select((col("u").cast("long") * 8 + col("ti")).as("cu"),
+          (col("v").cast("long") * 8 + col("ti")).as("cv")), "cu", "cv")
+      .groupBy(pmod(col("id"), lit(8L)).as("ti"), col("component"))
+      .agg(count(lit(1)).as("sz"))
+      .groupBy("ti")
+      .agg(max(col("sz")).as("largest"), sum(col("sz")).as("clustered"))
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    cuts.indices.map { i =>
+      val (largest, clustered) = sizeByTi.getOrElse(i.toLong, (1L, 0L))
+      (keptByTi.getOrElse(i.toLong, 0L), largest, clustered)
+    }
   }
 }

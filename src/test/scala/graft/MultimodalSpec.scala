@@ -209,9 +209,14 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("aHashPairs equals brute-force all-pairs Hamming (pigeonhole-complete to 3)") {
-    // random 4x16-bit fingerprints with planted near-dup structure
+    // one table over the banded-Hamming families — aHash, aHash + dHash
+    // (gated on the nearer of the two distances) and SimHash (one 64-bit
+    // word, 4 x 16-bit blocks) — each against brute-force all-pairs
+    // Hamming. Random 4x16-bit fingerprints carry planted near-dups and
+    // planted exact-duplicate groups, and the input is spread over 4
+    // partitions so each bucket's members arrive from several map tasks.
+    assert(spark.conf.get("spark.sql.shuffle.partitions").toInt >= 3)
     val rnd = new scala.util.Random(7)
-    val base = Array.fill(4)(rnd.nextInt(1 << 16))
     def flip(b: Array[Int], k: Int): Array[Int] = {
       val c = b.clone()
       var left = k
@@ -222,22 +227,54 @@ class MultimodalSpec extends SparkSpec {
       }
       c
     }
-    val rows = (0L until 40L).map { i =>
-      val b = if (i % 5 == 0) base.clone()
-        else if (i % 5 == 1) flip(base, 2)
-        else if (i % 5 == 2) flip(base, 3)
-        else Array.fill(4)(rnd.nextInt(1 << 16))
-      (i, b.toSeq)
+    def rand(): Array[Int] = Array.fill(4)(rnd.nextInt(1 << 16))
+    val aBase = rand()
+    val dBase = rand()
+    val single = (0L until 40L).map { i =>
+      val a = if (i % 5 == 0) aBase.clone()
+        else if (i % 5 == 1) flip(aBase, 2)
+        else if (i % 5 == 2) flip(aBase, 3)
+        else rand()
+      // dHash: its own near-dup cluster, so some pairs match on d only
+      val d = if (i % 4 == 0) dBase.clone()
+        else if (i % 4 == 1) flip(dBase, 1)
+        else rand()
+      (i, a.toSeq, d.toSeq)
     }
-    val df = rows.toDF("id", "bands")
-    val got = graft.operators.Dedup.aHashPairs(df, "id", "bands", maxHamming = 3)
-      .as[(Long, Long, Long)].collect().toSet
-    val expect = (for {
-      (a, ba) <- rows; (b, bb) <- rows if a < b
-      d = (0 until 4).map(i => Integer.bitCount(ba(i) ^ bb(i))).sum
-      if d <= 3
-    } yield (a, b, d.toLong)).toSet
-    assert(got == expect, s"got ${got.size} vs expected ${expect.size}")
+    // exact-duplicate groups of both fingerprints: three copies of id 3,
+    // two of id 7 (a random pair each — none of the near-dup clusters)
+    val rows = single ++ Seq(40L, 41L, 42L).map(i => (i, single(3)._2, single(3)._3)) ++
+      Seq(43L, 44L).map(i => (i, single(7)._2, single(7)._3))
+    def ham(x: Seq[Int], y: Seq[Int]): Long =
+      x.zip(y).map { case (u, v) => Integer.bitCount(u ^ v) }.sum.toLong
+    def word(b: Seq[Int]): Long =
+      b.zipWithIndex.map { case (v, j) => v.toLong << (16 * j) }.reduce(_ | _)
+    val df = rows.toDF("id", "a", "d").repartition(4)
+    val sims = df.select(col("id"),
+      (0 until 4).map(j => shiftleft(element_at(col("a"), j + 1).cast("long"), 16 * j))
+        .reduce(_ bitwiseOR _).as("simhash"))
+    val allPairs = for { x <- rows; y <- rows if x._1 < y._1 } yield (x, y)
+    val table = Seq(
+      ("aHash",
+        graft.operators.Dedup.aHashPairs(df, "id", "a", maxHamming = 3),
+        allPairs.collect { case (x, y) if ham(x._2, y._2) <= 3 =>
+          Seq(x._1, y._1, ham(x._2, y._2)) }),
+      ("aHash + dHash",
+        graft.operators.Dedup.dualHashPairs(df, "id", "a", "d", maxHamming = 3),
+        allPairs.collect { case (x, y) if math.min(ham(x._2, y._2), ham(x._3, y._3)) <= 3 =>
+          Seq(x._1, y._1, ham(x._2, y._2), ham(x._3, y._3)) }),
+      ("SimHash",
+        graft.operators.Dedup.simhashPairs(sims, bits = 64, maxHamming = 3),
+        allPairs.collect { case (x, y)
+            if java.lang.Long.bitCount(word(x._2) ^ word(y._2)) <= 3 =>
+          Seq(x._1, y._1, java.lang.Long.bitCount(word(x._2) ^ word(y._2)).toLong) }))
+    for ((family, pairs, brute) <- table) {
+      val got = pairs.collect().map(r => (0 until r.length).map(r.getLong)).toSeq
+      assert(got.size == got.toSet.size, s"$family: duplicate pair rows")
+      assert(got.toSet == brute.toSet, s"$family: got ${got.size} vs expected ${brute.size}")
+      assert(brute.exists(_(2) == 0L) && brute.exists(_(2) > 0L),
+        s"$family: fixture lacks exact or near duplicates")
+    }
   }
 
   test("resize-robust dedup: originals pair with their 16x12 thumbnails (brute-force parity)") {

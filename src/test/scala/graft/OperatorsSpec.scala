@@ -178,6 +178,56 @@ class OperatorsSpec extends SparkSpec {
     assert(!pairs.contains((1L, 3L)) || !pairs.contains((2L, 3L)))
   }
 
+  test("Dedup.minhashCandidatePairs equals brute-force band collision") {
+    // 200 corpus docs plus planted exact copies and one-word edits, spread
+    // over 4 partitions: the harvest must emit exactly the pairs whose
+    // signatures agree on at least one whole band, with est_jaccard the
+    // signature agreement
+    val base = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .filter(col("doc_id") < 200).select("doc_id", "text")
+    val planted = base.filter(col("doc_id") < 20).select(
+      (col("doc_id") + 1000).as("doc_id"),
+      when(col("doc_id") % 2 === 0, col("text"))
+        .otherwise(concat(col("text"), lit(" planted"))).as("text"))
+    val docs = base.unionByName(planted).repartition(4)
+    val (numHashes, rowsPerBand) = (32, 4)
+    val got = Dedup.minhashCandidatePairs(docs, "doc_id", "text",
+      shingleSize = 2, numHashes = numHashes, rowsPerBand = rowsPerBand)
+      .as[(Long, Long, Double)].collect().toSeq
+    val sigs = Dedup.minhashSigs(docs, "doc_id", "text", shingleSize = 2,
+      numHashes = numHashes).as[(Long, Seq[Long])].collect().sortBy(_._1)
+    val expect = (for {
+      (a, sa) <- sigs; (b, sb) <- sigs if a < b
+      if sa.grouped(rowsPerBand).zip(sb.grouped(rowsPerBand)).exists { case (x, y) => x == y }
+    } yield (a, b, sa.zip(sb).count { case (x, y) => x == y }.toDouble / numHashes)).toSet
+    assert(got.size == got.toSet.size, "duplicate pair rows")
+    assert(got.toSet == expect, s"got ${got.size} vs expected ${expect.size}")
+    assert(expect.exists(_._3 == 1.0) && expect.exists(_._3 < 1.0), "fixture lacks exact or near dups")
+  }
+
+  test("one near-dup harvest: monotonically_increasing_id orders only bucketPairs and the harvest") {
+    val sources = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk) else Seq(f)
+      walk(new java.io.File("src/main/scala")).filter(_.getName.endsWith(".scala"))
+    }
+    assert(sources.exists(_.getName == "Dedup.scala"), "run from the repo root")
+    val sites = for {
+      f <- sources
+      (line, i) <- new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        .split("\n").toSeq.zipWithIndex
+      if line.contains("orderBy(monotonically_increasing_id())")
+    } yield (f.getName, i)
+    assert(sites.size == 2 && sites.forall(_._1 == "Dedup.scala"),
+      s"capped-collect sites outside bucketPairs and fingerprintPairGraph: $sites")
+    val dedup = new String(java.nio.file.Files.readAllBytes(
+      sources.find(_.getName == "Dedup.scala").get.toPath), "UTF-8").split("\n").toSeq
+    val owners = sites.map { case (_, i) =>
+      dedup.take(i + 1).reverse.find(_.trim.startsWith("private")).getOrElse("") }
+    assert(owners.exists(_.contains("def bucketPairs(")) &&
+      owners.exists(_.contains("def fingerprintPairGraph(")), s"owners: $owners")
+  }
+
   test("Dedup.verifyJaccard computes exact shingle jaccard") {
     val df = Seq((1L, "a b c d"), (2L, "a b c d"), (3L, "x y z w")).toDF("doc_id", "text")
     val pairs = Seq((1L, 2L), (1L, 3L)).toDF("id_a", "id_b")

@@ -48,6 +48,26 @@ class PipelineOpsSpec extends SparkSpec {
     assert(inc.nonEmpty, "testdata should produce at least one new-sided pair")
   }
 
+  test("incremental minhash pairs: a replayed batch emits no self-pair") {
+    // the batch's ids are already in the store (a replay after a crash):
+    // each replayed id shares every band bucket with its own stored copy
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val isBatch = col("doc_id") % 10 === 0
+    val store = Dedup.minhashBandTable(docs, "doc_id", "text",
+      shingleSize = 2, numHashes = 32, rowsPerBand = 8, portable = true)
+    val inc = Dedup.minhashIncrementalPairs(store.filter(col("id") % 10 === 0), store)
+      .as[(Long, Long, Double)].collect()
+    assert(!inc.exists(p => p._1 == p._2),
+      s"self-pairs: ${inc.filter(p => p._1 == p._2).take(5).mkString(", ")}")
+    // and what remains is exactly the one-shot pairs that touch the batch
+    val batchIds = docs.filter(isBatch).select("doc_id").as[Long].collect().toSet
+    val touching = Dedup.minhashCandidatePairs(docs, "doc_id", "text",
+      shingleSize = 2, numHashes = 32, rowsPerBand = 8, portable = true)
+      .as[(Long, Long, Double)].collect()
+      .filter(p => batchIds(p._1) || batchIds(p._2)).toSet
+    assert(inc.toSet == touching, s"inc=${inc.length} touching=${touching.size}")
+  }
+
   test("incremental probe reads only touched buckets (broadcast semi-join, no store-wide harvest)") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     def band(df: org.apache.spark.sql.DataFrame) =
