@@ -523,7 +523,7 @@ object Bench {
             .filter(org.apache.spark.sql.functions.col("media_type") === "image")
           val st = graft.operators.Dedup.dualHashBucketStats(
             graft.multimodal.Multimodal.perceptualHashBands(media),
-            "media_id", "abands", "dbands")
+            "abands", "dbands")
             .collect().head
           System.err.println(
             s"[bench] q233 cost $tag: n_images=${st.getLong(0)} " +
@@ -545,7 +545,7 @@ object Bench {
             graft.multimodal.Multimodal.audioEnergyBands(
               graft.multimodal.Multimodal.synthesizeAudio(
                 Tables.documents(spark, d), "doc_id")),
-            "media_id", "bands")
+            "bands")
             .collect().head
           System.err.println(
             s"[bench] q237 cost $tag: n_rows=${st.getLong(0)} " +
@@ -566,7 +566,7 @@ object Bench {
             graft.multimodal.Multimodal.videoFrameHashes(
               graft.multimodal.Multimodal.synthesizeVideo(
                 Tables.documents(spark, d), "doc_id"), stride = 1),
-            "media_id", "bands")
+            "bands")
             .collect().head
           System.err.println(
             s"[bench] q244 cost $tag: n_frames=${st.getLong(0)} " +
@@ -586,7 +586,7 @@ object Bench {
             graft.multimodal.Multimodal.audioFrameSigs(
               graft.multimodal.Multimodal.synthesizeAudioClips(
                 Tables.documents(spark, d), "doc_id")),
-            "media_id", "bands")
+            "bands")
             .collect().head
           System.err.println(
             s"[bench] q247 cost $tag: n_sig_rows=${st.getLong(0)} " +
@@ -613,7 +613,7 @@ object Bench {
             graft.multimodal.Multimodal.audioFrameSigs(
               graft.multimodal.Multimodal.synthesizeAudioClips(
                 docsT, "doc_id"), w),
-            "media_id", "bands")
+            "bands")
             .collect().head
           System.err.println(
             s"[bench] q249 cost $tag: sig_bits=$w n_sig_rows=${st.getLong(0)} " +

@@ -25,8 +25,8 @@ import org.apache.spark.storage.StorageLevel
   * The reference refreshes its views one after another inside its lock;
   * here each table's build and write is its own Spark job, all submitted at
   * once from one driver thread per table, so the per-table wall times
-  * overlap and no longer sum to the refresh. The 7 tables are independent
-  * DAGs with their own output directories and commits: at cluster scale
+  * overlap and no longer sum to the refresh. The 7 writes are separate jobs
+  * with their own output directories and commits: at cluster scale
   * their stages fill the executors while another table's job is in its
   * driver-side phases (planning, codegen, broadcasts, partition commit) or
   * its straggler tail, and on a small input, where each write is mostly
@@ -34,13 +34,19 @@ import org.apache.spark.storage.StorageLevel
   * rather than the sum. A failed write fails the refresh only after every
   * other write has ended.
   *
-  * The four serp-feature MVs all derive from the same effective-items
-  * projection (override coalesce chains applied at item grain); a refresh
-  * computes it ONCE and persists it for the batch — Spark shares no
-  * subplans across builders, and at 100 TB recomputing the override-join
-  * four times is the difference between one shuffle and four. It is
-  * unpersisted once every write has ended, never while one may still read
-  * it.
+  * Each fact family is resolved once per refresh, by the shared stages of
+  * [[GoldTables]]: one entity-dims frame, one effective-mentions projection
+  * (read by `article_daily_counts` and `negative_summary`) and one
+  * effective-items projection (read by the four serp-feature MVs). Spark
+  * shares no subplans across jobs, so a projection that two or more of the
+  * refreshed tables read is persisted for the refresh; one read by a single
+  * table is left in that table's plan, and one no table reads is never
+  * planned (an article or serp-result override refresh persists nothing).
+  * The dims, two tiny tables, are broadcast once per fact family instead.
+  * A shared stage is persisted before the writes are submitted, and its
+  * cache blocks are built by the first reader's tasks while the other
+  * readers wait on them. Every shared stage is unpersisted once every write
+  * has ended, never while one may still read it.
   */
 object GoldRefresh {
 
@@ -76,36 +82,44 @@ object GoldRefresh {
     }
   }
 
-  /** The 7 gold tables in the reference's refresh order, each built from the
-    * inputs and the effective-items projection. */
-  private val Tables: Seq[(String, (BronzeInputs, DataFrame) => DataFrame)] = Seq(
-    "serp_feature_daily" ->
-      ((_, eff) => GoldTables.serpFeatureSentiment(eff, GoldTables.EntityGrain)),
-    "serp_feature_control_daily" ->
-      ((_, eff) => GoldTables.serpFeatureControl(eff, GoldTables.EntityGrain)),
-    "serp_feature_daily_index" ->
-      ((_, eff) => GoldTables.serpFeatureSentiment(eff, GoldTables.IndexGrain)),
-    "serp_feature_control_daily_index" ->
-      ((_, eff) => GoldTables.serpFeatureControl(eff, GoldTables.IndexGrain)),
-    "article_daily_counts" ->
-      ((in, _) => GoldTables.articleDailyCounts(in.companyMentionsDaily, in.ceoMentionsDaily,
-        in.companies, in.ceos, in.companyArticleOverrides, in.ceoArticleOverrides)),
-    "serp_daily_counts" ->
-      ((in, _) => GoldTables.serpDailyCounts(in.serpRuns, in.serpResults,
-        in.serpResultOverrides, in.companies, in.ceos)),
-    "negative_summary" ->
-      ((in, _) => GoldTables.negativeSummary(in.companyMentionsDaily, in.ceoMentionsDaily,
-        in.companyMentions, in.ceoMentions, in.companies, in.ceos, in.articles,
-        in.companyArticleOverrides, in.ceoArticleOverrides)))
+  /** The shared stages over one set of inputs ([[GoldTables]]' scale
+    * notes). Each is a lazy val, so it is one frame per refresh and is
+    * planned only when a table reads it: a refresh whose tables read no
+    * feature items never plans them. */
+  private final class Stages(in: BronzeInputs) {
+    lazy val dims: DataFrame = GoldTables.entityDims(in.companies, in.ceos)
+    lazy val mentions: DataFrame = GoldTables.effectiveMentions(in.companyMentionsDaily,
+      in.ceoMentionsDaily, dims, in.companyArticleOverrides, in.ceoArticleOverrides)
+    lazy val featureItems: DataFrame = GoldTables.featureItemsEffective(
+      in.serpFeatureItems, in.serpFeatureItemOverrides, in.serpFeatureUrlOverrides)
+  }
 
-  private def effective(in: BronzeInputs): DataFrame = GoldTables.featureItemsEffective(
-    in.serpFeatureItems, in.serpFeatureItemOverrides, in.serpFeatureUrlOverrides)
+  /** The 7 gold tables in the reference's refresh order: each with the
+    * shared stage it reads and its build from the inputs and that stage.
+    * This is the only record of which table reads which stage. */
+  private val Tables: Seq[(String, Stages => DataFrame, (BronzeInputs, DataFrame) => DataFrame)] =
+    Seq(
+      ("serp_feature_daily", _.featureItems,
+        (_, items) => GoldTables.serpFeatureSentiment(items, GoldTables.EntityGrain)),
+      ("serp_feature_control_daily", _.featureItems,
+        (_, items) => GoldTables.serpFeatureControl(items, GoldTables.EntityGrain)),
+      ("serp_feature_daily_index", _.featureItems,
+        (_, items) => GoldTables.serpFeatureSentiment(items, GoldTables.IndexGrain)),
+      ("serp_feature_control_daily_index", _.featureItems,
+        (_, items) => GoldTables.serpFeatureControl(items, GoldTables.IndexGrain)),
+      ("article_daily_counts", _.mentions, (_, m) => GoldTables.articleDailyCounts(m)),
+      ("serp_daily_counts", _.dims,
+        (in, dims) => GoldTables.serpDailyCounts(in.serpRuns, in.serpResults,
+          in.serpResultOverrides, dims)),
+      ("negative_summary", _.mentions,
+        (in, m) => GoldTables.negativeSummary(m, in.companyMentions, in.ceoMentions,
+          in.articles)))
 
   /** All 7 gold tables in the reference's refresh order as (table name,
     * DataFrame), with nothing persisted. */
   def rebuildAll(in: BronzeInputs): Seq[(String, DataFrame)] = {
-    val eff = effective(in)
-    Tables.map { case (name, build) => name -> build(in, eff) }
+    val stages = new Stages(in)
+    Tables.map { case (name, stage, build) => name -> build(in, stage(stages)) }
   }
 
   /** Rebuild and write every gold table under `base/<name>`. Returns
@@ -118,21 +132,25 @@ object GoldRefresh {
     * and write is its own Spark job, submitted from its own thread of a pool
     * of `names.size` threads created by the caller, so every job inherits the
     * caller's local properties (job group, scheduler pool) and carries the
-    * description `gold refresh: <name>`. Waits for every write; if any
-    * failed, rethrows the first failure in `names` order once all have
-    * ended, and only then unpersists the shared projection. Returns per-table
-    * wall times in the order of `names`; they overlap. */
+    * description `gold refresh: <name>`. A shared stage that two or more of
+    * `names` read is persisted before the writes are submitted. Waits for
+    * every write; if any failed, rethrows the first failure in `names` order
+    * once all have ended, and only then unpersists the shared stages.
+    * Returns per-table wall times in the order of `names`; they overlap. */
   private[gold] def refresh(
       in: BronzeInputs, base: String, names: Seq[String]): Seq[(String, Double)] = {
-    val eff = effective(in).persist(StorageLevel.MEMORY_AND_DISK)
+    val stages = new Stages(in)
+    val tables = Tables.map(t => t._1 -> t).toMap
+    val reads = names.map(name => tables(name)._2(stages))
+    val shared = reads.distinct.filter(stage => reads.count(_ eq stage) >= 2)
+    shared.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
     val pool = Executors.newFixedThreadPool(names.size)
     try {
-      val builders = Tables.toMap
-      val writes = names.map { name =>
+      val writes = names.zip(reads).map { case (name, stage) =>
         pool.submit(new Callable[(String, Double)] {
           def call(): (String, Double) = {
-            eff.sparkSession.sparkContext.setJobDescription(s"gold refresh: $name")
-            val df = builders(name)(in, eff)
+            in.companies.sparkSession.sparkContext.setJobDescription(s"gold refresh: $name")
+            val df = tables(name)._3(in, stage)
             val t0 = System.nanoTime()
             df.write.mode("overwrite")
               .option("partitionOverwriteMode", "dynamic")
@@ -145,7 +163,7 @@ object GoldRefresh {
     } finally {
       pool.shutdown()
       pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
-      eff.unpersist() // the shared intermediate must not outlive the refresh
+      shared.foreach(_.unpersist()) // no shared stage may outlive the refresh
     }
   }
 }

@@ -12,20 +12,27 @@ import org.apache.spark.sql.functions._
   * lock, `dashboard_app/app.py:7059-7182` — partition overwrite replaces
   * that wholesale).
   *
-  * Scale notes: dims, article titles and override tables (human-entered,
-  * tiny) are broadcast. Each builder then runs ONE hash aggregate, so its
-  * fact rows shuffle once, on the output group key:
-  *  - `articleDailyCounts` and `serpDailyCounts` project the brand and CEO
-  *    branches onto the output key columns, union the rows and aggregate
-  *    once: one exchange per table, not one per branch;
-  *  - `negativeSummary` unions the two branches at mention grain and
-  *    aggregates once;
-  *  - the four serp-feature builders each aggregate the shared
-  *    [[featureItemsEffective]] projection at their grain.
-  * The fact-to-fact joins (runs × results in `serpDailyCounts`, daily
-  * mentions × mentions in `negativeSummary`) are left to the planner: a
-  * broadcast when one side is small, else a shuffle join before the
-  * aggregate.
+  * Scale notes: the seven tables read three fact families, and each family
+  * is resolved by one shared stage that every table of the family reads:
+  *  - [[effectiveMentions]]: brand and CEO daily mentions are projected
+  *    onto one `(entity_type, entity_id)` key and unioned, then meet ONE
+  *    [[entityDims]] frame (companies ∪ CEOs with their company) and ONE
+  *    override frame (company ∪ CEO article overrides), which sets the
+  *    effective label. `articleDailyCounts` and `negativeSummary` aggregate
+  *    it;
+  *  - [[serpDailyCounts]] keys each run by its entity and joins runs ×
+  *    results once, then the result overrides and the same dims frame;
+  *  - [[featureItemsEffective]]: item- and url-override coalesce at item
+  *    grain, aggregated by the four serp-feature builders at their grain.
+  * Dims, article titles and override tables (human-entered, tiny) are
+  * broadcast, once per family rather than once per brand/CEO branch. Each
+  * table then runs ONE hash aggregate, so its fact rows shuffle once, on
+  * the output group key. The fact-to-fact joins (runs × results,
+  * effective mentions × mentions in `negativeSummary`) are left to the
+  * planner: a broadcast when one side is small, else a shuffle join before
+  * the aggregate. The public builders compose the stages for one table;
+  * [[GoldRefresh]] builds each stage once per refresh and persists the two
+  * projections when two or more of the tables it refreshes read them.
   * neg_pct keeps the reference's asymmetric rounding per row (brand 6dp /
   * ceo 1dp, `sql/article_daily_counts_mv.sql:16,37`) through decimal
   * division — double division would drift at the 6th decimal under
@@ -40,11 +47,68 @@ object GoldTables {
     countIf(eff === "negative").as("negative"),
     count(lit(1)).as("total"))
 
+  /** The entity key every brand + CEO fact is projected onto. */
+  private val EntityKey: Seq[String] = Seq("entity_type", "entity_id")
+
   /** Output key of the two brand + ceo tables (`articleDailyCounts` adds
-    * `alias`): both branches are projected onto it before the one
+    * `alias`): both branches meet the dims on [[EntityKey]] before the one
     * aggregate. */
   private val EntityDayKey: Seq[String] = Seq("date", "entity_type", "entity_id",
     "company_id", "ceo_id", "entity_name", "company", "ceo")
+
+  /** Brand rows of `brand` (keyed by `company_id`) and CEO rows of `ceo`
+    * (keyed by `ceo_id`) projected onto [[EntityKey]] ++ `cols`, unioned. */
+  private def brandAndCeo(brand: DataFrame, ceo: DataFrame, cols: String*): DataFrame = {
+    def keyed(df: DataFrame, entityType: String, idCol: String): DataFrame =
+      df.select(lit(entityType).as("entity_type") +: col(idCol).as("entity_id") +:
+        cols.map(col): _*)
+    keyed(brand, "brand", "company_id").unionByName(keyed(ceo, "ceo", "ceo_id"))
+  }
+
+  /** The entity dimension of the brand + CEO tables, one row per
+    * [[EntityKey]]: a company is a `brand` entity, a CEO a `ceo` entity
+    * joined to its company (every reference branch inner-joins it). Carries
+    * the output identity columns: `company_id`, `ceo_id`, `entity_name`,
+    * `company`, `ceo` ("" for a brand) and `alias` ("" when absent). The
+    * CEO → company join is a nested loop over the two (human-entered, tiny)
+    * tables, so broadcasting the dims needs no broadcast of its own: a
+    * nested broadcast would add a job that the dims broadcast waits for. */
+  private[gold] def entityDims(companies: DataFrame, ceos: DataFrame): DataFrame = {
+    val brand = companies.select(lit("brand").as("entity_type"), col("id").as("entity_id"),
+      col("id").as("company_id"), lit(null: String).as("ceo_id"),
+      col("name").as("entity_name"), col("name").as("company"), lit("").as("ceo"),
+      lit("").as("alias"))
+    val ceo = ceos
+      .join(companies.select(col("id").as("cid"), col("name").as("company_name"))
+        .hint("shuffle_replicate_nl"), col("company_id") === col("cid"))
+      .select(lit("ceo").as("entity_type"), col("id").as("entity_id"),
+        col("cid").as("company_id"), col("id").as("ceo_id"), col("name").as("entity_name"),
+        col("company_name").as("company"), col("name").as("ceo"),
+        coalesce(col("alias"), lit("")).as("alias"))
+    brand.unionByName(ceo)
+  }
+
+  /** Brand ∪ CEO daily mentions at mention grain with their [[entityDims]]
+    * columns and the effective sentiment (override > raw; articles have NO
+    * llm fallback for sentiment), the shared input of
+    * [[articleDailyCounts]] and [[negativeSummary]]. */
+  private[gold] def effectiveMentions(
+      companyMentionsDaily: DataFrame,
+      ceoMentionsDaily: DataFrame,
+      dims: DataFrame,
+      companyOverrides: DataFrame,
+      ceoOverrides: DataFrame): DataFrame = {
+    val overrides = brandAndCeo(companyOverrides, ceoOverrides,
+      "article_id", "override_sentiment_label")
+      .select(col("entity_type").as("ov_type"), col("entity_id").as("ov_id"),
+        col("article_id").as("ov_article_id"), col("override_sentiment_label"))
+    brandAndCeo(companyMentionsDaily, ceoMentionsDaily, "date", "article_id", "sentiment_label")
+      .join(broadcast(dims), EntityKey)
+      .join(broadcast(overrides), col("entity_type") === col("ov_type") &&
+        col("entity_id") === col("ov_id") && col("article_id") === col("ov_article_id"), "left")
+      .select((EntityDayKey ++ Seq("alias", "article_id")).map(col) :+
+        coalesce(col("override_sentiment_label"), col("sentiment_label")).as("sentiment"): _*)
+  }
 
   private def negPct(scale: Int): Column =
     when(col("total") > 0,
@@ -60,39 +124,14 @@ object GoldTables {
       companies: DataFrame,
       ceos: DataFrame,
       companyOverrides: DataFrame,
-      ceoOverrides: DataFrame): DataFrame = {
-    val eff = coalesce(col("override_sentiment_label"), col("sentiment_label")).as("eff")
-    val brand = companyMentionsDaily
-      .join(broadcast(companies.select(col("id"), col("name"))),
-        col("company_id") === col("id"))
-      .join(broadcast(companyOverrides
-        .select(col("company_id").as("ov_company_id"), col("article_id").as("ov_article_id"),
-          col("override_sentiment_label"))),
-        col("company_id") === col("ov_company_id") &&
-          col("article_id") === col("ov_article_id"), "left")
-      .select(col("date"), lit("brand").as("entity_type"), col("id").as("entity_id"),
-        col("id").as("company_id"), lit(null: String).as("ceo_id"),
-        col("name").as("entity_name"), col("name").as("company"),
-        lit("").as("ceo"), lit("").as("alias"), eff)
+      ceoOverrides: DataFrame): DataFrame =
+    articleDailyCounts(effectiveMentions(companyMentionsDaily, ceoMentionsDaily,
+      entityDims(companies, ceos), companyOverrides, ceoOverrides))
 
-    val ceo = ceoMentionsDaily
-      .join(broadcast(ceos.select(col("id"), col("name").as("ceo_name"),
-        col("company_id").as("ceo_company_id"), col("alias"))),
-        col("ceo_id") === col("id"))
-      .join(broadcast(companies.select(col("id").as("cid"), col("name").as("company_name"))),
-        col("ceo_company_id") === col("cid"))
-      .join(broadcast(ceoOverrides
-        .select(col("ceo_id").as("ov_ceo_id"), col("article_id").as("ov_article_id"),
-          col("override_sentiment_label"))),
-        col("ceo_id") === col("ov_ceo_id") &&
-          col("article_id") === col("ov_article_id"), "left")
-      .select(col("date"), lit("ceo").as("entity_type"), col("id").as("entity_id"),
-        col("cid").as("company_id"), col("id").as("ceo_id"),
-        col("ceo_name").as("entity_name"), col("company_name").as("company"),
-        col("ceo_name").as("ceo"), coalesce(col("alias"), lit("")).as("alias"), eff)
-
-    val pivots = sentimentPivot(col("eff"))
-    brand.unionByName(ceo)
+  /** `article_daily_counts_mv` over the [[effectiveMentions]] stage. */
+  private[gold] def articleDailyCounts(mentions: DataFrame): DataFrame = {
+    val pivots = sentimentPivot(col("sentiment"))
+    mentions
       .groupBy((EntityDayKey :+ "alias").map(col): _*)
       .agg(pivots.head, pivots.tail: _*)
       .withColumn("neg_pct",
@@ -107,40 +146,35 @@ object GoldTables {
       serpResults: DataFrame,
       serpResultOverrides: DataFrame,
       companies: DataFrame,
-      ceos: DataFrame): DataFrame = {
-    val effControl = coalesce(col("override_control_class"), col("llm_control_class"),
-      col("control_class")).as("eff_control")
-    val effSent = coalesce(col("override_sentiment_label"), col("llm_sentiment_label"),
-      col("sentiment_label")).as("eff_sentiment")
+      ceos: DataFrame): DataFrame =
+    serpDailyCounts(serpRuns, serpResults, serpResultOverrides, entityDims(companies, ceos))
 
-    val joined = serpRuns
-      .join(serpResults.withColumnRenamed("id", "result_id"),
-        col("serp_run_id") === col("id"))
+  /** `serp_daily_counts_mv` over an [[entityDims]] frame: each run is keyed
+    * by its entity (a `company` run as a brand), so runs × results is
+    * joined once for both branches. */
+  private[gold] def serpDailyCounts(
+      serpRuns: DataFrame,
+      serpResults: DataFrame,
+      serpResultOverrides: DataFrame,
+      dims: DataFrame): DataFrame = {
+    val isBrand = col("entity_type") === "company"
+    val runs = serpRuns.filter(isBrand || col("entity_type") === "ceo")
+      .select(col("id").as("run_id"), to_date(col("run_at")).as("date"),
+        when(isBrand, lit("brand")).otherwise(lit("ceo")).as("entity_type"),
+        when(isBrand, col("company_id")).otherwise(col("ceo_id")).as("entity_id"))
+    runs
+      .join(serpResults.select(col("serp_run_id"), col("id").as("result_id"),
+        col("control_class"), col("llm_control_class"), col("sentiment_label"),
+        col("llm_sentiment_label")), col("run_id") === col("serp_run_id"))
       .join(broadcast(serpResultOverrides
         .select(col("serp_result_id"), col("override_sentiment_label"),
           col("override_control_class"))),
         col("result_id") === col("serp_result_id"), "left")
-
-    val brand = joined.filter(col("entity_type") === "company")
-      .join(broadcast(companies.select(col("id").as("cid"), col("name"))),
-        col("company_id") === col("cid"))
-      .select(to_date(col("run_at")).as("date"), lit("brand").as("entity_type"),
-        col("cid").as("entity_id"), col("cid").as("company_id"), lit(null: String).as("ceo_id"),
-        col("name").as("entity_name"), col("name").as("company"), lit("").as("ceo"),
-        effControl, effSent)
-
-    val ceo = joined.filter(col("entity_type") === "ceo")
-      .join(broadcast(ceos.select(col("id").as("ceoid"), col("name").as("ceo_name"),
-        col("company_id").as("ceo_company_id"))),
-        col("ceo_id") === col("ceoid"))
-      .join(broadcast(companies.select(col("id").as("cid"), col("name").as("company_name"))),
-        col("ceo_company_id") === col("cid"))
-      .select(to_date(col("run_at")).as("date"), lit("ceo").as("entity_type"),
-        col("ceoid").as("entity_id"), col("cid").as("company_id"), col("ceoid").as("ceo_id"),
-        col("ceo_name").as("entity_name"), col("company_name").as("company"),
-        col("ceo_name").as("ceo"), effControl, effSent)
-
-    brand.unionByName(ceo)
+      .join(broadcast(dims), EntityKey)
+      .withColumn("eff_control", coalesce(col("override_control_class"),
+        col("llm_control_class"), col("control_class")))
+      .withColumn("eff_sentiment", coalesce(col("override_sentiment_label"),
+        col("llm_sentiment_label"), col("sentiment_label")))
       .groupBy(EntityDayKey.map(col): _*)
       .agg(
         count(lit(1)).as("total"),
@@ -220,48 +254,31 @@ object GoldTables {
       ceos: DataFrame,
       articles: DataFrame,
       companyOverrides: DataFrame,
-      ceoOverrides: DataFrame): DataFrame = {
-    val art = broadcast(articles.select(col("id").as("aid"), col("title")))
-    val brand = companyMentionsDaily
-      .join(companyMentions.select(col("company_id").as("m_cid"),
-        col("article_id").as("m_aid"), col("llm_risk_label")),
-        col("company_id") === col("m_cid") && col("article_id") === col("m_aid"))
-      .join(broadcast(companies.select(col("id"), col("name"))), col("company_id") === col("id"))
-      .join(art, col("article_id") === col("aid"))
-      .join(broadcast(companyOverrides.select(col("company_id").as("ov_cid"),
-        col("article_id").as("ov_aid"), col("override_sentiment_label"))),
-        col("company_id") === col("ov_cid") && col("article_id") === col("ov_aid"), "left")
-      .select(col("date"), col("id").as("company_id_out"), col("name").as("company"),
-        lit("").as("ceo"),
-        coalesce(col("override_sentiment_label"), col("sentiment_label")).as("sentiment"),
-        col("title"), col("llm_risk_label"), lit("brand").as("article_type"))
+      ceoOverrides: DataFrame): DataFrame =
+    negativeSummary(effectiveMentions(companyMentionsDaily, ceoMentionsDaily,
+      entityDims(companies, ceos), companyOverrides, ceoOverrides),
+      companyMentions, ceoMentions, articles)
 
-    val ceo = ceoMentionsDaily
-      .join(ceoMentions.select(col("ceo_id").as("m_ceoid"),
-        col("article_id").as("m_aid"), col("llm_risk_label")),
-        col("ceo_id") === col("m_ceoid") && col("article_id") === col("m_aid"))
-      .join(broadcast(ceos.select(col("id"), col("name").as("ceo_name"),
-        col("company_id").as("ceo_company_id"))), col("ceo_id") === col("id"))
-      .join(broadcast(companies.select(col("id").as("cid"), col("name").as("company_name"))),
-        col("ceo_company_id") === col("cid"))
-      .join(art, col("article_id") === col("aid"))
-      .join(broadcast(ceoOverrides.select(col("ceo_id").as("ov_ceoid"),
-        col("article_id").as("ov_aid"), col("override_sentiment_label"))),
-        col("ceo_id") === col("ov_ceoid") && col("article_id") === col("ov_aid"), "left")
-      .select(col("date"), col("cid").as("company_id_out"), col("company_name").as("company"),
-        coalesce(col("ceo_name"), lit("")).as("ceo"),
-        coalesce(col("override_sentiment_label"), col("sentiment_label")).as("sentiment"),
-        col("title"), col("llm_risk_label"), lit("ceo").as("article_type"))
-
-    brand.unionByName(ceo)
-      .groupBy(col("date"), col("company_id_out").as("company_id"), col("company"),
-        col("ceo"), col("article_type"))
+  /** `negative_articles_summary_mv` over the [[effectiveMentions]] stage:
+    * its rows meet their mention's `llm_risk_label` and article title. */
+  private[gold] def negativeSummary(
+      mentions: DataFrame,
+      companyMentions: DataFrame,
+      ceoMentions: DataFrame,
+      articles: DataFrame): DataFrame = {
+    val negative = col("sentiment") === "negative"
+    mentions
+      .join(brandAndCeo(companyMentions, ceoMentions, "article_id", "llm_risk_label"),
+        EntityKey :+ "article_id")
+      .join(broadcast(articles.select(col("id").as("aid"), col("title"))),
+        col("article_id") === col("aid"))
+      .groupBy(col("date"), col("company_id"), col("company"),
+        coalesce(col("ceo"), lit("")).as("ceo"), col("entity_type").as("article_type"))
       .agg(
-        countIf(col("sentiment") === "negative").as("negative_count"),
+        countIf(negative).as("negative_count"),
         countIf(col("llm_risk_label") === "crisis_risk").as("crisis_risk_count"),
-        when(countIf(col("sentiment") === "negative") > 0,
-          array_join(slice(sort_array(collect_list(
-            when(col("sentiment") === "negative", col("title")))), 1, 3), " | "))
-          .as("top_headlines"))
+        when(countIf(negative) > 0,
+          array_join(slice(sort_array(collect_list(when(negative, col("title")))), 1, 3),
+            " | ")).as("top_headlines"))
   }
 }

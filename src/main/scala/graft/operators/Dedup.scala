@@ -654,7 +654,6 @@ object Dedup {
     * n_fp_band_rows, max_occ, n_multi_buckets, pair_work)`. */
   def dualHashBucketStats(
       hashes: DataFrame,
-      idCol: String,
       aCol: String,
       dCol: String): DataFrame =
     fingerprintCensus(hashes.select(col(aCol).as("ab"), col(dCol).as("db")),
@@ -688,7 +687,6 @@ object Dedup {
     * pair_work)`. */
   def aHashBucketStats(
       hashes: DataFrame,
-      idCol: String,
       bandsCol: String): DataFrame =
     fingerprintCensus(hashes.select(col(bandsCol).as("bands")), col("bands"),
       "n_rows", "n_band_rows")

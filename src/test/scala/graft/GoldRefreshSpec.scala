@@ -10,6 +10,14 @@ import graft.gold.{GoldRefresh, GoldTables, OverrideRefresh, Schemas}
 import graft.gold.GoldRefresh.BronzeInputs
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Union}
+import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec, QueryExecution,
+  SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
@@ -149,6 +157,158 @@ class GoldRefreshSpec extends SparkSpec {
       val aggs = plan.collect { case a: Aggregate => a }
       assert(aggs.size == 1, s"$t must aggregate once:\n$plan")
       assert(aggs.head.child.exists(_.isInstanceOf[Union]), s"$t must union below its aggregate:\n$plan")
+    }
+  }
+
+  test("rebuildAll equals each public builder called alone; written schemas are unchanged") {
+    val eff = GoldTables.featureItemsEffective(
+      in.serpFeatureItems, in.serpFeatureItemOverrides, in.serpFeatureUrlOverrides)
+    val alone = Map(
+      "serp_feature_daily" -> GoldTables.serpFeatureSentiment(eff, GoldTables.EntityGrain),
+      "serp_feature_control_daily" -> GoldTables.serpFeatureControl(eff, GoldTables.EntityGrain),
+      "serp_feature_daily_index" -> GoldTables.serpFeatureSentiment(eff, GoldTables.IndexGrain),
+      "serp_feature_control_daily_index" ->
+        GoldTables.serpFeatureControl(eff, GoldTables.IndexGrain),
+      "article_daily_counts" -> GoldTables.articleDailyCounts(in.companyMentionsDaily,
+        in.ceoMentionsDaily, in.companies, in.ceos, in.companyArticleOverrides,
+        in.ceoArticleOverrides),
+      "serp_daily_counts" -> GoldTables.serpDailyCounts(in.serpRuns, in.serpResults,
+        in.serpResultOverrides, in.companies, in.ceos),
+      "negative_summary" -> GoldTables.negativeSummary(in.companyMentionsDaily,
+        in.ceoMentionsDaily, in.companyMentions, in.ceoMentions, in.companies, in.ceos,
+        in.articles, in.companyArticleOverrides, in.ceoArticleOverrides))
+    for ((t, df) <- GoldRefresh.rebuildAll(in)) {
+      assert(df.schema == alone(t).schema, s"$t: schema differs from its builder's")
+      assert(canon(df) == canon(alone(t)), s"$t: rows differ from its builder's")
+    }
+
+    val base = Files.createTempDirectory("graft-gold-schema").toString
+    GoldRefresh.refreshToParquet(in, base)
+    val counts = "positive BIGINT,neutral BIGINT,negative BIGINT,total BIGINT"
+    val entity = "entity_type STRING,entity_id STRING"
+    val identity = s"$entity,company_id STRING,ceo_id STRING,entity_name STRING," +
+      "company STRING,ceo STRING"
+    val written = Map(
+      "serp_feature_daily" -> (s"$entity,entity_name STRING,feature_type STRING," +
+        "total_count BIGINT,positive_count BIGINT,neutral_count BIGINT," +
+        "negative_count BIGINT,date DATE"),
+      "serp_feature_control_daily" -> (s"$entity,entity_name STRING," +
+        "feature_type STRING,total_count BIGINT,controlled_count BIGINT,date DATE"),
+      "serp_feature_daily_index" -> ("entity_type STRING,feature_type STRING," +
+        "total_count BIGINT,positive_count BIGINT,neutral_count BIGINT," +
+        "negative_count BIGINT,date DATE"),
+      "serp_feature_control_daily_index" -> ("entity_type STRING,feature_type STRING," +
+        "total_count BIGINT,controlled_count BIGINT,date DATE"),
+      "article_daily_counts" ->
+        s"$identity,alias STRING,$counts,neg_pct DECIMAL(38,6),date DATE",
+      "serp_daily_counts" -> (s"$identity,total BIGINT,controlled BIGINT," +
+        "negative_serp BIGINT,neutral_serp BIGINT,positive_serp BIGINT,date DATE"),
+      "negative_summary" -> ("company_id STRING,company STRING,ceo STRING," +
+        "article_type STRING,negative_count BIGINT,crisis_risk_count BIGINT," +
+        "top_headlines STRING,date DATE"))
+    for (t <- allTables) {
+      val got = spark.read.parquet(s"$base/$t").schema.toDDL
+      assert(got == written(t), s"$t: written schema changed")
+    }
+  }
+
+  /** The physical children of `p`, looking through command results,
+    * adaptive plans and query stages; a reused exchange has none (it is
+    * counted where it is defined) and neither has a cached stage's scan. */
+  private def below(p: SparkPlan): Seq[SparkPlan] = p match {
+    case r: CommandResultExec => Seq(r.commandPhysicalPlan)
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case s: QueryStageExec => Seq(s.plan)
+    case _: ReusedExchangeExec | _: InMemoryTableScanExec => Nil
+    case _ => p.children
+  }
+
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: below(p).flatMap(nodes)
+
+  /** The plans `writes` ran: their own and, once each, the plan of every
+    * cached stage they read (a cached stage's plan is one object for all of
+    * its readers). */
+  private def stagePlans(writes: Seq[SparkPlan]): Seq[SparkPlan] = {
+    def reads(p: SparkPlan): Seq[SparkPlan] = p +: nodes(p).collect {
+      case m: InMemoryTableScanExec => m.relation.cacheBuilder.cachedPlan
+    }.flatMap(reads)
+    writes.flatMap(reads).foldLeft(Seq.empty[SparkPlan])((seen, p) =>
+      if (seen.exists(_ eq p)) seen else seen :+ p)
+  }
+
+  private def scans(p: SparkPlan): Seq[String] = nodes(p).collect {
+    case s: FileSourceScanExec => s.relation.location.rootPaths.head.getName.stripSuffix(".jsonl")
+  }
+
+  /** Broadcast exchanges in `p` that are not inside another broadcast. */
+  private def outerBroadcasts(p: SparkPlan): Seq[SparkPlan] = p match {
+    case b: BroadcastExchangeExec => Seq(b)
+    case _ => below(p).flatMap(outerBroadcasts)
+  }
+
+  /** The executed plan of each of the `tables` written under `base` while
+    * `body` runs, by table name. */
+  private def writePlans(base: String, tables: Seq[String])(body: => Unit)
+      : Map[String, SparkPlan] = {
+    val writes = new ConcurrentHashMap[String, SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        nodes(qe.executedPlan).collectFirst {
+          case DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _)
+              if c.outputPath.getParent.toUri.getPath == base => c.outputPath.getName
+        }.foreach(t => writes.put(t, qe.executedPlan))
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      eventually(timeout(Span(30, Seconds)))(assert(writes.keySet.asScala == tables.toSet))
+    } finally spark.listenerManager.unregister(listener)
+    writes.asScala.toMap
+  }
+
+  test("a full refresh resolves each fact family once: one scan per fact table, " +
+      "one broadcast per family of each dimension and override table") {
+    val base = Files.createTempDirectory("graft-gold-plans").toString
+    val plans = writePlans(base, allTables)(GoldRefresh.refreshToParquet(in, base))
+
+    val scanned = stagePlans(allTables.map(plans)).flatMap(scans).groupBy(identity)
+      .view.mapValues(_.size).toMap
+    for (t <- Seq("serp_results", "company_article_mentions_daily",
+        "ceo_article_mentions_daily"))
+      assert(scanned.get(t).contains(1), s"$t scanned ${scanned.getOrElse(t, 0)} times")
+
+    // a cached stage is built once for all of its readers: the tables it
+    // reads feed the broadcasts of the plan that builds it
+    val families = Map(
+      "mentions" -> Seq("article_daily_counts", "negative_summary"),
+      "serp results" -> Seq("serp_daily_counts"),
+      "feature items" -> allTables.filter(_.startsWith("serp_feature")))
+    for ((family, tables) <- families) {
+      val fed = stagePlans(tables.map(plans)).flatMap(outerBroadcasts).map(scans(_).toSet)
+      for (t <- Seq("companies", "ceos", "company_article_overrides", "ceo_article_overrides",
+          "serp_result_overrides", "serp_feature_item_overrides", "serp_feature_url_overrides")) {
+        val n = fed.count(_.contains(t))
+        assert(n <= 1, s"$t feeds $n broadcasts of the $family family: $fed")
+      }
+    }
+  }
+
+  test("a shared stage is persisted only when two or more of the refreshed tables read it") {
+    def cachedReaders(plans: Map[String, SparkPlan]): Set[String] = plans.collect {
+      case (t, p) if nodes(p).exists(_.isInstanceOf[InMemoryTableScanExec]) => t
+    }.toSet
+    val base = Files.createTempDirectory("graft-gold-persist").toString
+    val full = writePlans(base, allTables)(GoldRefresh.refreshToParquet(in, base))
+    // effective mentions: article_daily_counts + negative_summary; feature
+    // items: the four serp-feature tables; serp_daily_counts reads neither
+    assert(cachedReaders(full) == allTables.filterNot(_ == "serp_daily_counts").toSet)
+    val date = in.serpFeatureItems.select("date").head().getDate(0)
+    for ((m, affected) <- OverrideRefresh.Dependencies.toSeq.sortBy(_._1)) {
+      val plans = writePlans(base, affected)(
+        OverrideRefresh.refreshAfterOverride(in, base, m, Seq(date)))
+      val expected = if (m == "serp_feature_item") affected.toSet else Set.empty[String]
+      assert(cachedReaders(plans) == expected, s"$m")
     }
   }
 

@@ -95,7 +95,7 @@ class MultimodalAvSpec extends SparkSpec {
   test("aHashBucketStats pins the two cost grains of the audio harvest") {
     val media = Multimodal.synthesizeAudio(docsOf(0L until 400L), "doc_id")
     val st = Dedup.aHashBucketStats(
-      Multimodal.audioEnergyBands(media), "media_id", "bands")
+      Multimodal.audioEnergyBands(media), "bands")
       .as[(Long, Long, Long, Long, Long, Long, Long, Long)].collect().head
     val ids = (0L until 400L).filter(_ % 3 == 1)
     val fps = ids.groupBy(lawAudioBands).view.mapValues(_.size).toMap

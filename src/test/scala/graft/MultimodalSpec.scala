@@ -193,7 +193,7 @@ class MultimodalSpec extends SparkSpec {
       .filter(col("media_type") === "image")
     val hashes = Multimodal.perceptualHashBands(m)
     val got = graft.operators.Dedup.dualHashBucketStats(
-      hashes, "media_id", "abands", "dbands")
+      hashes, "abands", "dbands")
       .as[(Long, Long, Long, Long, Long, Long, Long, Long)].head()
     val all = hashes.as[(Long, Seq[Int], Seq[Int])].collect()
     val groups = all.groupBy(t => (t._2, t._3)).values.map(_.size).toSeq
