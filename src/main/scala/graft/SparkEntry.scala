@@ -430,15 +430,14 @@ object SparkEntry {
     Dedup.simhashTable(documents(s, dir), "doc_id", "text", portable = true)
       .orderBy("id")
 
-  /** Dedup GROUPS from LSH candidate pairs: connected components (min-label
-    * propagation) over the q18 pair graph — the keep/drop decision step of
-    * a corpus dedup pipeline. Oracled against a recursive-CTE reachability
-    * query over the same pairs. */
+  /** Dedup GROUPS from LSH candidate pairs: connected components
+    * ([[Dedup.connectedComponents]]) over the q18 pair graph — the
+    * keep/drop decision step of a corpus dedup pipeline. Oracled against a
+    * recursive-CTE reachability query over the same pairs. */
   private def dedupGroups(s: SparkSession, dir: String): DataFrame =
     Dedup.connectedComponents(
-      // persist the LSH pair graph: CC's per-round actions would otherwise
-      // re-run the whole signature pipeline. Tracked in the bounded cache
-      // registry (Caching) — same policy as the Insights/Storylines bases.
+      // persist the LSH pair graph in the bounded cache registry
+      // (Caching) — same policy as the Insights/Storylines bases.
       graft.Caching.track(
         Dedup.minhashCandidatePairs(documents(s, dir), "doc_id", "text",
           shingleSize = 2, numHashes = 32, rowsPerBand = 8, portable = true)))
@@ -2784,26 +2783,23 @@ object SparkEntry {
   }
 
   /** kNN-graph clustering (q133): q171's IVF mutual-kNN edges fused by q47's
-    * min-label connected components — embedding-space document grouping
+    * connected components — embedding-space document grouping
     * (the SemDeDup-adjacent cluster assignment, but from reciprocal
     * neighbor structure instead of centroid cells); every vector reports
     * with its component min-id and keeper flag, singletons self-labeled.
-    * The edge graph is localCheckpointed — CC would otherwise re-run the
-    * kNN ([[Dedup.connectedComponents]], q47's posture). */
+    * The reciprocal-k graph is chainy (diameter > 20 at sf0.1); CC's
+    * parent shortcut crosses such chains in few rounds, and CC reads the
+    * edges once ([[Dedup.connectedComponents]]). */
   private def knnClustersQ(s: SparkSession, dir: String): DataFrame = {
     val emb = embeddings(s, dir)
     // IVF candidate edges (q171's sub-quadratic stage): kNN-graph
     // construction at scale is ANN-candidate-based by definition — the
     // exact-kNN edge rule stays spec-pinned via mutualTopK and q131.
-    // localCheckpoint (not just persist): CC re-analyzes its edge plan
-    // every round, and the IVF plan carries the centroid literals —
-    // truncating lineage makes each round's plan O(1), not O(nlist)
-    // star formulation, not min-label: the reciprocal-k graph is chainy
-    // (diameter > 20 at sf0.1 — min-label hits maxIter and falls back to
-    // star anyway, paying both); star converges in O(log n) rounds on any
-    // shape ([[Dedup.connectedComponentsStar]])
+    // CC reads the edges once, yet materializing the IVF edge plan in its
+    // own job first measured faster (sf0.1, 4 cores, 7 fresh-JVM pairs:
+    // 6.05 s median with the checkpoint, 6.57 s without)
     val edges = ivfMutualEdges(s, dir).select("id_a", "id_b").localCheckpoint()
-    val comp = Dedup.connectedComponentsStar(edges)
+    val comp = Dedup.connectedComponents(edges)
     emb.select(col("vec_id").as("id"))
       .join(comp, Seq("id"), "left")
       .select(col("id"),
@@ -2928,8 +2924,8 @@ object SparkEntry {
 
   /** Dedup ROI (q142): what q47's dedup decision is WORTH — per source,
     * the token mass sitting on non-keeper docs (component ≠ doc id under
-    * min-label CC over the q18 LSH pair graph) and the floor-ppm savings
-    * a keep-one-per-component pass would realize. The governance number
+    * connected components over the q18 LSH pair graph) and the floor-ppm
+    * savings a keep-one-per-component pass would realize. The governance number
     * that justifies (or kills) a dedup stage before anyone runs it. */
   private def dedupRoiQ(s: SparkSession, dir: String): DataFrame = {
     def floorDiv(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
@@ -4439,10 +4435,10 @@ object SparkEntry {
   /** Image dedup GROUPS (q236): the step q233's pairs exist for — the
     * union-band pair graph folded into dedup groups with a canonical
     * keeper (min media_id per component), q47's components topology on the
-    * multimodal grain. The pair graph is persisted before the iterative
-    * label propagation ([[graft.Caching.track]]) so CC rounds never re-run
-    * the decode+hash pipeline; the oracle derives components by recursive
-    * reachability over the same closed-form pair set. */
+    * multimodal grain. CC reads the pair graph once into its own
+    * adjacency, so its rounds never re-run the decode+hash pipeline; the
+    * oracle derives components by recursive reachability over the same
+    * closed-form pair set. */
   private def imageDedupGroupsQ(s: SparkSession, dir: String): DataFrame = {
     val media = graft.multimodal.Multimodal.synthesizeMedia(
       documents(s, dir), "doc_id", "text")
@@ -4516,9 +4512,9 @@ object SparkEntry {
     * sampled-frame matches) union into one edge list (id spaces are
     * disjoint by the doc_id % 3 modality law), fold to components with a
     * canonical keeper (min id, [[Dedup.connectedComponents]]), and join
-    * back to every media row — singletons keep themselves. The pair graph
-    * is persisted before the iterative propagation so CC rounds never
-    * re-run the three decode+hash pipelines. */
+    * back to every media row — singletons keep themselves. CC reads the
+    * pair graph once, so its rounds never re-run the three decode+hash
+    * pipelines. */
   /** Shared by q239/q240: the three modality pair graphs (id spaces
     * disjoint by the doc_id % 3 law) and the full-universe manifest with
     * canonical component per media row.
@@ -4550,6 +4546,10 @@ object SparkEntry {
     val (audMembers, audRepPairs, _) = Dedup.aHashPairGraph(
       mm.audioEnergyBands(mm.synthesizeAudio(docs, "doc_id")),
       "media_id", "bands", maxHamming = 3)
+    // persisted for q240, whose split audit reads the video pairs again
+    // after CC (sf0.1, 4 cores, 3 fresh-JVM pairs: 11.02 s median with the
+    // persist, 11.46 s without; q239 and q243 read them once and do not
+    // move beyond their spread)
     val vidPairs = graft.Caching.track(Dedup.frameSigMatches(
       mm.videoFrameHashes(mm.synthesizeVideo(docs, "doc_id"), stride = 2),
       "media_id", "frame_idx", "bands")

@@ -25,10 +25,10 @@ import org.apache.spark.sql.functions._
   * map-side-combined struct-min at the component grain, and a
   * connected-components contraction over the SELECTED edges only (≤ one
   * edge per component — a forest-plus-cycles graph that is tiny next to
-  * the input; [[Dedup.connectedComponents]] with its large/small-star
-  * fallback). The only driver scalar per round is the cross-component
-  * edge count (the loop-termination probe — the SemDeDup-nlist
-  * precedent); rounds ≤ ⌈log₂ n⌉ by the halving argument.
+  * the input; [[Dedup.connectedComponents]]). The only driver scalar per
+  * round is the cross-component edge count (the loop-termination probe —
+  * the SemDeDup-nlist precedent); rounds ≤ ⌈log₂ n⌉ by the halving
+  * argument.
   */
 object Mst {
 
@@ -59,7 +59,7 @@ object Mst {
     // (an edge picked by both endpoints duplicates only within its round —
     // after the merge it is intra-component and never reappears — and the
     // nested CC / relabel aggregates never needed unique rows), and `sel`
-    // itself materializes inside the nested CC's first convergence job.
+    // itself materializes inside the nested CC's first round job.
     var ed = edges
       .select(least(col(uCol), col(vCol)).as("u"),
         greatest(col(uCol), col(vCol)).as("v"),
@@ -133,11 +133,11 @@ object Mst {
     * ONE tagged CC for every cut: each edge explodes to the cuts it
     * survives and node ids carry the cut index in their low 3 bits
     * (layers disjoint; min label within a layer decodes to the layer's
-    * min node — exactly the per-cut CC's component), so one star-CC over
+    * min node — exactly the per-cut CC's component), so one CC over
     * ≤ |cuts|·|forest| edges replaces one CC run per cut; per-cut results
-    * are bit-identical because layers never interact. Star variant, not
-    * min-label: a forest's components are long thin paths (min-label
-    * needs O(diameter) rounds; star is O(log n) on any shape). */
+    * are bit-identical because layers never interact. A forest's
+    * components are long thin paths, which CC's parent shortcut crosses
+    * in far fewer rounds than their diameter. */
   def cutCensus(forest: DataFrame, cuts: Seq[Column]): Seq[(Long, Long, Long)] = {
     require(cuts.size <= 8, "the cut index rides in 3 low id bits")
     val tagged = forest.select(
@@ -149,7 +149,7 @@ object Mst {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // cast BEFORE the ·8: an IntegerType key column would do the shift in
     // Int space first and throw (ANSI) past 2^28 ids
-    val sizeByTi = Dedup.connectedComponentsStar(
+    val sizeByTi = Dedup.connectedComponents(
         tagged.select((col("u").cast("long") * 8 + col("ti")).as("cu"),
           (col("v").cast("long") * 8 + col("ti")).as("cv")), "cu", "cv")
       .groupBy(pmod(col("id"), lit(8L)).as("ti"), col("component"))

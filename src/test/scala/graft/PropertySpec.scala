@@ -4,6 +4,9 @@ import graft.functions.{TextLookup, UrlFunctions}
 import graft.operators.Windows
 import java.sql.Date
 import org.scalacheck.Gen
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
+import scala.jdk.CollectionConverters._
 
 /** Property-based invariants (SURVEY §5 plan): URL-normalize idempotence +
   * hash stability, coalesce-chain monotonicity, gaps-and-islands
@@ -173,29 +176,71 @@ class PropertySpec extends SparkSpec {
     assert(recall >= 0.75, s"recall = $recall (${got.size} pairs)")
   }
 
-  test("connected components: star variant == label propagation on random graphs + a long path") {
-    import org.apache.spark.sql.functions._
+  private def components(pairs: Seq[(Long, Long)]): Map[Long, Long] =
+    graft.operators.Dedup.connectedComponents(pairs.toDF("id_a", "id_b"))
+      .as[(Long, Long)].collect().toMap
+
+  test("connected components == a union-find reference on random graphs, a long path, self and reversed pairs") {
+    // driver-side union-find; the smaller root wins every union, so each
+    // root is its component's minimum id
+    def reference(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      for ((a, b) <- pairs) {
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      parent.keys.map(x => x -> find(x)).toMap
+    }
     val rnd = new scala.util.Random(42)
-    def cc(df: org.apache.spark.sql.DataFrame) =
-      graft.operators.Dedup.connectedComponents(df).as[(Long, Long)].collect().toMap
-    def ccStar(df: org.apache.spark.sql.DataFrame) =
-      graft.operators.Dedup.connectedComponentsStar(df).as[(Long, Long)].collect().toMap
     for (trial <- 1 to 5) {
       val n = 30 + trial * 10
       val pairs = (1 to n).map(_ => (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
-        .filter(p => p._1 != p._2).toDF("id_a", "id_b")
-      assert(ccStar(pairs) == cc(pairs), s"trial $trial diverged")
+        .filter(p => p._1 != p._2)
+      assert(components(pairs) == reference(pairs), s"trial $trial diverged")
     }
-    // a 120-node path: diameter 119 — label propagation would need ~119
-    // rounds (capped), the star variant collapses it within its default cap
-    val path = (1L until 120L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val star = ccStar(path)
-    assert(star.size == 120 && star.values.forall(_ == 1L))
-    // propagation hits its round cap on the same path — it must NOT return
-    // the partial labels silently; the star fallback makes it correct anyway
-    val fallback = graft.operators.Dedup.connectedComponents(path, maxIter = 5)
-      .as[(Long, Long)].collect().toMap
-    assert(fallback == star)
+    // a 120-node path: diameter 119, entered from both ends
+    val path = (1L until 120L).map(i => if (i % 2 == 0) (i, i + 1) else (i + 1, i))
+    val onPath = components(path)
+    assert(onPath == reference(path))
+    assert(onPath.size == 120 && onPath.values.forall(_ == 1L))
+    // 7's only pair is a self-pair: it is a node, its own component;
+    // reversed and repeated pairs change nothing
+    val mixed = Seq((7L, 7L), (3L, 1L), (1L, 3L), (3L, 1L), (5L, 3L), (9L, 8L), (8L, 9L))
+    val got = components(mixed)
+    assert(got == reference(mixed))
+    assert(got == Map(1L -> 1L, 3L -> 1L, 5L -> 1L, 7L -> 7L, 8L -> 8L, 9L -> 8L))
+  }
+
+  test("connected components: a 400-node path converges within 20 jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"cc-path-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.put(e.jobId, String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    val path = (1L until 400L).map(i => (i, i + 1))
+    sc.addSparkListener(listener)
+    val got = try {
+      sc.setJobGroup(group, "components of a 400-node path")
+      val got = try components(path) finally sc.clearJobGroup()
+      // listener events arrive in order: once the marker job is seen,
+      // every job of the components run has been seen
+      sc.setJobGroup(s"$group-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      eventually(timeout(Span(30, Seconds))) {
+        assert(jobs.containsValue(s"$group-marker"))
+      }
+      got
+    } finally sc.removeSparkListener(listener)
+    assert(got.size == 400 && got.values.forall(_ == 1L))
+    val n = jobs.values.asScala.count(_ == group)
+    assert(n <= 20, s"$n jobs for a 400-node path")
   }
 
   test("hyperplaneBucketStats equals the brute-force bucket census") {
