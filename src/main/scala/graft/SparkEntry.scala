@@ -1339,19 +1339,32 @@ object SparkEntry {
       .orderBy("event_type", "day")
   }
 
+  /** q115's part co-order graph: parts co-ordered in ≥ 2 orders, one
+    * `(pa, pb, c)` row per pair (pa < pb, c = shared orders). */
+  private def coOrderPairs(s: SparkSession, dir: String): DataFrame = {
+    val op = lineitem(s, dir)
+      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
+    op.toDF("o", "pa").join(op.toDF("o", "pb"), "o")
+      .where(col("pa") < col("pb"))
+      .groupBy("pa", "pb").agg(count(lit(1)).as("c"))
+      .where(col("c") >= 2)
+  }
+
+  /** [[coOrderPairs]] symmetrized: the directed `(s_, d_)` edge list in
+    * both orientations, the form the iterative graph operators take. */
+  private def coOrderEdges(s: SparkSession, dir: String): DataFrame = {
+    val pairs = coOrderPairs(s, dir)
+    pairs.select(col("pa").as("s_"), col("pb").as("d_"))
+      .unionByName(pairs.select(col("pb").as("s_"), col("pa").as("d_")))
+  }
+
   /** Common-neighbor link prediction (q181): q115's co-purchase graph
     * scored for shared neighborhoods — high-CN NON-edges are transitively
     * similar pairs the direct edge rule missed
     * ([[graft.operators.Triangles.commonNeighborPairs]], super-node cap
     * 128, min 2 shared). */
   private def commonNeighborsQ(s: SparkSession, dir: String): DataFrame = {
-    val op = lineitem(s, dir)
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-    val edges = op.toDF("o", "pa").join(op.toDF("o", "pb"), "o")
-      .where(col("pa") < col("pb"))
-      .groupBy("pa", "pb").agg(count(lit(1)).as("c"))
-      .where(col("c") >= 2)
-      .select("pa", "pb")
+    val edges = coOrderPairs(s, dir).select("pa", "pb")
     graft.operators.Triangles.commonNeighborPairs(edges, "pa", "pb",
       maxApexDegree = 128L, minCommon = 2L)
       .orderBy("id_a", "id_b")
@@ -2118,22 +2131,15 @@ object SparkEntry {
   /** Personalized PageRank (q216): random walk with restart over q120's
     * symmetrized part co-order graph, teleporting to the 5 smallest part
     * ids as the seed set — seed-anchored proximity instead of global
-    * importance ([[graft.operators.PageRank.integerPersonalizedPageRank]],
-    * the identical integer fixed-point recurrence with seed-gated
-    * teleport); top-100 by score. */
+    * importance ([[graft.operators.PageRank.integerPageRank]] with
+    * `seeds`: q120's integer fixed-point recurrence, teleport gated to the
+    * seed set); top-100 by score. */
   private def pprQ(s: SparkSession, dir: String): DataFrame = {
-    val op = lineitem(s, dir)
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-    val pairs = op.toDF("o", "pa").join(op.toDF("o", "pb"), "o")
-      .where(col("pa") < col("pb"))
-      .groupBy("pa", "pb").agg(count(lit(1)).as("c"))
-      .where(col("c") >= 2)
-    val ed = pairs.select(col("pa").as("s_"), col("pb").as("d_"))
-      .unionByName(pairs.select(col("pb").as("s_"), col("pa").as("d_")))
+    val ed = coOrderEdges(s, dir)
     val seeds = ed.select(col("s_").as("node")).distinct()
       .orderBy("node").limit(5)
-    graft.operators.PageRank.integerPersonalizedPageRank(
-        ed, "s_", "d_", seeds, iterations = 10)
+    graft.operators.PageRank.integerPageRank(
+        ed, "s_", "d_", iterations = 10, seeds = Some(seeds))
       .select(col("node").as("part"), col("score"))
       .orderBy(col("score").desc, col("part"))
       .limit(100)
@@ -2146,14 +2152,7 @@ object SparkEntry {
     * pinned-association double formula with two IEEE sqrts (the
     * q103/q202 moment posture). */
   private def assortativityQ(s: SparkSession, dir: String): DataFrame = {
-    val op = lineitem(s, dir)
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-    val pairs = op.toDF("o", "pa").join(op.toDF("o", "pb"), "o")
-      .where(col("pa") < col("pb"))
-      .groupBy("pa", "pb").agg(count(lit(1)).as("c"))
-      .where(col("c") >= 2)
-    val ed = pairs.select(col("pa").as("s_"), col("pb").as("d_"))
-      .unionByName(pairs.select(col("pb").as("s_"), col("pa").as("d_")))
+    val ed = coOrderEdges(s, dir)
     val deg = ed.groupBy("s_").agg(count(lit(1)).as("deg"))
       .select(col("s_").as("node"), col("deg"))
     val ex = ed
@@ -2187,12 +2186,7 @@ object SparkEntry {
     * recursive-CTE reachability per threshold on the BASE graph — a
     * disjoint algorithm whose agreement IS the single-linkage property. */
   private def singleLinkageQ(s: SparkSession, dir: String): DataFrame = {
-    val op = lineitem(s, dir)
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-    val pairs = op.toDF("o", "pa").join(op.toDF("o", "pb"), "o")
-      .where(col("pa") < col("pb"))
-      .groupBy("pa", "pb").agg(count(lit(1)).as("c"))
-      .where(col("c") >= 2)
+    val pairs = coOrderPairs(s, dir)
       .localCheckpoint(false) // lazy: the MSF's first count job materializes
     val msf = graft.operators.Mst.boruvkaMsf(
       pairs.select(col("pa"), col("pb"), (-col("c")).as("w")), "pa", "pb", "w")
@@ -2214,42 +2208,28 @@ object SparkEntry {
     * (the taint-radius / contamination-blast-radius probe; the q216
     * teleport set reused as BFS sources). Distances are small exact ints
     * with a 999999 not-reached sentinel — both engines replay the same
-    * relaxation. */
+    * relaxation, run through [[graft.operators.Fixpoint.rounds]]. */
   private def bfsLayersQ(s: SparkSession, dir: String): DataFrame = {
     val inf = 999999L
-    val op = lineitem(s, dir)
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-    val pairs = op.toDF("o", "pa").join(op.toDF("o", "pb"), "o")
-      .where(col("pa") < col("pb"))
-      .groupBy("pa", "pb").agg(count(lit(1)).as("c"))
-      .where(col("c") >= 2)
-    // r13: edge list pre-shuffled by s_ once (the checkpoint preserves the
-    // hash partitioning — every relaxation round's join reuses it, guide
-    // §2.4), and all checkpoints LAZY — the final layer-count aggregate is
-    // the one action that executes the 6-round DAG, instead of 8 dedicated
-    // materialization jobs; each round's plan is still cut at the
-    // LogicalRDD so Catalyst never sees a 6-round mega-plan
+    // edge list pre-shuffled by s_ once and persisted (a cached plan keeps
+    // its hash partitioning — see PageRank), so every relaxation round's
+    // join reuses it (guide §2.4)
     val ed = graft.Caching.track(
-      pairs.select(col("pa").as("s_"), col("pb").as("d_"))
-        .unionByName(pairs.select(col("pb").as("s_"), col("pa").as("d_")))
-        .repartition(col("s_"))) // persist pins hashpartitioning — see PageRank
+      coOrderEdges(s, dir).repartition(col("s_")))
     val nodes = ed.select(col("s_").as("node")).distinct()
     val seeds = nodes.orderBy("node").limit(5)
       .withColumn("__seed", lit(true))
-    var dist = nodes.join(seeds, Seq("node"), "left")
+    val sources = nodes.join(seeds, Seq("node"), "left")
       .select(col("node"),
         when(coalesce(col("__seed"), lit(false)), lit(0L)).otherwise(lit(inf))
           .as("d"))
-      .localCheckpoint(false)
-    for (_ <- 1 to 6) {
+    graft.operators.Fixpoint.rounds(sources, 6) { (dist, _) =>
       val relax = ed.join(dist.select(col("node").as("s_"), col("d")), "s_")
         .groupBy(col("d_").as("node")).agg(min(col("d") + lit(1L)).as("__nd"))
-      dist = dist.join(relax, Seq("node"), "left")
+      dist.join(relax, Seq("node"), "left")
         .select(col("node"),
           least(col("d"), coalesce(col("__nd"), lit(inf))).as("d"))
-        .localCheckpoint(false)
-    }
-    dist.groupBy(col("d").as("hops")).agg(count(lit(1)).as("n_nodes"))
+    }.groupBy(col("d").as("hops")).agg(count(lit(1)).as("n_nodes"))
       .orderBy("hops")
   }
 
@@ -2620,12 +2600,7 @@ object SparkEntry {
     * degree-oriented triangle kernel ([[graft.operators.Triangles]] —
     * each triangle counted once at its lowest-ordered vertex). */
   private def clusteringCoeffQ(s: SparkSession, dir: String): DataFrame = {
-    val op = lineitem(s, dir)
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-    val pairs = op.toDF("o", "pa").join(op.toDF("o", "pb"), "o")
-      .where(col("pa") < col("pb"))
-      .groupBy("pa", "pb").agg(count(lit(1)).as("c"))
-      .where(col("c") >= 2)
+    val pairs = coOrderPairs(s, dir)
     val nt = graft.operators.Triangles.nodeTriangles(
       pairs.select(col("pa"), col("pb")), "pa", "pb")
     nt.filter(col("degree") >= 2)
@@ -2886,9 +2861,9 @@ object SparkEntry {
   /** Label propagation (q139): q171's IVF mutual-kNN edges carrying seed
     * labels (vec_id % 4 == 0 keeps its `label`) to unlabeled vectors in
     * two synchronous majority rounds, ties to the smaller label —
-    * semi-supervised corpus labeling ([[graft.operators.LabelProp]]).
-    * The edge graph is localCheckpointed: both rounds reuse it
-    * (q133's posture). */
+    * semi-supervised corpus labeling ([[graft.operators.LabelProp]], its
+    * rounds run through [[graft.operators.Fixpoint.rounds]]). The edge
+    * graph is localCheckpointed: both rounds reuse it (q133's posture). */
   private def labelPropQ(s: SparkSession, dir: String): DataFrame = {
     val e = embeddings(s, dir)
     val edges = ivfMutualEdges(s, dir).select("id_a", "id_b").localCheckpoint()
@@ -3414,16 +3389,11 @@ object SparkEntry {
   /** Integer-exact PageRank (q120): 10 damped iterations over the
     * symmetrized part co-order graph (q115's edge rule), all arithmetic
     * in long `div` so the DuckDB oracle unrolls the identical fixed-point
-    * recurrence ([[graft.operators.PageRank]]); top-100 by score. */
+    * recurrence ([[graft.operators.PageRank.integerPageRank]] with every
+    * node seeded, q216's operator; the rounds run through
+    * [[graft.operators.Fixpoint.rounds]]); top-100 by score. */
   private def pageRankQ(s: SparkSession, dir: String): DataFrame = {
-    val op = lineitem(s, dir)
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-    val pairs = op.toDF("o", "pa").join(op.toDF("o", "pb"), "o")
-      .where(col("pa") < col("pb"))
-      .groupBy("pa", "pb").agg(count(lit(1)).as("c"))
-      .where(col("c") >= 2)
-    val ed = pairs.select(col("pa").as("s_"), col("pb").as("d_"))
-      .unionByName(pairs.select(col("pb").as("s_"), col("pa").as("d_")))
+    val ed = coOrderEdges(s, dir)
     graft.operators.PageRank.integerPageRank(ed, "s_", "d_", iterations = 10)
       .select(col("node").as("part"), col("score"))
       .orderBy(col("score").desc, col("part"))
@@ -4246,13 +4216,7 @@ object SparkEntry {
     * three-way join on the same edge list, so the gate proves the
     * orientation enumerates every triangle exactly once. */
   private def trianglesQ(s: SparkSession, dir: String): DataFrame = {
-    val op = lineitem(s, dir)
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-    val edges = op.toDF("o", "pa").join(op.toDF("o", "pb"), "o")
-      .where(col("pa") < col("pb"))
-      .groupBy("pa", "pb").agg(count(lit(1)).as("c"))
-      .where(col("c") >= 2)
-      .select("pa", "pb")
+    val edges = coOrderPairs(s, dir).select("pa", "pb")
     graft.operators.Triangles.nodeTriangles(edges, "pa", "pb")
       .select(col("node").as("part"), col("degree"), col("triangles"),
         col("clustering"))
@@ -4274,13 +4238,7 @@ object SparkEntry {
     * degree-mass term runs in decimal(38,0) — D_c²·1e6 overflows long at
     * ~100× but is 23 digits at worst. */
   private def modularityQ(s: SparkSession, dir: String): DataFrame = {
-    val op = lineitem(s, dir)
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-    val edges = op.toDF("o", "pa").join(op.toDF("o", "pb"), "o")
-      .where(col("pa") < col("pb"))
-      .groupBy("pa", "pb").agg(count(lit(1)).as("c"))
-      .where(col("c") >= 2)
-      .select("pa", "pb")
+    val edges = coOrderPairs(s, dir).select("pa", "pb")
     val brand = part(s, dir)
       .select(col("p_partkey").as("node"), col("p_brand").as("brand"))
     // the harvest feeds three different grains (brand-pair cells, node
@@ -4895,10 +4853,11 @@ object SparkEntry {
   /** Bradley–Terry preference strengths (q250): the RLHF reward-data
     * face — [[prefJudgments]]'s (winner, loser) rows fitted with
     * [[graft.operators.Preference.bradleyTerryFixedPoint]] (Hunter-2004
-    * MM recurrence, 5 rounds, integer fixed point at SCALE=1e6 — the
-    * q120 unrolled-fixed-point idiom, so the oracle replays every floor
-    * division exactly). Output `(item, wins, score, rank)`: rank by
-    * fitted strength must track the latent strength `item+1` the
+    * MM recurrence, 5 rounds through [[graft.operators.Fixpoint.rounds]],
+    * integer fixed point at SCALE=1e6 — the q120 unrolled-fixed-point
+    * idiom, so the oracle replays every floor division exactly). Output
+    * `(item, wins, score, rank)`: rank by fitted strength must track the
+    * latent strength `item+1` the
     * synthesis draws from. The 100 TB posture: the judgment table
     * aggregates ONCE to |items|-bounded wins and |items|²-bounded pair
     * tables; the 5 MM rounds iterate over those aggregates only. */

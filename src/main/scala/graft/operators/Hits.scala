@@ -25,26 +25,27 @@ import org.apache.spark.sql.functions._
   * fact-grain (orders), so broadcasting it unconditionally grows linearly
   * with the fact table and eventually OOMs the driver. The join strategy
   * is therefore size-gated: scores broadcast only while both node sets
-  * fit under `maxBroadcastNodes` (probed once, two bounded count actions
-  * on the deduped edge list); past the gate the edge list is pre-shuffled
-  * ONCE per join key (`repartition(a)` / `repartition(h)`, each pinned by
-  * a localCheckpoint that preserves the hash partitioning) so every
-  * iteration shuffles only the small score table into place — the
-  * bucketed co-partitioned posture. Normalization stays a lazy 1-row
-  * crossJoin each (the A8 max-probe idiom, never a driver action); the
-  * raw-sum table is materialized per half-iteration (see below), which
-  * doubles as the iterative-graph lineage cut.
+  * fit under `maxBroadcastNodes` (probed once, one approximate
+  * distinct-count action on the deduped edge list); past the gate the
+  * edge list is pre-shuffled ONCE per join key (`repartition(a)` /
+  * `repartition(h)`, each pinned by a localCheckpoint that preserves the
+  * hash partitioning) so every iteration shuffles only the small score
+  * table into place — the bucketed co-partitioned posture. Normalization
+  * stays a lazy 1-row crossJoin each (the A8 max-probe idiom, never a
+  * driver action); the raw-sum table is materialized per half-iteration
+  * (see below), which doubles as the iterative-graph lineage cut.
   */
 object Hits {
+
+  /** The fixed-point unit S: every score is normalized to max S. */
+  private val Scale = 1L << 20
 
   /** Returns `(hubs, authorities)`: `(node, score)` each, fixed-point S.
     * Edges are deduplicated; every hub must reach ≥1 authority and vice
     * versa (true by construction for co-occurrence bipartite graphs).
     *
-    * `broadcastScores`: `Some(true)` forces the per-iteration score
-    * broadcast, `Some(false)` forces the co-partitioned path, `None`
-    * (default) probes both node-set sizes and broadcasts only when the
-    * larger fits under `maxBroadcastNodes` (score rows are two longs —
+    * The per-iteration score broadcast is taken only when the larger
+    * node set fits under `maxBroadcastNodes` (score rows are two longs —
     * ~4M rows ≈ a few hundred MB of broadcast, the practical hint
     * ceiling; a web-scale hub side blows past it and must co-partition).
     *
@@ -62,27 +63,20 @@ object Hits {
       hubCol: String,
       authCol: String,
       iterations: Int = 8,
-      scale: Long = 1L << 20,
-      broadcastScores: Option[Boolean] = None,
       maxBroadcastNodes: Long = 4000000L): (DataFrame, DataFrame) = {
     require(iterations >= 1 && iterations <= 64, "iterations in [1, 64]")
-    require(scale >= 1024L, "scale too small for meaningful fixed-point")
-    // LAZY checkpoint (r13): the probe aggregate below (or, when the
-    // caller forces the strategy, the first half-iteration's max probe)
-    // materializes it — no dedicated job
+    // LAZY checkpoint (r13): the probe aggregate below materializes it
     val ed = edges.select(col(hubCol).as("h"), col(authCol).as("a"))
       .distinct().localCheckpoint(false)
 
-    val bcast = broadcastScores.getOrElse {
-      // ONE bounded probe action over the already-checkpointed edge list
-      // (HLL sketches, map-side combined — two exact distinct-counts cost
-      // ~2 s of the query at sf0.1 for a decision a ±2% estimate settles);
-      // the gate keys on the LARGER side because both score tables cross
-      // the wire every iteration
-      val r = ed.agg(approx_count_distinct(col("a")).as("na"),
-        approx_count_distinct(col("h")).as("nh")).head()
-      math.max(r.getLong(0), r.getLong(1)) <= maxBroadcastNodes
-    }
+    // ONE bounded probe action over the already-checkpointed edge list
+    // (HLL sketches, map-side combined — two exact distinct-counts cost
+    // ~2 s of the query at sf0.1 for a decision a ±2% estimate settles);
+    // the gate keys on the LARGER side because both score tables cross
+    // the wire every iteration
+    val probe = ed.agg(approx_count_distinct(col("a")).as("na"),
+      approx_count_distinct(col("h")).as("nh")).head()
+    val bcast = math.max(probe.getLong(0), probe.getLong(1)) <= maxBroadcastNodes
     // co-partitioned path: pay the edge shuffle ONCE per join key; the
     // checkpoint pins the hash partitioning so each iteration's join
     // reuses it and only the node-grain score table moves
@@ -106,11 +100,11 @@ object Hits {
       val m = r.agg(greatest(max(col("raw")), lit(1L)).as("m"))
       r.crossJoin(broadcast(m))
         .select(col(node).as("node"),
-          expr(s"(CAST(raw AS DECIMAL(38,0)) * $scale) div m").as("score"))
+          expr(s"(CAST(raw AS DECIMAL(38,0)) * $Scale) div m").as("score"))
     }
 
     var auth = ed.select(col("a").as("node")).distinct()
-      .withColumn("score", lit(scale))
+      .withColumn("score", lit(Scale))
     var hub: DataFrame = null
     var t = 1
     while (t <= iterations) {

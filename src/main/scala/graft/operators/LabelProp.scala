@@ -21,9 +21,9 @@ import org.apache.spark.sql.functions._
   * per node by construction — [[Similarity.mutualTopK]]); each round is
   * ONE map-side-combined shuffle on the destination node id (edges joined
   * to current labels on the source side) plus a broadcast-free
-  * co-partitioned outer join back to the node table. Rounds are a fixed
-  * small constant (2-3 in practice); nothing driver-side grows with the
-  * graph.
+  * co-partitioned outer join back to the node table, run through
+  * [[Fixpoint.rounds]]. Rounds are a fixed small constant (2-3 in
+  * practice); nothing driver-side grows with the graph.
   */
 object LabelProp {
 
@@ -43,7 +43,6 @@ object LabelProp {
       srcCol: String,
       dstCol: String,
       rounds: Int): DataFrame = {
-    require(rounds >= 1, "need at least one round")
     val reserved = Set("__lab", "__round", "__src", "__dst", "__votes", "__win")
     require(!nodes.columns.exists(reserved) && !edges.columns.exists(reserved),
       s"column names ${reserved.mkString(", ")} are reserved by propagate")
@@ -52,10 +51,10 @@ object LabelProp {
     val und = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
       .union(edges.select(col(dstCol).as("__src"), col(srcCol).as("__dst")))
 
-    var cur = nodes.select(col(idCol), col(labelCol).cast("long").as("__lab"),
+    val seeded = nodes.select(col(idCol), col(labelCol).cast("long").as("__lab"),
       when(col(labelCol).isNotNull, lit(0)).as("__round"))
 
-    for (r <- 1 to rounds) {
+    Fixpoint.rounds(seeded, rounds) { (cur, r) =>
       // votes: labeled endpoints push their label to the other endpoint;
       // one shuffle on __dst (map-side combined), bounded by k·|V| rows in
       val votes = und
@@ -67,16 +66,13 @@ object LabelProp {
         .agg(max(struct(col("__votes"), (-col("__lab")).as("__neg")))
           .as("__win"))
         .select(col("__dst").as(idCol), (-col("__win")("__neg")).as("__new"))
-      cur = cur.join(votes, Seq(idCol), "left")
+      cur.join(votes, Seq(idCol), "left")
         .select(col(idCol),
           coalesce(col("__lab"), col("__new")).as("__lab"),
           coalesce(col("__round"),
             when(col("__lab").isNull && col("__new").isNotNull, lit(r)))
             .as("__round"))
-      // each round's plan builds on the last; localCheckpoint would cut
-      // lineage for big `rounds`, but rounds is a small constant here
-    }
-    cur.select(col(idCol), col("__lab").as("label"),
+    }.select(col(idCol), col("__lab").as("label"),
       col("__round").cast("long").as("round_assigned"))
   }
 }

@@ -49,9 +49,10 @@ object Mst {
       edges: DataFrame,
       uCol: String,
       vCol: String,
-      wCol: String,
-      maxRounds: Int = 40): DataFrame = {
-    require(maxRounds >= 1, "maxRounds must be positive")
+      wCol: String): DataFrame = {
+    // the component count at least halves per round: 40 rounds cover a
+    // graph of 2^40 nodes, so hitting the bound means a bug
+    val maxRounds = 40
     // r13 round-machinery cut: every checkpoint is LAZY and the per-round
     // edge COUNT is the materializing action (one job where
     // checkpoint-then-isEmpty paid two), the per-round `sel.distinct()`
@@ -114,9 +115,7 @@ object Mst {
       round += 1
     }
     require(nEdges == 0L,
-      s"boruvkaMsf did not converge in $maxRounds rounds " +
-      "(component count halves per round — this needs a graph of 2^40 nodes, " +
-      "or a bug)")
+      s"boruvkaMsf did not converge in $maxRounds rounds")
     if (picked.isEmpty)
       edges.select(col(uCol).as("u"), col(vCol).as("v"),
         col(wCol).cast("long").as("w")).filter(lit(false))

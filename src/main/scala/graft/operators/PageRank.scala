@@ -5,11 +5,14 @@ import org.apache.spark.sql.functions._
 
 /** Integer-exact PageRank (Page, Brin, Motwani & Winograd 1999) — the
   * canonical iterative distributed-graph workload, arithmetic restricted
-  * to LONG integer division so every engine replays it bit-for-bit:
+  * to LONG integer division so every engine replays it bit-for-bit. One
+  * recurrence serves global and personalized PageRank (random walk with
+  * restart; Jeh & Widom 2003): mass starts at, and teleports back to, the
+  * seed set S — every node when no seeds are given:
   *
-  *   score_0(v)   = SCALE div n
+  *   score_0(v)   = [v ∈ S] · SCALE div |S|
   *   contrib(u→v) = score_i(u) div outdeg(u)
-  *   score_i+1(v) = (15·SCALE) div (100·n)
+  *   score_i+1(v) = [v ∈ S] · (15·SCALE) div (100·|S|)
   *                  + (85 · Σ_in contrib) div 100       (d = 0.85)
   *
   * Floating-point PageRank sums in-neighbor contributions in partition
@@ -23,152 +26,80 @@ import org.apache.spark.sql.functions._
   * SCALE = 1e12 that is a 1e-12-relative drift, far below any ranking
   * gap; the invariant total mass is ≤ SCALE with the deficit going to the
   * (1-d) teleport term, the standard "dangling mass dropped"
-  * simplification. The input edge list is treated as DIRECTED; every node
-  * must have at least one out-edge (a symmetrized undirected graph
-  * satisfies this by construction — q120's co-order graph does), which is
-  * what makes `outdeg` total and the mass argument hold.
+  * simplification. The input edge list is DIRECTED. The node table is
+  * src ∪ dst: an in-edge-only node is a node (outdeg 0 — it holds mass
+  * but contributes nothing onward, the ignore-dangling posture), and a
+  * seed that appears only as a destination still seeds teleport mass. On
+  * a symmetrized graph — what every registry caller passes — every node
+  * has an out-edge and the table equals the src-only one.
   *
   * Scale shape: per iteration, one join of the (node, outdeg, score)
   * table against the edge list on `src` (scores are the small side — at
   * web scale this is the classic broadcast-or-co-partitioned join), one
-  * map-side-combined sum on `dst`, one left join back to the node table.
-  * The lineage is cut (localCheckpoint) every `checkpointEvery`
-  * iterations — every iteration pays a materialization job that dwarfs
-  * the per-iteration compute on all but the largest graphs, while no cut
-  * at all hands Catalyst one 30-join mega-plan; every third is the
-  * iterative-graph middle ground (the q116/connected-components
-  * precedent, interval form). Node count is ONE bounded driver scalar
-  * (a count action, the SemDeDup-nlist precedent).
+  * map-side-combined sum on `dst`, one left join back to the node table,
+  * run through [[Fixpoint.rounds]]. The seed count is ONE bounded driver
+  * scalar (a count action, the SemDeDup-nlist precedent).
   *
   * Returns `(node, score)` for all nodes, unsorted: callers rank/limit.
   */
 object PageRank {
 
+  private val Scale = 1000000000000L
+
+  /** `seeds`: one column of seed node ids; `None` seeds every node (global
+    * PageRank). Seeds absent from both edge columns are ignored; a seed set
+    * with none in the graph is rejected. */
   def integerPageRank(
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
       iterations: Int = 10,
-      scale: Long = 1000000000000L,
-      checkpointEvery: Int = 3): DataFrame = {
+      seeds: Option[DataFrame] = None): DataFrame = {
     require(iterations >= 1 && iterations <= 100, "iterations in [1, 100]")
-    require(checkpointEvery >= 1, "checkpointEvery must be positive")
-    require(scale >= 1000000L, "scale too small for meaningful fixed-point")
     // materialize the edge list once — its upstream lineage (often a
     // self-join building the graph) would otherwise re-execute on every
     // iteration; same posture as GraphX caching the edge RDD. PRE-SHUFFLED
-    // by src (r13): localCheckpoint preserves the hash partitioning, so
-    // every iteration's score⋈edges join reuses it and only the node-grain
-    // score table moves — the bucketed co-partitioned posture (guide §2.4;
-    // the Hits.scala precedent). deg inherits the same partitioning (its
-    // groupBy("src") needs no exchange), so the contribs join-back is
-    // exchange-free on the deg side too: ONE exchange per iteration (the
-    // contribution sum) instead of three.
-    // persist, NOT localCheckpoint: under AQE a checkpoint's LogicalRDD
-    // reports UnknownPartitioning (the adaptive partition count is not
-    // part of the truncated plan — probed on 4.1.2, eager or lazy), while
-    // a cached plan keeps its output partitioning (AQE may not change it:
-    // canChangeCachedPlanOutputPartitioning defaults false). So the
+    // by src and PERSISTED, not localCheckpointed: under AQE a
+    // checkpoint's LogicalRDD reports UnknownPartitioning (probed on 4.1.2,
+    // eager or lazy), while a cached plan keeps its output partitioning
+    // (canChangeCachedPlanOutputPartitioning defaults false). So the
     // repartition-by-src pays its shuffle ONCE here and every iteration's
-    // score⋈edges join — and deg's groupBy(src) — reuse it exchange-free
-    // (guide §2.4, the bucketed co-partitioned posture). The deg count
-    // below materializes both tables; graft.Caching bounds the registry.
+    // score⋈edges join reuses it (guide §2.4, the bucketed co-partitioned
+    // posture; the Hits.scala precedent). graft.Caching bounds the registry.
     val ed = graft.Caching.track(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
         .repartition(col("src")))
-    val deg = graft.Caching.track(
-      ed.groupBy("src").agg(count(lit(1)).as("outdeg"))
-        .select(col("src").as("node"), col("outdeg")))
-    val n = deg.count() // the one driver scalar
-    require(n > 0, "empty graph")
-    val base = (15L * scale) / (100L * n)
-    var scores = deg.withColumn("score", lit(scale / n))
-    for (i <- 1 to iterations) {
-      val contribs = scores
-        .join(ed, col("node") === col("src"))
-        .select(col("dst"), expr("score div outdeg").as("q"))
-        .groupBy("dst").agg(sum(col("q")).as("s"))
-      scores = deg
-        .join(contribs, col("node") === col("dst"), "left")
+    // node table and out-degrees in ONE aggregate: every edge counts 1 at
+    // its src and 0 at its dst
+    val nodes = ed
+      .select(explode(array(
+        struct(col("src").as("node"), lit(1L).as("o")),
+        struct(col("dst").as("node"), lit(0L).as("o")))).as("x"))
+      .groupBy(col("x.node").as("node")).agg(sum(col("x.o")).as("outdeg"))
+    val deg = graft.Caching.track(seeds match {
+      case None => nodes.withColumn("is_seed", lit(true))
+      case Some(sd) => nodes
+        .join(sd.toDF("node").distinct().withColumn("is_seed", lit(true)),
+          Seq("node"), "left")
         .select(col("node"), col("outdeg"),
-          (lit(base) + expr("(85 * coalesce(s, 0L)) div 100")).as("score"))
-      if (i % checkpointEvery == 0 && i < iterations)
-        // LAZY: truncates the Catalyst plan at the same cadence but defers
-        // materialization to the caller's one action — no per-cut job
-        scores = scores.localCheckpoint(false)
-    }
-    scores.select("node", "score")
-  }
-
-  /** Personalized PageRank (random walk with restart; Jeh & Widom 2003's
-    * "Scaling personalized web search" formulation) — identical
-    * fixed-point recurrence to [[integerPageRank]] except mass starts at,
-    * and teleports back to, the SEED set only:
-    *
-    *   score_0(v)   = [v ∈ S] · SCALE div |S|
-    *   score_i+1(v) = [v ∈ S] · (15·SCALE) div (100·|S|)
-    *                  + (85 · Σ_in contrib) div 100
-    *
-    * The training-data face: seed-anchored relevance/taint propagation —
-    * "how close is every node to THIS set" (contaminated docs, a topic's
-    * exemplars, a customer segment) rather than global importance. Same
-    * plan shape and scale posture as the global variant (one join + one
-    * map-side sum per iteration, lineage cut every `checkpointEvery`);
-    * the seed count is the one bounded driver scalar. The node table is
-    * src ∪ dst, so in-edge-only nodes get score rows (they accumulate
-    * mass but, having outdeg 0, contribute nothing onward — the standard
-    * ignore-dangling posture) and a seed that appears only as a
-    * destination still seeds teleport mass. Seeds absent from BOTH edge
-    * columns are ignored (join against the node table). */
-  def integerPersonalizedPageRank(
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      seeds: DataFrame, // one column: the seed node ids
-      iterations: Int = 10,
-      scale: Long = 1000000000000L,
-      checkpointEvery: Int = 3): DataFrame = {
-    require(iterations >= 1 && iterations <= 100, "iterations in [1, 100]")
-    require(checkpointEvery >= 1, "checkpointEvery must be positive")
-    require(scale >= 1000000L, "scale too small for meaningful fixed-point")
-    // pre-shuffled by src and PERSISTED (same r13 co-partitioned posture
-    // and AQE-vs-checkpoint caveat as [[integerPageRank]]): each iteration
-    // reuses the pinned hashpartitioning(src) instead of re-shuffling
-    val ed = graft.Caching.track(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-        .repartition(col("src")))
-    val sd = seeds.toDF("node").distinct()
-    // node table = src ∪ dst: an in-edge-only node is still a node (outdeg
-    // 0 → dangling, score-only); building it from src alone would silently
-    // drop such nodes — and any seed living only on the dst side — from
-    // the output (fine for symmetrized graphs, a trap for directed ones)
-    val deg = graft.Caching.track(ed.select(col("src").as("node"))
-      .union(ed.select(col("dst").as("node"))).distinct()
-      .join(ed.groupBy("src").agg(count(lit(1)).as("outdeg"))
-        .withColumnRenamed("src", "node"), Seq("node"), "left")
-      .join(sd.withColumn("is_seed", lit(true)), Seq("node"), "left")
-      .select(col("node"), coalesce(col("outdeg"), lit(0L)).as("outdeg"),
-        coalesce(col("is_seed"), lit(false)).as("is_seed")))
+          coalesce(col("is_seed"), lit(false)).as("is_seed"))
+    })
     val ns = deg.filter(col("is_seed")).count()
     require(ns > 0, "no seed is present in the graph")
-    val base = (15L * scale) / (100L * ns)
-    var scores = deg.withColumn("score",
-      when(col("is_seed"), lit(scale / ns)).otherwise(lit(0L)))
-    for (i <- 1 to iterations) {
+    val base = (15L * Scale) / (100L * ns)
+    val init = deg.withColumn("score",
+      when(col("is_seed"), lit(Scale / ns)).otherwise(lit(0L)))
+    Fixpoint.rounds(init, iterations) { (scores, _) =>
       // dangling (outdeg-0) nodes hold mass but contribute nothing onward;
       // the filter also keeps the integer div away from a zero divisor
       val contribs = scores.filter(col("outdeg") > 0)
         .join(ed, col("node") === col("src"))
         .select(col("dst"), expr("score div outdeg").as("q"))
         .groupBy("dst").agg(sum(col("q")).as("s"))
-      scores = deg
-        .join(contribs, col("node") === col("dst"), "left")
+      deg.join(contribs, col("node") === col("dst"), "left")
         .select(col("node"), col("outdeg"), col("is_seed"),
           (when(col("is_seed"), lit(base)).otherwise(lit(0L)) +
             expr("(85 * coalesce(s, 0L)) div 100")).as("score"))
-      if (i % checkpointEvery == 0 && i < iterations)
-        scores = scores.localCheckpoint(false) // lazy plan cut, no extra job
-    }
-    scores.select("node", "score")
+    }.select("node", "score")
   }
 }

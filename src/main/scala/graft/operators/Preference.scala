@@ -31,12 +31,16 @@ import org.apache.spark.sql.functions._
   * stage aggregates it ONCE to bounded tables (per-item wins, per-
   * ordered-pair counts — at most |items|² rows) and iterates over THOSE.
   * Each MM iteration is two shuffle joins of the pair aggregate against
-  * the score table on item keys plus one scalar total; lineage is cut
-  * every `checkpointEvery` iterations (the PageRank posture). The
+  * the score table on item keys plus one scalar total, run through
+  * [[Fixpoint.rounds]] (the PageRank posture). The
   * annotator audit shuffles the judgment table twice (pair majority,
   * then annotator rollup) with the tiny majority table broadcast back.
   */
 object Preference {
+
+  /** Fixed-point unit of every Bradley–Terry strength: the mean item
+    * strength after each round's renormalization. */
+  private val Scale = 1000000L
 
   /** Exact integer floor-sqrt as a COLUMN (the per-row twin of
     * [[Mixing.isqrt]]): floor(sqrt(double)) plus a one-step correction in
@@ -116,8 +120,8 @@ object Preference {
 
   /** Fixed-point Bradley–Terry strengths from a (winner, loser) pair
     * table. Returns `(item, wins, score)` — score is the MM strength
-    * after `iterations` rounds in fixed point at `scale` (mean item
-    * strength ≡ `scale` after each round's renormalization), unsorted.
+    * after `iterations` rounds in fixed point at SCALE = 1e6 (mean item
+    * strength ≡ SCALE after each round's renormalization), unsorted.
     *
     * Integer contract (the part an oracle replays exactly):
     *   s0_i      = SCALE
@@ -129,7 +133,7 @@ object Preference {
     *               s_i + s_j denominator)
     *
     * Overflow envelope: n_ij·SCALE² and W_i·SCALE² must stay under 2^63 —
-    * at the default SCALE=1e6 that caps per-pair and per-item win counts
+    * at SCALE=1e6 that caps per-pair and per-item win counts
     * at ~9.2e6. Beyond that, pre-aggregate with a count cap or raise the
     * item grain; the require below makes the envelope loud.
     */
@@ -137,18 +141,14 @@ object Preference {
       pairs: DataFrame,
       winnerCol: String,
       loserCol: String,
-      iterations: Int = 5,
-      scale: Long = 1000000L,
-      checkpointEvery: Int = 3): DataFrame = {
-    require(iterations >= 1 && iterations <= 50, "iterations in [1, 50]")
-    require(scale >= 1000L, "scale too small for meaningful fixed-point")
+      iterations: Int = 5): DataFrame = {
     val p = pairs.select(
       col(winnerCol).cast("long").as("w"), col(loserCol).cast("long").as("l"))
     // ONE pass over the (possibly huge) judgment table builds the bounded
     // counts grain the recurrence actually consumes
     bradleyTerryFromCounts(
       p.groupBy("w", "l").agg(count(lit(1)).as("n")),
-      "w", "l", "n", iterations, scale, checkpointEvery)
+      "w", "l", "n", iterations)
   }
 
   /** The same fit from a PRE-AGGREGATED (winner, loser, count) table —
@@ -163,11 +163,8 @@ object Preference {
       winnerCol: String,
       loserCol: String,
       nCol: String,
-      iterations: Int = 5,
-      scale: Long = 1000000L,
-      checkpointEvery: Int = 3): DataFrame = {
+      iterations: Int = 5): DataFrame = {
     require(iterations >= 1 && iterations <= 50, "iterations in [1, 50]")
-    require(scale >= 1000L, "scale too small for meaningful fixed-point")
     val c = counts.select(
         col(winnerCol).cast("long").as("w"), col(loserCol).cast("long").as("l"),
         col(nCol).cast("long").as("cn"))
@@ -183,14 +180,14 @@ object Preference {
       .localCheckpoint()
     val nItems = items.count() // bounded driver scalar (the nlist precedent)
     require(nItems > 0, "empty pair table")
-    val sq = scale * scale
+    val sq = Scale * Scale
     val maxN = sym.agg(max(col("n")).as("m")).head().getLong(0)
     val maxW = items.agg(max(col("wins")).as("m")).head().getLong(0)
     require(maxN <= Long.MaxValue / sq && maxW <= Long.MaxValue / sq,
       s"fixed-point overflow: max pair count $maxN / max wins $maxW " +
-        s"exceed the 2^63/SCALE² envelope at scale=$scale")
-    var scores = items.select(col("item"), lit(scale).as("score"))
-    for (k <- 1 to iterations) {
+        s"exceed the 2^63/SCALE² envelope at SCALE=$Scale")
+    val init = items.select(col("item"), lit(Scale).as("score"))
+    val fit = Fixpoint.rounds(init, iterations) { (scores, _) =>
       val denom = sym
         .join(scores.select(col("item").as("i"), col("score").as("si")), Seq("i"))
         .join(scores.select(col("item").as("j"), col("score").as("sj")), Seq("j"))
@@ -199,13 +196,11 @@ object Preference {
       val raw = items.join(denom, col("item") === col("i"))
         .select(col("item"), expr(s"wins * ${sq}L div denom").as("raw"))
       val total = raw.agg(sum(col("raw")).as("total"))
-      scores = raw.crossJoin(total)
+      raw.crossJoin(total)
         .select(col("item"),
-          greatest(expr(s"raw * ${nItems * scale}L div total"), lit(1L)).as("score"))
-      if (k % checkpointEvery == 0 && k < iterations)
-        scores = scores.localCheckpoint()
+          greatest(expr(s"raw * ${nItems * Scale}L div total"), lit(1L)).as("score"))
     }
-    items.join(scores, Seq("item")).select("item", "wins", "score")
+    items.join(fit, Seq("item")).select("item", "wins", "score")
   }
 
   /** Reliability diagram for a fitted Bradley–Terry model (the q161
@@ -231,7 +226,6 @@ object Preference {
       winnerCol: String,
       loserCol: String,
       strengths: DataFrame,
-      scale: Long = 1000000L,
       buckets: Int = 10): DataFrame = {
     require(buckets >= 2 && buckets <= 1000, "buckets in [2, 1000]")
     val j = judgments.select(
@@ -245,17 +239,17 @@ object Preference {
         Seq("lo"))
       .join(broadcast(s.select(col("item").as("hi"), col("score").as("shi"))),
         Seq("hi"))
-      .select(col("lo_win"), expr(s"slo * ${scale}L div (slo + shi)").as("ppm"))
+      .select(col("lo_win"), expr(s"slo * ${Scale}L div (slo + shi)").as("ppm"))
     scored
-      .groupBy(expr(s"ppm * ${buckets}L div ${scale}L").as("bucket"))
+      .groupBy(expr(s"ppm * ${buckets}L div ${Scale}L").as("bucket"))
       .agg(count(lit(1)).as("n_judgments"),
         sum(col("lo_win")).as("lo_wins"),
         sum(col("ppm")).as("sum_ppm"))
       .select(col("bucket"), col("n_judgments"), col("lo_wins"),
         expr("lo_wins * 10000L div n_judgments").as("obs_bp"),
-        expr(s"sum_ppm * 10000L div (n_judgments * ${scale}L)").as("avg_pred_bp"),
+        expr(s"sum_ppm * 10000L div (n_judgments * ${Scale}L)").as("avg_pred_bp"),
         expr(s"abs(lo_wins * 10000L div n_judgments - " +
-          s"sum_ppm * 10000L div (n_judgments * ${scale}L))").as("gap_bp"))
+          s"sum_ppm * 10000L div (n_judgments * ${Scale}L))").as("gap_bp"))
       .orderBy("bucket")
   }
 

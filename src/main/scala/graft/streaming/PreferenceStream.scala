@@ -37,12 +37,7 @@ object PreferenceStream {
   /** Fit over everything ingested so far — equals the batch
     * [[graft.operators.Preference.bradleyTerryFixedPoint]] over the
     * union of all delivered judgments. */
-  def strengths(
-      spark: SparkSession,
-      storePath: String,
-      iterations: Int = 5,
-      scale: Long = 1000000L): DataFrame =
+  def strengths(spark: SparkSession, storePath: String): DataFrame =
     graft.operators.Preference.bradleyTerryFromCounts(
-      BatchStore.read(spark, storePath), "winner", "loser", "n",
-      iterations, scale)
+      BatchStore.read(spark, storePath), "winner", "loser", "n")
 }

@@ -94,6 +94,26 @@ class DriftOpsSpec extends SparkSpec {
       (1L, Some(5L), Some(0L)), (2L, Some(5L), Some(1L)), (9L, None, None)))
   }
 
+  test("labelProp: 3 rounds over a 20k-node graph start at most 18 jobs") {
+    // q139's shape: parquet-backed nodes, a checkpointed 5-out-edge list.
+    // 16 jobs observed; uncut, the third round re-derives the first two
+    // per read (28 jobs)
+    val n = 20000L
+    val dir = java.nio.file.Files.createTempDirectory("graft-labelprop").toString
+    spark.range(1, n + 1)
+      .select(col("id"), when(col("id") % 50 === 0, col("id") % 7).as("lab"))
+      .write.mode("overwrite").parquet(dir)
+    val nodes = spark.read.parquet(dir)
+    val edges = spark.range(1, n + 1)
+      .select(col("id").as("s"), explode(array((1 to 5).map(k =>
+        pmod(xxhash64(col("id"), lit(k)), lit(n)) + 1): _*)).as("d"))
+      .localCheckpoint()
+    val (got, jobs) = jobsStarted(LabelProp.propagate(nodes, edges,
+      "id", "lab", "s", "d", rounds = 3).collect())
+    assert(got.length == n)
+    assert(jobs <= 18, s"$jobs jobs")
+  }
+
   test("tvDrift: identical per-source distributions have zero drift") {
     // two sources with the SAME value multiset → every bin share equals
     // the pooled share → tv 0 for both

@@ -38,6 +38,14 @@ class PageRankSpec extends SparkSpec {
     assert(got(0L) > leaves.head)
   }
 
+  test("10 rounds over a 200-node graph start at most 39 jobs") {
+    val e = sym((1L to 200L).flatMap(i =>
+      Seq((i, i % 200 + 1), (i, i * 3 % 200 + 1))).filter(p => p._1 != p._2): _*)
+    val (got, jobs) = jobsStarted(run(e))
+    assert(got.size == 200)
+    assert(jobs <= 39, s"$jobs jobs") // 37 observed
+  }
+
   test("deterministic across independent runs and repartitionings") {
     val e = sym((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L))
     assert(run(e) == run(e.repartition(7)))

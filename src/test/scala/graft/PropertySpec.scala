@@ -4,9 +4,6 @@ import graft.functions.{TextLookup, UrlFunctions}
 import graft.operators.Windows
 import java.sql.Date
 import org.scalacheck.Gen
-import org.scalatest.concurrent.Eventually._
-import org.scalatest.time.{Seconds, Span}
-import scala.jdk.CollectionConverters._
 
 /** Property-based invariants (SURVEY §5 plan): URL-normalize idempotence +
   * hash stability, coalesce-chain monotonicity, gaps-and-islands
@@ -216,30 +213,8 @@ class PropertySpec extends SparkSpec {
   }
 
   test("connected components: a 400-node path converges within 20 jobs") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"cc-path-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.put(e.jobId, String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
-    }
-    val path = (1L until 400L).map(i => (i, i + 1))
-    sc.addSparkListener(listener)
-    val got = try {
-      sc.setJobGroup(group, "components of a 400-node path")
-      val got = try components(path) finally sc.clearJobGroup()
-      // listener events arrive in order: once the marker job is seen,
-      // every job of the components run has been seen
-      sc.setJobGroup(s"$group-marker", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      eventually(timeout(Span(30, Seconds))) {
-        assert(jobs.containsValue(s"$group-marker"))
-      }
-      got
-    } finally sc.removeSparkListener(listener)
+    val (got, n) = jobsStarted(components((1L until 400L).map(i => (i, i + 1))))
     assert(got.size == 400 && got.values.forall(_ == 1L))
-    val n = jobs.values.asScala.count(_ == group)
     assert(n <= 20, s"$n jobs for a 400-node path")
   }
 

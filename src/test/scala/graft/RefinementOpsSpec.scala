@@ -62,8 +62,8 @@ class RefinementOpsSpec extends SparkSpec {
 
   test("ppr: mass concentrates at the seed; symmetric non-seeds tie") {
     val e = sym((0L, 1L), (0L, 2L), (0L, 3L), (0L, 4L))
-    val got = PageRank.integerPersonalizedPageRank(e, "src", "dst",
-        Seq(1L).toDF("node")).as[(Long, Long)].collect().toMap
+    val got = PageRank.integerPageRank(e, "src", "dst",
+        seeds = Some(Seq(1L).toDF("node"))).as[(Long, Long)].collect().toMap
     assert(got(1L) > got(2L))
     assert(got(2L) == got(3L) && got(3L) == got(4L))
     assert(got(0L) > got(2L)) // the hub relays all seed mass
@@ -73,7 +73,7 @@ class RefinementOpsSpec extends SparkSpec {
   test("ppr: seeding every node reproduces global PageRank exactly") {
     val e = sym((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L))
     val all = e.select(col("src").as("node")).distinct()
-    val ppr = PageRank.integerPersonalizedPageRank(e, "src", "dst", all)
+    val ppr = PageRank.integerPageRank(e, "src", "dst", seeds = Some(all))
       .as[(Long, Long)].collect().toMap
     val pr = PageRank.integerPageRank(e, "src", "dst")
       .as[(Long, Long)].collect().toMap
@@ -83,7 +83,7 @@ class RefinementOpsSpec extends SparkSpec {
   test("ppr: seeds absent from the graph are rejected loudly") {
     val e = sym((1L, 2L))
     intercept[IllegalArgumentException] {
-      PageRank.integerPersonalizedPageRank(e, "src", "dst", Seq(99L).toDF("node"))
+      PageRank.integerPageRank(e, "src", "dst", seeds = Some(Seq(99L).toDF("node")))
     }
   }
 
